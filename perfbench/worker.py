@@ -519,7 +519,6 @@ def main() -> int:
         "failed": sum(o["name"] in bad or bool(o["error"]) for o in all_ops),
         "problems": {**bad, **errors},
         "passes": [(p["traced"], p["wall_s"]) for p in passes],
-        "ops": [(o["name"], o["wall_s"]) for o in all_ops],
     }
     if cfg["trace"]:
         first = passes[0]
