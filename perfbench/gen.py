@@ -9,9 +9,9 @@ are built once per (kind, size, seed) in a checkout.
 - ``write_tables``: the TPC-H-ish star schema plus ``events``,
   ``documents`` and ``embeddings`` that the query registry reads, with
   the column shapes and value domains of the engine's synthetic test
-  data (uniform keys, Poisson-ish lines per order, 5% near-duplicate
-  documents, unit-norm 64-d embeddings in 10 weak clusters); the seed
-  sets the row order.
+  data (uniform keys, four suppliers per part, Poisson-ish lines per
+  order, 5% near-duplicate documents, unit-norm 64-d embeddings in 10
+  weak clusters); the seed sets the row order.
 - ``write_tables_x10``: ten copies of one base set with per-copy key
   offsets, per-copy document tags and per-copy embedding reflections
   (the ``tools/scale_smoke.py`` construction), written as 32-file
@@ -137,6 +137,11 @@ def make_tables(sf: float, seed: int) -> dict[str, pa.Table]:
         return [f"{prefix}#{i:09d}" for i in range(n)]
 
     pk = keys(n_part)
+    # Each part is supplied by four suppliers, as in TPC-H's partsupp,
+    # so that a supplier's share of a part's volume stays near a quarter
+    # at every scale and the excess-share query has rows to check.
+    l_part = rng.integers(0, n_part, n_line)
+    l_supp = (l_part + rng.integers(0, 4, n_line) * (n_supp // 4 + l_part // n_supp)) % n_supp
     ev_ts = np.sort(
         np.datetime64("2024-01-01T00:00:00", "us")
         + rng.integers(0, 30 * 86_400_000_000, n_ev).astype("timedelta64[us]")
@@ -187,8 +192,8 @@ def make_tables(sf: float, seed: int) -> dict[str, pa.Table]:
         },
         "lineitem": {
             "l_orderkey": rng.integers(0, n_ord, n_line).astype(np.int64),
-            "l_partkey": rng.integers(0, n_part, n_line).astype(np.int64),
-            "l_suppkey": rng.integers(0, n_supp, n_line).astype(np.int64),
+            "l_partkey": l_part.astype(np.int64),
+            "l_suppkey": l_supp.astype(np.int64),
             "l_linenumber": rng.integers(1, 8, n_line).astype(np.int32),
             "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
             "l_extendedprice": _money(rng, n_line, 900.0, 105000.0),

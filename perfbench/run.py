@@ -120,7 +120,6 @@ def run_worker(cfg: dict, state: str) -> dict | None:
         os.environ,
         PYTHONPATH=os.pathsep.join([cfg["root"], HERE]),
         SPARK_GRAFT_CPUS=str(cfg["cores"]),
-        SPARK_GRAFT_DRIVER_MEM="3g",
         SPARK_LOCAL_DIRS=os.path.join(state, "spark-local"),
         # keep every temporary file, the JVM's included, in the checkout
         TMPDIR=tmp,

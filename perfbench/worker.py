@@ -18,9 +18,11 @@ in the traced pass time.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
+import pickle
 import statistics
 import sys
 import time
@@ -94,6 +96,7 @@ class QueryRunner:
         self.spark = spark
         self.registry = registry
         self.data_dir = cfg["data_dir"]
+        self.oracle_dir = cfg["oracle_dir"]
         self.names = cfg["queries"]
         self.first: dict[str, tuple[list[str], list[tuple], int]] = {}
         self.mismatch: dict[str, str] = {}
@@ -144,8 +147,6 @@ class QueryRunner:
         (tools/verify_local.py's multiset comparison)."""
         import importlib.util
 
-        import duckdb
-
         spec = importlib.util.spec_from_file_location(
             "verify_local", os.path.join(root, "tools", "verify_local.py")
         )
@@ -154,12 +155,6 @@ class QueryRunner:
         from ucl_data_pipeline_spark.plans import oracle_sqls
 
         oracles = oracle_sqls()
-        con = duckdb.connect()
-        for entry in sorted(os.listdir(self.data_dir)):
-            if entry.endswith(".parquet"):
-                p = os.path.join(self.data_dir, entry)
-                src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
-                con.execute(f"CREATE VIEW {entry[:-8]} AS SELECT * FROM '{src}'")
         bad = dict(self.mismatch)
         for name, (cols, rows, _) in self.first.items():
             if name in bad:
@@ -167,15 +162,39 @@ class QueryRunner:
             sql = oracles.get(name)
             if sql is None:  # no oracle (kmeans_clusters): row count only
                 continue
-            cur = con.execute(sql)
-            dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
+            dcols, drows = self.oracle(sql)
             if sorted(cols) != sorted(dcols):
                 bad[name] = f"columns {sorted(cols)} != oracle {sorted(dcols)}"
             elif vl._multiset(rows, cols, True) != vl._multiset(drows, dcols, True):
                 bad[name] = f"values differ from oracle ({len(rows)} vs {len(drows)} rows)"
-        con.close()
         return bad
+
+    def oracle(self, sql: str) -> tuple[list[str], list[tuple]]:
+        """The oracle's columns and rows on this run's inputs. The seed
+        only orders the rows of one fixed data set, so the result is
+        kept per data set (``oracle_dir``), SQL text and DuckDB version,
+        and computed once for all seeds."""
+        import duckdb
+
+        key = hashlib.sha256(f"{duckdb.__version__}\n{sql}".encode()).hexdigest()
+        path = os.path.join(self.oracle_dir, key[:24] + ".pickle")
+        if os.path.exists(path):
+            with open(path, "rb") as f:
+                return pickle.load(f)
+        con = duckdb.connect()
+        for entry in sorted(os.listdir(self.data_dir)):
+            if entry.endswith(".parquet"):
+                p = os.path.join(self.data_dir, entry)
+                src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+                con.execute(f"CREATE VIEW {entry[:-8]} AS SELECT * FROM '{src}'")
+        cur = con.execute(sql)
+        result = ([d[0] for d in cur.description], cur.fetchall())
+        con.close()
+        os.makedirs(self.oracle_dir, exist_ok=True)
+        with open(path + ".tmp", "wb") as f:
+            pickle.dump(result, f)
+        os.replace(path + ".tmp", path)
+        return result
 
 
 class EtlRunner:
