@@ -211,6 +211,8 @@ _REGISTRY_HELPER_FNS: tuple[str, ...] = (
     "bucket_offsets",
     "bucketed_running_sum",
     "bucketed_row_number",
+    "pdisc_rank",
+    "rank_select",
 )
 # Module-level constants those helpers READ (round-10 advisor): the
 # function-grain digest sees only the helpers' source text, so editing

@@ -25,6 +25,15 @@ def _optimized(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def registry_frames(spark, sf_dir):
+    """{name: frame} for every registered query, built once for the
+    registry-wide walkers below. They only read plans, and building a
+    frame (eager sketches and collects inside query functions
+    included) is most of a walker's cost."""
+    return {name: q.fn(spark, sf_dir) for name, q in REGISTRY.items()}
+
+
 def test_enrich_chain_broadcasts_all_dims(spark, sf_dir):
     plan = _plan(spark, sf_dir, "enrich_broadcast_join")
     assert plan.count("BroadcastHashJoin") == 3
@@ -49,21 +58,21 @@ def test_no_python_eval_outside_python_operators(spark, sf_dir):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
-def test_all_queries_free_of_plan_smells(spark, sf_dir):
+def test_all_queries_free_of_plan_smells(registry_frames):
     # Engine-wide invariants over every registered query's physical
     # plan: no cartesian products, and no Python evaluation anywhere
     # except the sanctioned multimodal Arrow stage. Catches regressions
     # the per-query tests don't cover.
     python_ok = {"multimodal_feature_extract", "multimodal_frame_sample"}
-    for name in REGISTRY:
-        plan = _plan(spark, sf_dir, name)
+    for name, df in registry_frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name
         if name not in python_ok:
             for smell in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
                 assert smell not in plan, (name, smell)
 
 
-def test_registered_outputs_atomic(spark, sf_dir):
+def test_registered_outputs_atomic(registry_frames):
     # Registry convention (plans/registry.py docstring): a registered
     # query's result schema contains only atomic columns — the driver
     # canonicalizes with pandas sort_values/factorize, which cannot
@@ -72,8 +81,7 @@ def test_registered_outputs_atomic(spark, sf_dir):
     # (concat_ws / to_json after array_sort) instead.
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    for name in REGISTRY:
-        df = REGISTRY[name].fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         complex_cols = [
             f.name
             for f in df.schema.fields
@@ -343,7 +351,7 @@ def test_mixture_fold_is_scalar_no_extra_shuffle(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
+def test_no_expensive_expr_inside_lambdas(registry_frames):
     # Catalyst has no CSE across higher-order-function lambda
     # boundaries: an outer expression referenced inside a transform/
     # filter/aggregate lambda is re-evaluated once per ELEMENT.
@@ -372,8 +380,8 @@ def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
             yield plan[m.end() : i - 1]
 
     offenders = []
-    for name in REGISTRY:
-        plan = _optimized(spark, sf_dir, name)
+    for name, df in registry_frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
         if any(expensive.search(b) for b in _lambda_bodies(plan)):
             offenders.append(name)
     assert not offenders, (
@@ -383,7 +391,7 @@ def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
     )
 
 
-def test_no_duplicated_fold_inside_lambdas(spark, sf_dir):
+def test_no_duplicated_fold_inside_lambdas(registry_frames):
     # The round-11 embedding_pq_topk defect class: the SAME expensive
     # fold subtree appearing twice inside one lambda body — e.g.
     # array_position(dists, array_min(dists)) where dists is an
@@ -418,8 +426,8 @@ def test_no_duplicated_fold_inside_lambdas(spark, sf_dir):
             yield body[m.start() : i]
 
     offenders = []
-    for name in REGISTRY:
-        plan = _optimized(spark, sf_dir, name)
+    for name, df in registry_frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
         for b in _bodies(plan):
             seen: dict[str, int] = {}
             for tok in ("aggregate(", "reduce("):
@@ -487,14 +495,11 @@ SINGLE_PARTITION_WINDOW_GRAINS = {
     "runs_test_daily_revenue": (1, "calendar day grain"),
     "share_of_parent_rollup": (1, "rollup group grain"),
     "sprt_sequential_test": (3, "calendar day grain (sequential walk)"),
-    # r13: both rank-selection queries share bucketed_rank_select
-    # (extras22); its ≤4096-row bucket-grain prefix-count window
-    # appears twice in the lazy plan (target-bucket locate + rank
-    # attach reference the same tiny subtree) — bounded by the bucket
-    # count at any data size.
-    "theil_sen_slope_daily": (2, "4096-bucket prefix counts, bucketed_rank_select"),
-    "quantile_sample_error": (2, "4096-bucket prefix counts, bucketed_rank_select"),
-    "range_partition_boundaries": (2, "4096-bucket prefix counts, bucketed_rank_select"),
+    # The rank-selection queries share registry.rank_select: one
+    # bucket-grain offsets window (≤1024 rows at any data size).
+    "theil_sen_slope_daily": (1, "bucket-grain offsets, rank_select"),
+    "quantile_sample_error": (1, "bucket-grain offsets, rank_select"),
+    "range_partition_boundaries": (1, "bucket-grain offsets, rank_select"),
     "unigram_neg_sampling_table": (1, "vocab grain"),
     "vocab_coverage": (1, "vocab grain"),
     "weekly_revenue_growth": (1, "calendar week grain"),
@@ -520,7 +525,7 @@ from ucl_data_pipeline_spark.plan_audit import (  # noqa: E402
 )
 
 
-def test_single_partition_windows_are_allowlisted(spark, sf_dir):
+def test_single_partition_windows_are_allowlisted(registry_frames):
     # The round-8 verdict's scale-killer class: a row_number/rank/
     # cumulative window over an unpartitioned Window whose input is a
     # fact/corpus table means ONE task sorts everything at 100 TB.
@@ -529,8 +534,7 @@ def test_single_partition_windows_are_allowlisted(spark, sf_dir):
     # fixed in round 9 — vsm/bm25/rocchio/mann_whitney/heaps/
     # saturation/decile_lift/monetary_unit) fails here.
     offenders = []
-    for name in REGISTRY:
-        df = REGISTRY[name].fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         n = _single_partition_windows(df)
         allowed = SINGLE_PARTITION_WINDOW_GRAINS.get(name, (0, ""))[0]
         if n > allowed:

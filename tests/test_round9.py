@@ -1,7 +1,9 @@
 """Round-9 consolidation tests: the bounded-grain global-rank
 machinery (registry.range_bucket / bucket_offsets /
-bucketed_row_number) against the single-partition spellings it
-replaces, and the bucket-first KS twin's substitution audit.
+bucketed_row_number / rank_select) against the single-partition
+spellings it replaces, and the bucket-first KS twin's substitution
+audit. A test pins an exact bucket count by setting the auto-size's
+floor and cap (_BUCKET_MIN / _BUCKET_MAX) to it.
 """
 
 from __future__ import annotations
@@ -10,15 +12,23 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.plans import REGISTRY
+from ucl_data_pipeline_spark.plans import registry as reg
 from ucl_data_pipeline_spark.plans.registry import (
     bucket_offsets,
     bucketed_row_number,
+    pdisc_rank,
     range_bucket,
+    rank_select,
 )
 from ucl_data_pipeline_spark.sources.io import read_table
 
 
-def test_bucketed_row_number_matches_global_window(spark, sf_dir):
+def _pin_buckets(monkeypatch, n: int) -> None:
+    monkeypatch.setattr(reg, "_BUCKET_MIN", n)
+    monkeypatch.setattr(reg, "_BUCKET_MAX", n)
+
+
+def test_bucketed_row_number_matches_global_window(spark, sf_dir, monkeypatch):
     # The bucketed spelling must be BIT-identical to the global-window
     # row_number it replaces, for any bucket count (including buckets
     # that end up empty at tiny SF).
@@ -33,12 +43,13 @@ def test_bucketed_row_number_matches_global_window(spark, sf_dir):
     # None = the round-10 auto-size path (max-resolution sketch +
     # count in one agg, subsampled split points).
     for n_buckets in (1, 4, 16, None):
-        got = {
-            r["o_orderkey"]: r["rk"]
-            for r in bucketed_row_number(
-                o, "o_orderkey", n_buckets=n_buckets
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            if n_buckets is not None:
+                _pin_buckets(m, n_buckets)
+            got = {
+                r["o_orderkey"]: r["rk"]
+                for r in bucketed_row_number(o, "o_orderkey").collect()
+            }
         assert got == want, f"n_buckets={n_buckets}"
 
 
@@ -46,11 +57,16 @@ def test_range_bucket_autosize_matches_fixed16_below_target(spark, sf_dir):
     # Below the 250k-row target the auto-size resolves to 16 buckets
     # AND its subsampled split points land on exactly the i/16
     # quantiles the fixed knob used — identical bucket assignment, so
-    # bench plans at test SFs are unchanged by the auto-size.
+    # bench plans at test SFs are unchanged by the auto-size. The fixed
+    # assignment is the count of i/16 split points below the key.
     o = read_table(spark, sf_dir, "orders").select("o_orderkey")
+    fracs = ", ".join(repr(i / 16) for i in range(1, 16))
+    bounds = o.agg(
+        F.expr(f"approx_percentile(o_orderkey, array({fracs}), 1000)")
+    ).collect()[0][0]
     fixed = {
-        r["o_orderkey"]: r["__bkt"]
-        for r in range_bucket(o, "o_orderkey", 16).collect()
+        r["o_orderkey"]: sum(r["o_orderkey"] > b for b in bounds)
+        for r in o.collect()
     }
     auto = {
         r["o_orderkey"]: r["__bkt"]
@@ -59,11 +75,12 @@ def test_range_bucket_autosize_matches_fixed16_below_target(spark, sf_dir):
     assert auto == fixed
 
 
-def test_range_bucket_is_monotone_in_key(spark, sf_dir):
+def test_range_bucket_is_monotone_in_key(spark, sf_dir, monkeypatch):
     c = read_table(spark, sf_dir, "customer").select(
         (-F.col("c_acctbal")).alias("neg")
     )
-    rows = range_bucket(c, "neg", 16).orderBy("neg").collect()
+    _pin_buckets(monkeypatch, 16)
+    rows = range_bucket(c, "neg").orderBy("neg").collect()
     bks = [r["__bkt"] for r in rows]
     assert bks == sorted(bks)
     # equal keys always share a bucket
@@ -74,9 +91,10 @@ def test_range_bucket_is_monotone_in_key(spark, sf_dir):
         seen[r["neg"]] = r["__bkt"]
 
 
-def test_bucket_offsets_exclusive_prefix(spark, sf_dir):
+def test_bucket_offsets_exclusive_prefix(spark, sf_dir, monkeypatch):
     o = read_table(spark, sf_dir, "orders").select("o_orderkey")
-    bucketed = range_bucket(o, "o_orderkey", 8)
+    _pin_buckets(monkeypatch, 8)
+    bucketed = range_bucket(o, "o_orderkey")
     per = {
         r["__bkt"]: r["cnt"]
         for r in bucketed.groupBy("__bkt")
@@ -89,6 +107,50 @@ def test_bucket_offsets_exclusive_prefix(spark, sf_dir):
     }
     for bkt, off in offs.items():
         assert off == sum(c for b, c in per.items() if b < bkt), bkt
+
+
+def test_rank_select_matches_percentile_disc_on_adversarial_shapes(spark):
+    # NULLs (which percentile_disc skips), one 1e18 outlier (which an
+    # equi-width histogram would stretch over every other value) and
+    # one hot value holding ~55% of the non-NULL rows. rank_select must
+    # return Spark's own percentile_disc for every q — also on an empty
+    # and an all-NULL input, where percentile_disc is NULL and no rank
+    # is selected — and no range bucket the walk sorts may hold more
+    # than twice its share of value-grain cells.
+    ids = spark.range(2000)
+    adv = ids.select(
+        F.when(F.col("id") % 10 == 0, F.lit(None).cast("double"))
+        .when(F.col("id") % 2 == 1, F.lit(7.0))
+        .otherwise(F.col("id").cast("double"))
+        .alias("v")
+    ).unionByName(spark.range(1).select(F.lit(1e18).alias("v")))
+    qs = (0.1, 0.5, 0.9)
+    ranks = spark.createDataFrame([(q,) for q in qs], "q double")
+
+    def check(frame):
+        want = frame.agg(
+            *[
+                F.expr(f"percentile_disc({q}) WITHIN GROUP (ORDER BY v)")
+                for q in qs
+            ]
+        ).collect()[0]
+        got = {
+            r["q"]: r["v"]
+            for r in rank_select(frame, "v", ranks, pdisc_rank(F.col("q"))).collect()
+        }
+        assert [got.get(q) for q in qs] == list(want), (got, want)
+
+    check(adv)
+    check(adv.limit(0))
+    check(ids.select(F.lit(None).cast("double").alias("v")))
+
+    cells = adv.filter(F.col("v").isNotNull()).groupBy("v").count()
+    n_cells = cells.count()
+    per_bucket = [
+        r["count"]
+        for r in range_bucket(cells, "v").groupBy("__bkt").count().collect()
+    ]
+    assert max(per_bucket) <= 2 * -(-n_cells // 16), (n_cells, per_bucket)
 
 
 def test_decile_formula_matches_spark_ntile(spark, sf_dir):

@@ -141,9 +141,9 @@ SHOWCASE = [
      "signals (tokens+quality+fingerprint+5-grams together), digest "
      "semi-join contamination bounded by the benchmark side, "
      "fingerprint-grain dedup agg, pack window over kept docs only"),
-    ("theil_sen_slope_daily", "rank-k by distributed selection: one "
-     "cached calendar-bounded pair set, 4096-bucket histogram walk to "
-     "the target bucket, sort ONLY that bucket — no global sort"),
+    ("theil_sen_slope_daily", "rank-k by distributed selection: "
+     "calendar-bounded pair set collapsed to the value grain, range-"
+     "bucketed running count to the target cell — no global sort"),
     ("source_jsd_matrix", "intersection-only JSD: one (source, "
      "term-digest) counting shuffle, exclusive mass recovered "
      "arithmetically from exact integer sums — no full-outer join"),

@@ -1,7 +1,8 @@
-"""Dump .explain("formatted") for named queries into plans/r12/.
+"""Dump .explain("formatted") for named queries into a directory.
 
-Usage: python tools/r12_explain.py <suffix> <query> [<query> ...]
-  suffix: "before" or "after" (file becomes plans/r12/<query>_<suffix>.txt)
+Usage: python tools/explain_formatted.py <out_dir> <suffix> <query> [<query> ...]
+  out_dir: where the plans go, e.g. plans/r13 (created if missing)
+  suffix:  e.g. "before" or "after" (file becomes <out_dir>/<query>_<suffix>.txt)
 
 Runs at the bench SF (sf0.1 by default, override SPARK_GRAFT_SF_DIR) so
 the plan shapes match what the bench measures. Initial (pre-execution)
@@ -19,17 +20,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from ucl_data_pipeline_spark import get_spark
 from ucl_data_pipeline_spark.plans import REGISTRY
 
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"
-)
-
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("r12-explain")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("explain-formatted")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = REGISTRY[name].fn(spark, sf_dir)
@@ -38,7 +34,7 @@ def main() -> None:
                 "formatted"
             )
         )
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} bytes)")

@@ -56,11 +56,6 @@ def enrich_dont_clobber(
     if broadcast:
         d = F.broadcast(d)
     joined = fact.join(d, on, "left")
-    out_cols: list = []
-    for c in joined.columns:
-        if c.startswith("__dim_"):
-            continue
-        out_cols.append(F.col(c))
     result = joined
     for col, default in values.items():
         sources = []

@@ -133,9 +133,7 @@ def enrich_matches(
     df = fact
     # J1: team priors for each role
     for role in ("home", "away"):
-        dim = prefix_columns(teams, f"{role}_").withColumnRenamed(
-            f"{role}_team", f"{role}_team"
-        )
+        dim = prefix_columns(teams, f"{role}_")
         df = enrich_dont_clobber(
             df,
             dim,

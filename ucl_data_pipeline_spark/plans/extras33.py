@@ -32,9 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.extras22 import bucketed_rank_select
 from ucl_data_pipeline_spark.plans.extras31 import _h48, _sql_h48
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import pdisc_rank, rank_select, register
 from ucl_data_pipeline_spark.sources.io import read_table
 
 _SAMPLE_K = 1024
@@ -141,27 +140,19 @@ def quantile_sample_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("z")
     ).select("z.quantile", "z.sample_value")
-    # EXACT side (r13, guide §5): the array percentile_disc still
-    # buffered EVERY l_extendedprice in one ObjectHashAggregate task —
-    # the whole table's values in one task's memory, the exact shape
-    # distributed selection exists to avoid. Replaced with the shared
-    # bucketed_rank_select (theil_sen's bucket walk): 3 bounded passes,
-    # no full-table buffer, per-task state ≤ one bucket. The rank rule
-    # is percentile_disc's own cume_dist definition — the smallest k
-    # with k/n ≥ q, evaluated in the same IEEE double comparisons both
-    # engines use — so the selected value is bit-identical to the old
-    # aggregate (verified oracle-exact at sf0.001/0.01/0.1).
+    # EXACT side: the distributed rank walk (registry.rank_select) —
+    # no full-table value buffer in one task, per-task state ≤ one
+    # bucket of value-grain cells — under percentile_disc's own rank
+    # rule (registry.pdisc_rank), so the value is bit-identical to the
+    # aggregate's.
     qs = spark.range(1).select(
         F.explode(F.array(*[F.lit(float(q)) for q in _QS])).alias("quantile")
     )
-    k0 = F.floor(F.col("quantile") * F.col("__n")).cast("long")
-    kk = F.when(
-        (k0 >= 1)
-        & ((k0.cast("double") / F.col("__n").cast("double")) >= F.col("quantile")),
-        k0,
-    ).otherwise(k0 + 1)
-    e = bucketed_rank_select(
-        li.select(F.col("l_extendedprice").alias("ev")), "ev", qs, kk
+    e = rank_select(
+        li.select(F.col("l_extendedprice").alias("ev")),
+        "ev",
+        qs,
+        pdisc_rank(F.col("quantile")),
     ).select("quantile", F.col("ev").cast("double").alias("exact_value"))
     return (
         e.join(F.broadcast(s), "quantile")

@@ -1355,8 +1355,10 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs re-scanned documents and re-ran the text-grain groupBy that
     ``_rep_features`` had already computed for the LSH side. Both
     caches are released as soon as the pair set is checkpointed
-    (lineage truncated), so CC queries no longer leak cache entries
-    for the session."""
+    (lineage truncated), so the CC queries built on this edge set
+    leave no cache entries behind. ``split_leakage_audit`` shares
+    ``_rep_frames`` without this checkpoint and still leaves its
+    persisted ``feats`` frame cached."""
     rep, feats, exact = _rep_frames(spark, sf_dir)
     feats = feats.persist()
     near = dedup_minhash_lsh(spark, sf_dir, feats=feats).select(

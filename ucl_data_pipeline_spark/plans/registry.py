@@ -97,7 +97,7 @@ def register(
 #       lsh_candidate_pairs feed dedup_minhash_pr too), the
 #       connected-components family's right-sized edge-set partitions
 #       + shared exact-dup collapse (llm_ops._rep_frames, also
-#       split_leakage_audit), and the bucketed_rank_select extraction
+#       split_leakage_audit), and the shared rank-selection helper
 #       (quantile_sample_error's distributed exact side,
 #       theil_sen_slope_daily and range_partition_boundaries
 #       refactored onto the same helper);
@@ -283,18 +283,18 @@ def sql_knuth_bucket(expr: str, m: int) -> str:
 # spark_partition_id() tricks).
 
 
-# Auto-sizing targets for range_bucket(n_buckets=None): one bucket's
-# rows are sorted by ONE task, so the target is "a comfortable single-
-# task sort" (~quarter-million rows ≈ tens of MB); the floor keeps
-# small inputs at the historical 16 (bit-identical plans at bench
-# SFs), and the cap bounds the collected split-point literals and the
-# per-row assignment fold. Beyond the cap (~268M rows at the default
+# Auto-sizing targets for range_bucket: one bucket's rows are sorted by
+# ONE task, so the target is "a comfortable single-task sort"
+# (~quarter-million rows ≈ tens of MB); the floor keeps small inputs at
+# 16 buckets, and the cap bounds the collected split-point literals and
+# the per-row assignment fold. Beyond the cap (~268M rows at the default
 # target) the literal-fold spelling stops being the right tool and
 # _range_bucket_shuffled (repartitionByRange + spark_partition_id,
 # below) takes over — at that scale the sort key census itself is
 # cluster work. The fallback is EXECUTABLE and gated
 # (tests/test_round11.py forces the cap on a small frame and asserts
 # bit-identical running sums / row numbers against the literal path).
+# Tests pin an exact bucket count by setting _BUCKET_MIN = _BUCKET_MAX.
 _BUCKET_TARGET_ROWS = 250_000
 _BUCKET_MIN = 16
 _BUCKET_MAX = 1024
@@ -303,8 +303,7 @@ _BUCKET_MAX = 1024
 def _range_bucket_shuffled(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
     """Beyond-cap ``__bkt`` assignment: ``repartitionByRange(n, key)``
     + ``spark_partition_id()`` instead of collected split-point
-    literals (round-10 verdict task 5 — the docstring promise made
-    executable).
+    literals.
 
     Same bit-identical-results argument as the literal fold: the
     RangePartitioner's boundaries are ascending and assignment is a
@@ -334,87 +333,60 @@ def _range_bucket_shuffled(df: DataFrame, key: str, n_buckets: int) -> DataFrame
     )
 
 
-def range_bucket(
-    df: DataFrame, key: str, n_buckets: int | None = None
-) -> DataFrame:
-    """Attach ``__bkt`` (0..n_buckets-1, monotone non-decreasing in
-    ``key``) from approx_percentile split points of ``key``.
+def range_bucket(df: DataFrame, key: str) -> DataFrame:
+    """Attach ``__bkt`` (0..n-1, monotone non-decreasing in ``key``)
+    from approx_percentile split points of ``key``.
 
     ``key`` must be an ascending-sortable atomic column. For a DESC
     order, pass a negated copy of the column.
 
-    ``n_buckets=None`` (the default) auto-sizes to
-    max(16, ceil(rows / 250k)); past 1024 required buckets the
-    literal-fold spelling hands off to ``_range_bucket_shuffled``
-    (repartitionByRange, no collected literals, same results —
-    gated bit-identical by tests/test_round11.py). Below the cap the
-    sizing is — per the round-9 verdict's
-    fixed-knob debt: a constant 16 means 16 tasks each sorting
-    rows/16, which at a ×100 scale-up is a 1M-row single-task sort
-    per bucket (measured ×100 ratio 9.04 on monetary_unit_sample).
-    Sizing ∝ rows keeps per-bucket work flat. No extra counting pass:
-    the auto-size path always sketches at the MAX resolution (1023
-    quantiles — same sketch buffer, same single pass as 15) with
-    count(*) in the SAME agg, then SUBSAMPLES every (j·1024/n)-th
-    split point, so rows are scanned once either way; at n=16 the
-    subsample lands on exactly the i/16 quantiles the fixed knob
-    used. Split-point PLACEMENT — and therefore the bucket COUNT —
-    only affects balance, never results (ranks/offsets are computed
-    from actual bucket contents), so the auto-size cannot change any
-    query's output.
+    The bucket count n is max(16, ceil(rows / 250k)), so per-bucket
+    sort work stays flat as rows grow (a fixed 16 meant a 1M-row
+    single-task sort per bucket at ×100 — measured ×100 ratio 9.04 on
+    monetary_unit_sample); past 1024 required buckets the literal-fold
+    spelling hands off to ``_range_bucket_shuffled``. No extra counting
+    pass: ONE agg sketches at the max resolution (1023 quantiles) with
+    count(*) alongside, then keeps every (j·1024/n)-th split point — at
+    n=16 exactly the i/16 quantiles. Split-point PLACEMENT — and
+    therefore the bucket COUNT — only affects balance, never results
+    (ranks/offsets are computed from actual bucket contents).
 
     The split points come from ONE approx_percentile sketch (never N
     scalar percentile_disc aggs — each of those buffers the full
     column, the engine's documented percentile-buffer trap) and are
-    COLLECTED to literals: a bounded ≤n_buckets-value driver fetch
-    (the PQ-codebook-to-literal precedent, llm_ops4.py) that makes
-    bucket assignment a pure literal fold — whole-stage-codegen row
-    math, zero joins, and trivially consistent when the bucketed
-    frame is lazily recomputed across plan branches.
+    COLLECTED to literals: a bounded ≤1023-value collect (the
+    PQ-codebook-to-literal precedent, llm_ops4.py) that makes bucket
+    assignment a pure literal fold — whole-stage-codegen row math,
+    zero joins, and trivially consistent when the bucketed frame is
+    lazily recomputed across plan branches.
     """
     # Sketch accuracy 1000 (was 10000): placement error per split is
     # ~0.1% of rank — pure balance noise against 250k-row buckets —
     # and the sketch pass is 2.5-5x cheaper (measured 2.3-5.1s -> 0.9s
     # on a 15M-row column). Placement never affects results.
-    if n_buckets is None:
-        fracs = [i / _BUCKET_MAX for i in range(1, _BUCKET_MAX)]
-        row = df.agg(
-            F.expr(
-                f"approx_percentile({key},"
-                f" array({', '.join(map(repr, fracs))}), 1000)"
-            ).alias("__bounds"),
-            F.count(F.lit(1)).alias("__n"),
-        ).collect()[0]
-        all_bounds = row["__bounds"] or []
-        need = -(-(row["__n"]) // _BUCKET_TARGET_ROWS)
-        if need > _BUCKET_MAX:
-            # Beyond the literal cap: hand off to the shuffled
-            # assignment (no collected literals, same results — see
-            # _range_bucket_shuffled). The sketch that rode this scan
-            # is discarded here — an accepted trade-off (round-11
-            # advisor note): splitting count(*) into its own pass
-            # would charge EVERY under-cap caller (the overwhelmingly
-            # common case) a second scan to save beyond-cap callers
-            # one sketch buffer that is already amortized into the
-            # same single pass as the count. The discarded work is
-            # one ~8KB-per-partition quantile sketch, not a second
-            # scan.
-            return _range_bucket_shuffled(df, key, need)
-        n_buckets = max(_BUCKET_MIN, min(_BUCKET_MAX, need))
-        bounds = [
-            all_bounds[round(j * _BUCKET_MAX / n_buckets) - 1]
-            for j in range(1, n_buckets)
-            if all_bounds
-        ]
-    else:
-        fracs = [i / n_buckets for i in range(1, n_buckets)]
-        row = df.agg(
-            F.expr(
-                f"approx_percentile({key},"
-                f" array({', '.join(map(repr, fracs))}), 1000)"
-            ).alias("__bounds")
-        ).collect()[0]
-        bounds = row["__bounds"] or []
+    fracs = [i / _BUCKET_MAX for i in range(1, _BUCKET_MAX)]
+    row = df.agg(
+        F.expr(
+            f"approx_percentile({key},"
+            f" array({', '.join(map(repr, fracs))}), 1000)"
+        ).alias("__bounds"),
+        F.count(F.lit(1)).alias("__n"),
+    ).collect()[0]
+    all_bounds = row["__bounds"] or []
+    need = -(-(row["__n"]) // _BUCKET_TARGET_ROWS)
+    if need > _BUCKET_MAX:
+        # Beyond the literal cap: hand off to the shuffled assignment
+        # (no collected literals, same results). The sketch that rode
+        # this scan is discarded — splitting count(*) into its own pass
+        # would charge EVERY under-cap caller a second scan to save
+        # beyond-cap callers one ~8KB-per-partition sketch buffer.
+        return _range_bucket_shuffled(df, key, need)
+    n_buckets = max(_BUCKET_MIN, min(_BUCKET_MAX, need))
+    bounds = [
+        all_bounds[round(j * _BUCKET_MAX / n_buckets) - 1]
+        for j in range(1, n_buckets)
+        if all_bounds
+    ]
     return df.withColumn("__bkt", _bucket_search(key, bounds))
 
 
@@ -440,32 +412,27 @@ def _bucket_search(key: str, bounds: list) -> Column:
     return rec(0, len(bounds))
 
 
-def bucket_offsets(bucketed: DataFrame, val: Column, out: str = "__off") -> DataFrame:
-    """Exclusive prefix totals of ``val`` per ``__bkt``: (__bkt, out)
-    with out = Σ val over all LOWER buckets. The cumulative window runs
-    on the bucket grain (n_buckets rows) — broadcast the result back.
+def bucket_offsets(bucketed: DataFrame, val: Column) -> DataFrame:
+    """Per-``__bkt`` totals and exclusive prefix totals of ``val``:
+    (__bkt, __sub, __off) with __sub = Σ val in the bucket and __off =
+    Σ val over all LOWER buckets. The cumulative window runs on the
+    bucket grain (≤1024 rows) — broadcast the result back.
     """
     subs = bucketed.groupBy("__bkt").agg(F.sum(val).alias("__sub"))
     w_off = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
     return subs.select(
         "__bkt",
-        F.coalesce(F.sum("__sub").over(w_off), F.lit(0)).alias(out),
+        "__sub",
+        F.coalesce(F.sum("__sub").over(w_off), F.lit(0)).alias("__off"),
     )
 
 
 def bucketed_running_sum(
-    df: DataFrame,
-    key: str,
-    order_cols: list[str],
-    val: Column,
-    out: str = "cum",
-    n_buckets: int | None = None,
+    df: DataFrame, key: str, order_cols: list[str], val: Column, out: str = "cum"
 ) -> tuple[DataFrame, DataFrame]:
     """Exact global ``SUM(val) OVER (ORDER BY order_cols ROWS BETWEEN
     UNBOUNDED PRECEDING AND CURRENT ROW)`` without a single-partition
-    sort — the shared spelling of the range-bucketed cumulative walk
-    (previously inlined separately by abc_classification,
-    monetary_unit_sample and decile_lift_table).
+    sort — the shared spelling of the range-bucketed cumulative walk.
 
     ``order_cols[0]`` must be ``key`` (the range-bucket key), so the
     bucket id is monotone in the global order; later order_cols are
@@ -480,44 +447,89 @@ def bucketed_running_sum(
     ``out``; ``subtotals`` is the per-bucket ``(__bkt, __sub)`` frame
     the offsets were derived from, so callers needing the grand total
     can aggregate it (exact addition ≡ a direct SUM over df) without
-    a second full scan — the monetary_unit_sample convention.
+    a second full scan.
     """
-    bucketed = range_bucket(df, key, n_buckets)
+    bucketed = range_bucket(df, key)
+    offs = bucket_offsets(bucketed, val)
     w_loc = (
         Window.partitionBy("__bkt")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    subs = bucketed.groupBy("__bkt").agg(F.sum(val).alias("__sub"))
-    w_off = Window.orderBy("__bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = subs.select(
-        "__bkt",
-        F.coalesce(F.sum("__sub").over(w_off), F.lit(0)).alias("__off"),
-    )
     frame = (
         bucketed.withColumn("__lcum", F.sum(val).over(w_loc))
         .join(F.broadcast(offs), "__bkt")
         .withColumn(out, F.col("__lcum") + F.col("__off"))
-        .drop("__bkt", "__lcum", "__off")
+        .drop("__bkt", "__sub", "__lcum", "__off")
     )
-    return frame, subs
+    return frame, offs.drop("__off")
 
 
-def bucketed_row_number(
-    df: DataFrame, key: str, out: str = "rk", n_buckets: int | None = None
-) -> DataFrame:
+def bucketed_row_number(df: DataFrame, key: str, out: str = "rk") -> DataFrame:
     """Exact global ROW_NUMBER() OVER (ORDER BY key) — ``key`` must be
-    UNIQUE (no tie-break column) — as bucket-local row_numbers plus
-    bucket row-count offsets. Returns df's columns + ``out`` (long).
+    UNIQUE (no tie-break column) — as the bucketed running count
+    (``val=F.lit(1)``). Returns df's columns + ``out`` (long).
     """
-    bucketed = range_bucket(df, key, n_buckets)
-    w_loc = Window.partitionBy("__bkt").orderBy(key)
-    offs = bucket_offsets(bucketed, F.lit(1), "__off")
-    return (
-        bucketed.withColumn("__lrk", F.row_number().over(w_loc))
-        .join(F.broadcast(offs), "__bkt")
-        .withColumn(out, (F.col("__lrk") + F.col("__off")).cast("long"))
-        .drop("__bkt", "__lrk", "__off")
+    frame, _ = bucketed_running_sum(df, key, [key], F.lit(1), out)
+    return frame.withColumn(out, F.col(out).cast("long"))
+
+
+def pdisc_rank(q: Column) -> Column:
+    """percentile_disc's 1-based rank for fraction ``q`` over ``__n``
+    values: its cume_dist definition, the smallest k with k/n ≥ q,
+    evaluated in the IEEE double comparisons both engines use — so the
+    value ``rank_select`` picks is bit-identical to the aggregate's."""
+    k0 = F.floor(q * F.col("__n")).cast("long")
+    return F.when(
+        (k0 >= 1) & ((k0.cast("double") / F.col("__n").cast("double")) >= q),
+        k0,
+    ).otherwise(k0 + 1)
+
+
+def rank_select(
+    vals: DataFrame, col: str, ranks: DataFrame, kk: Column
+) -> DataFrame:
+    """Distributed multi-rank selection: the kk-th smallest non-NULL
+    ``col`` for every row of the small ``ranks`` frame, WITHOUT a global
+    sort and WITHOUT a single-task value buffer (the ObjectHashAggregate
+    a scalar ``percentile_disc`` pays).
+
+    NULLs are dropped (percentile_disc's rule) and rows collapse to the
+    value grain, ``__c`` rows per distinct value — a hot value is one
+    cell after the partial aggregate. The cells' running count is
+    ``bucketed_running_sum``, whose buckets are placed by RANK, so an
+    outlier cannot stretch one bucket over the rest. Rank kk is the cell
+    with cum − c < kk ≤ cum: one interval join against the broadcast
+    targets. ``__n`` is the sum of the walk's bucket subtotals.
+
+    vals:  frame holding an ascending-sortable column ``col``.
+    ranks: SMALL frame (broadcast everywhere), one row per wanted rank;
+           no column name may start with ``__``.
+    kk:    Column over ranks' columns plus ``__n`` (the non-NULL value
+           count), evaluating to the 1-based target rank.
+    Returns ranks' columns + ``__n`` + ``col``, one row per rank in
+    1..__n — none on an empty input, where percentile_disc is NULL.
+    """
+    assert not any(c.startswith("__") for c in ranks.columns), ranks.columns
+    # NULLs are dropped AFTER the grouping: count(col) is 0 for the NULL
+    # group. A filter on ``col`` before it would be pushed into the
+    # caller's plan (into a join condition, say), where under ANSI it can
+    # evaluate ``col``'s expression on rows the join rejects.
+    cells = (
+        vals.groupBy(col)
+        .agg(F.count(col).alias("__c"))
+        .filter(F.col("__c") > 0)
     )
+    walked, subs = bucketed_running_sum(
+        cells, col, [col], F.col("__c"), out="__cum"
+    )
+    targets = (
+        subs.agg(F.sum("__sub").alias("__n"))
+        .crossJoin(F.broadcast(ranks))
+        .withColumn("__kk", kk.cast("long"))
+    )
+    return walked.join(
+        F.broadcast(targets),
+        (F.col("__cum") - F.col("__c") < F.col("__kk"))
+        & (F.col("__kk") <= F.col("__cum")),
+    ).select(*ranks.columns, "__n", col)
