@@ -213,6 +213,11 @@ _REGISTRY_HELPER_FNS: tuple[str, ...] = (
     "bucketed_row_number",
     "pdisc_rank",
     "rank_select",
+    "fold_steps",
+    "gather_graph",
+    "fold_graph",
+    "edge_terms",
+    "array_dsum",
 )
 # Module-level constants those helpers READ (round-10 advisor): the
 # function-grain digest sees only the helpers' source text, so editing
@@ -224,6 +229,7 @@ _REGISTRY_HELPER_CONSTS: tuple[str, ...] = (
     "_BUCKET_TARGET_ROWS",
     "_BUCKET_MIN",
     "_BUCKET_MAX",
+    "FOLD_DEC",
 )
 _MODULE_DIGEST_CACHE: dict[str, str] = {}
 

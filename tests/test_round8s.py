@@ -114,3 +114,137 @@ def test_markov_absorption_matches_matrix_power(spark):
     # the absorbing state is pinned at 1 for every horizon
     assert got[_ABS_TARGET].p_absorb_2 == 1.0
     assert got[_ABS_TARGET].p_absorb_8 == 1.0
+
+
+def _absorb_loop(trans, states, target, k):
+    """The explicit superstep spelling: join + group-by + left join back
+    onto the states, once per step. Returns [{state: a_i}] for i in 0..k."""
+    from pyspark.sql import functions as F
+
+    a = states.select(
+        "s", F.when(F.col("s") == target, 1.0).otherwise(0.0).alias("a")
+    )
+    out = [{r.s: r.a for r in a.collect()}]
+    for _ in range(k):
+        step = (
+            trans.join(a, a["s"] == trans["dst"])
+            .select(
+                F.col("src").alias("cs"),
+                F.round(F.col("p") * F.col("a"), 12).alias("term"),
+            )
+            .groupBy("cs")
+            .agg(F.sum(F.col("term").cast("decimal(38,12)")).cast("double").alias("v"))
+        )
+        a = states.join(step, states["s"] == step["cs"], "left").select(
+            "s",
+            F.when(F.col("s") == target, 1.0)
+            .otherwise(F.round(F.coalesce("v", F.lit(0.0)), 12))
+            .alias("a"),
+        )
+        out.append({r.s: r.a for r in a.collect()})
+    return out
+
+
+def _absorb_fold(trans, states, target, k):
+    """The same supersteps as one fold over the gathered matrix."""
+    from pyspark.sql import functions as F
+
+    from ucl_data_pipeline_spark.plans.registry import (
+        array_dsum,
+        edge_terms,
+        fold_graph,
+        gather_graph,
+    )
+
+    def step(a, es):
+        return F.transform("ns", lambda s, i: F.when(s == target, 1.0).otherwise(
+            F.round(F.coalesce(array_dsum(edge_terms(es, i, "s", lambda e: F.round(
+                e["p"] * F.element_at(a, e["d"]), 12))).cast("double"), F.lit(0.0)), 12)
+        ))
+
+    a0 = F.transform("ns", lambda s: F.when(s == target, 1.0).otherwise(0.0))
+    row = gather_graph(trans, states).select("ns", fold_graph(a0, step, k).alias("h"))
+    row = row.collect()[0]
+    return [dict(zip(row.ns, x)) for x in row.h]
+
+
+def test_fold_steps_matches_explicit_supersteps(spark):
+    # The hand-built matrix has a dst that is never a src nor a state
+    # ('x'), a state with no out-edges ('c'), a self-loop, and
+    # probabilities whose products need the ROUND-12 + exact decimal sum.
+    from pyspark.sql import functions as F
+
+    edges = [
+        ("a", "b", 0.1), ("a", "t", 0.2), ("a", "a", 0.7),
+        ("b", "a", 1 / 3), ("b", "x", 2 / 3),
+        ("t", "t", 1.0), ("b", "c", 0.0),
+    ]
+    schema = "src string, dst string, p double"
+    trans = spark.createDataFrame(edges, schema)
+    empty = spark.createDataFrame([], schema)
+    nodes = spark.createDataFrame([(s,) for s in "abct"], "s string")
+    no_nodes = spark.createDataFrame([], "s string")
+    cases = [
+        (trans, nodes, "t"),
+        (trans, nodes, "z"),  # absorbing target absent
+        (trans, trans.select(F.col("src").alias("s")).distinct(), "t"),
+        (empty, nodes, "t"),  # empty matrix
+        (empty, no_nodes, "t"),
+    ]
+    for tr, st, target in cases:
+        want = _absorb_loop(tr, st, target, 5)
+        got = _absorb_fold(tr, st, target, 5)
+        assert got == want, (target, got, want)
+    # the absent target absorbs nothing; 'c' (no out-edges) stays 0
+    got = _absorb_fold(trans, nodes, "z", 3)
+    assert all(v == 0.0 for x in got for v in x.values())
+
+
+def test_array_dsum_is_sql_sum(spark):
+    from pyspark.sql import functions as F
+
+    from ucl_data_pipeline_spark.plans.registry import array_dsum
+
+    vals = [0.1, 0.2, 0.3, 123456.789012345678, 1e-12, None]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, v double")
+    want = df.agg(F.sum(F.col("v").cast("decimal(38,12)")).cast("double")).first()[0]
+    got = df.agg(F.collect_list("v").alias("a")).select(
+        array_dsum(F.col("a")).cast("double"),
+        array_dsum(F.array().cast("array<double>")),
+        array_dsum(F.array(F.lit(None).cast("double"))),
+    ).first()
+    assert got[0] == want
+    assert got[1] is None and got[2] is None  # SQL SUM of no values
+
+
+FOLDED_QUERIES = (
+    "markov_absorption_funnel",
+    "markov_stationary_events",
+    "pagerank_trade_network",
+    "pagerank_residual_audit",
+    "bfs_reach_hops",
+    "cheapest_route_nations",
+    "hits_hub_authority",
+)
+
+
+def test_folded_queries_build_without_jobs_or_persists(spark):
+    # Building a folded query's frame runs no Spark action: the only jobs
+    # are the parquet schema reads of read_table (one per table), and it
+    # leaves no persisted RDD behind.
+    from ucl_data_pipeline_spark.plans import REGISTRY
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    for name in FOLDED_QUERIES:
+        jobs = set(tracker.getJobIdsForGroup())
+        persisted = sc._jsc.getPersistentRDDs().size()
+        REGISTRY[name].fn(spark, SF_DIR)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        names = [
+            store.job(int(j)).name()
+            for j in set(tracker.getJobIdsForGroup()) - jobs
+        ]
+        assert all(n.startswith("parquet at ") for n in names), (name, names)
+        assert sc._jsc.getPersistentRDDs().size() == persisted, name

@@ -45,8 +45,8 @@ SHOWCASE = [
      "list, quantized scan inside it, exact re-rank on the shortlist"),
     ("embedding_pq_topk", "IVF+PQ: codebook enters as one literal, per-"
      "subspace argmin encode scan-side, probed-list candidates only"),
-    ("bfs_reach_hops", "4 BFS supersteps as ONE lazy plan: join+min-agg+left "
-     "join per step, no driver round-trips"),
+    ("bfs_reach_hops", "4 BFS supersteps as ONE fold_steps column over the "
+     "gathered nation edge list — no per-step join or Spark action"),
     ("kmeans_assign", "Lloyd step: centers are literals in a narrow "
      "projection — assignment needs NO join and NO shuffle"),
     ("doc_chunk_windows", "context-window chunking: scan-side explode, zero "
@@ -107,9 +107,9 @@ SHOWCASE = [
     ("zorder_layout_stats", "Morton key is a scan-side bit projection; "
      "stats roll up in one hash-agg — the manifest pass of a z-ordered "
      "write"),
-    ("cheapest_route_nations", "integer min-plus relaxations join "
-     "broadcast node state against persisted edges — no SortMergeJoin in "
-     "the supersteps"),
+    ("cheapest_route_nations", "integer min-plus relaxations as one "
+     "fold_steps column over the gathered ≤625-lane edge list — the "
+     "supersteps add no join, shuffle or job"),
     ("jaccard_prefix_filter_pairs", "ppjoin: rarest-prefix inverted index "
      "+ length/positional pruning; verification touches only surviving "
      "candidate pairs"),
@@ -186,10 +186,9 @@ SHOWCASE = [
      "window rank over (group, digest); both sampled cuts (median, "
      "then MAD) run over k-bounded buffers — the substitution that "
      "replaces robust_zscore's two full-group buffers at scale"),
-    ("pagerank_residual_audit", "convergence audit: three consecutive "
-     "rank frames from the SAME lazy chain, differenced via 25-row "
-     "broadcast joins — one extra superstep of plan, no new edge "
-     "shuffles"),
+    ("pagerank_residual_audit", "convergence audit: the last three "
+     "iterates read from each node's rank-history array (the SAME "
+     "PageRank fold) — one aggregate over 25 rows, no joins"),
     ("join_skew_salted_exec", "advisor-prescribed salting in one DAG: "
      "fan-out as a broadcast singleton, dimension replicated by "
      "explode(sequence(0, buckets-1)), forced sort-merge join — "
@@ -204,9 +203,9 @@ SHOWCASE = [
     ("cliffs_delta_priority", "quadratic dominance statistic spelled "
      "linear: exact n_gt/n_eq from cell counts x one value-grain "
      "cumulative window, all BIGINT until the final division"),
-    ("hits_hub_authority", "two-vector power method: per superstep one "
-     "edges⋈scores broadcast join + dst-keyed hash-agg; 25-row frames "
-     "localCheckpointed so the 8-step chain never re-executes"),
+    ("hits_hub_authority", "two-vector power method: the (authority, "
+     "hub) struct state folds inside one gathered row — per step the "
+     "raw vector and its L1 normalizer are let-bound once"),
     ("periodogram_fixed_freqs", "frequency-domain read with bounded "
      "transcendentals: t enters the DFT only through t mod p, so "
      "cos/sin products fold over ≤p residue rows per period"),

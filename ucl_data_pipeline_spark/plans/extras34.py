@@ -44,14 +44,14 @@ ROUND 6/12; NULLIF-guarded divisions; bottom-k samples via the shared
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.plans.extras31 import _h48, _sql_h48
 from ucl_data_pipeline_spark.plans.graph import (
     PAGERANK_CTE_PREFIX,
     _N_ITER,
-    pagerank_rank_chain,
+    pagerank_history,
 )
 from ucl_data_pipeline_spark.plans.llm_ops import CC_EDGES_SQL_CTES, cc_edge_set
 from ucl_data_pipeline_spark.plans.registry import register
@@ -265,14 +265,13 @@ def pagerank_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     theory promises (a ratio near or above 1 would mean the
     constant-5 unroll is a guess; a tiny residual with ratio ≪ d
     proves every further superstep buys at least another ratio×).
-    This converts "enough supersteps" from a constant in graph.py:28
+    This converts "enough supersteps" from a constant in graph.py (``_N_ITER``)
     into a driver-verifiable number, per the round-7 brief.
 
-    Plan shape: the audit reuses the SAME lazy rank chain (shared
-    pagerank_rank_chain — not a re-implementation), differencing the
-    last three frames with two broadcast joins over node-count-sized
-    (25-row) tables; cost is one extra superstep's worth of plan, no
-    new shuffles over the edge table.
+    Plan shape: the audit reuses the SAME rank fold (shared
+    ``pagerank_history`` — not a re-implementation) and reads the last
+    three iterates from each node's history array, so it needs no join
+    and nothing persisted: one aggregate over the 25 node rows.
 
     Determinism: every rank is 12-dp rounded each superstep (the
     PageRank convention), so per-node |Δ| is an exact IEEE difference
@@ -281,41 +280,33 @@ def pagerank_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine, and the boolean verdict compares deterministic
     doubles against an exact literal.
     """
-    chain = pagerank_rank_chain(spark, sf_dir, _N_ITER)
-    # Persist the three 25-row frames: r_prev feeds BOTH residuals and
-    # every frame's lineage contains all prior supersteps — without
-    # this the two agg branches recompile/execute the superstep chain
-    # repeatedly (measured: 178 Exchange nodes -> ~60, 4.6 s -> 2.6 s
-    # warm at sf0.1). Node-count-bounded cache, not data-sized.
-    r_prev2, r_prev, r_last = (c.persist() for c in chain[-3:])
+    ranks = F.col("ranks")
 
-    def _resid(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.select("node", F.col("rank").alias("ra"))
-            .join(
-                F.broadcast(b.select("node", F.col("rank").alias("rb"))),
-                "node",
-            )
-            .select("node", F.round(F.abs(F.col("rb") - F.col("ra")), 12).alias("d"))
+    def resid(k: int) -> Column:
+        """|r_k − r_{k-1}| per node, ROUND 12; k counts from the end."""
+        return F.round(
+            F.abs(F.element_at(ranks, k) - F.element_at(ranks, k - 1)), 12
         )
 
-    sl = _resid(r_prev, r_last).agg(
-        F.sum(F.col("d").cast("decimal(28,12)")).cast("double").alias("l1_last"),
-        F.max("d").alias("max_abs_delta"),
-        F.count("*").cast("bigint").alias("n_nodes"),
-    )
-    sp = _resid(r_prev2, r_prev).agg(
-        F.sum(F.col("d").cast("decimal(28,12)")).cast("double").alias("l1_prev")
-    )
-    return sl.crossJoin(F.broadcast(sp)).select(
-        "n_nodes",
-        "l1_last",
-        "l1_prev",
-        F.round(
-            F.col("l1_last") / F.nullif(F.col("l1_prev"), F.lit(0.0)), 6
-        ).alias("contraction_ratio"),
-        "max_abs_delta",
-        (F.col("l1_last") <= F.lit(_PR_TOL)).alias("within_tol"),
+    return (
+        pagerank_history(spark, sf_dir, _N_ITER)
+        .select(resid(-1).alias("d"), resid(-2).alias("dp"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_nodes"),
+            F.sum(F.col("d").cast("decimal(28,12)")).cast("double").alias("l1_last"),
+            F.sum(F.col("dp").cast("decimal(28,12)")).cast("double").alias("l1_prev"),
+            F.max("d").alias("max_abs_delta"),
+        )
+        .select(
+            "n_nodes",
+            "l1_last",
+            "l1_prev",
+            F.round(
+                F.col("l1_last") / F.nullif(F.col("l1_prev"), F.lit(0.0)), 6
+            ).alias("contraction_ratio"),
+            "max_abs_delta",
+            (F.col("l1_last") <= F.lit(_PR_TOL)).alias("within_tol"),
+        )
     )
 
 

@@ -32,7 +32,7 @@ drift from its input).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.plans.extras3 import (
@@ -40,7 +40,13 @@ from ucl_data_pipeline_spark.plans.extras3 import (
     event_transition_matrix,
 )
 from ucl_data_pipeline_spark.plans.extras39 import _KCORE_EDGES_SQL
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import (
+    array_dsum,
+    edge_terms,
+    fold_graph,
+    gather_graph,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table
 
 # ---------------------------------------------------------------------------
@@ -244,51 +250,41 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on both engines.
 
     Scale: the ONLY row-count-bound work is the transition matrix's
-    single user-keyed window shuffle; all 8 iterations run at
-    (state × state) grain — bounded by event-type cardinality
-    squared, constant in data size. The matrix and vector frames are
-    broadcast-sized by construction.
+    single user-keyed window shuffle. Gather contract: the matrix is
+    gathered into one row (``gather_graph``), bounded by event-type
+    cardinality squared, never by row count; all 8 iterations run in
+    that row as one ``fold_steps`` column — no per-step join, shuffle,
+    checkpoint or Spark job, nothing persisted.
     """
     tm = event_transition_matrix(spark, sf_dir).select(
-        "from_type", "to_type", "n", "p_transition"
+        F.col("from_type").alias("src"), F.col("to_type").alias("dst"),
+        "n", "p_transition",
     )
-    tm = tm.localCheckpoint()  # consumed by states + all 8 steps
-    states = tm.groupBy(F.col("from_type").alias("state")).agg(
-        F.sum("n").alias("n_from")
-    )
-    n_states = states.agg(F.count("*").alias("k"))
-    pi = states.crossJoin(F.broadcast(n_states)).select(
-        "state", (F.lit(1.0) / F.col("k")).alias("p")
-    )
-    prev = pi
-    for _step in range(_MARKOV_ITERS):
-        # the loop exits with `pi` at step N and `prev` at step N-1,
-        # feeding the residual projection
-        prev = pi
-        pi = (
-            prev.join(F.broadcast(tm), F.col("state") == F.col("from_type"))
-            .select(
-                F.col("to_type").alias("state"),
-                F.round(F.col("p") * F.col("p_transition"), 12)
-                .cast("decimal(28,12)")
-                .alias("c"),
-            )
-            .groupBy("state")
-            .agg(F.sum("c").cast("double").alias("p"))
-        )
-    total = states.agg(F.sum("n_from").alias("tot"))
-    return (
-        states.join(pi.withColumnRenamed("p", "p_cur"), "state")
-        .join(prev.withColumnRenamed("p", "p_prev"), "state")
-        .crossJoin(F.broadcast(total))
-        .select(
-            F.col("state").alias("event_type"),
-            F.round("p_cur", 6).alias("stationary_p"),
-            F.round(
-                F.col("n_from").cast("double") / F.col("tot"), 6
-            ).alias("empirical_p"),
-            F.round(F.abs(F.col("p_cur") - F.col("p_prev")), 12).alias(
-                "abs_delta"
-            ),
-        )
+    # Nodes are the from-types: a to-only type has no out-edge, so it
+    # never feeds a from-type's iterate, and only from-types are output.
+    nf = F.transform("ns", lambda _, i: F.aggregate(
+        edge_terms(F.col("es"), i, "s", lambda e: e["n"]),
+        F.lit(0).cast("bigint"), lambda a, n: a + n,
+    ))
+    tot = F.aggregate("es.n", F.lit(0).cast("bigint"), lambda a, n: a + n)
+    pi0 = F.transform("ns", lambda _: F.lit(1.0) / F.size("ns"))
+
+    def step(pi: Column, es: Column) -> Column:
+        # NULL = no iterate row for the type (the join + group-by spelling)
+        return F.transform("ns", lambda _, i: array_dsum(edge_terms(
+            es, i, "d", lambda e: F.round(F.element_at(pi, e["s"]) * e["p_transition"], 12)
+        )).cast("double"))
+
+    h = gather_graph(tm).select(
+        "ns", nf.alias("nf"), tot.alias("tot"),
+        fold_graph(pi0, step, _MARKOV_ITERS).alias("h"),
+    ).select(F.posexplode("ns").alias("i", "event_type"), "nf", "tot", "h")
+    p_cur = F.element_at(F.element_at("h", -1), F.col("i") + 1)
+    p_prev = F.element_at(F.element_at("h", -2), F.col("i") + 1)
+    n_from = F.element_at("nf", F.col("i") + 1)
+    return h.filter(p_cur.isNotNull() & p_prev.isNotNull()).select(
+        "event_type",
+        F.round(p_cur, 6).alias("stationary_p"),
+        F.round(n_from.cast("double") / F.col("tot"), 6).alias("empirical_p"),
+        F.round(F.abs(p_cur - p_prev), 12).alias("abs_delta"),
     )

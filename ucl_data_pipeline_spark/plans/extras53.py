@@ -27,10 +27,18 @@ exact BIGINT counts, atomic columns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.functions.text import _let
+from ucl_data_pipeline_spark.plans.graph import nations, trade_lines
+from ucl_data_pipeline_spark.plans.registry import (
+    array_dsum,
+    edge_terms,
+    fold_graph,
+    gather_graph,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table
 
 _HITS_ITER = 4
@@ -60,8 +68,8 @@ def _hits_step(prev: str, cur: str, key_in: str, key_out: str) -> str:
     sum (exact DECIMAL, so order-free), NOT a scalar subquery: DuckDB
     inlines CTEs per reference, so a subquery normalizer would make
     each step reference its _raw frame twice and the 8-step chain
-    re-execute exponentially (the oracle-side twin of the Spark
-    lineage trap this query localCheckpoints away)."""
+    re-execute exponentially (the oracle-side twin of the Spark side's
+    let-bound normalizer)."""
     return f"""{cur} AS (
   SELECT node,
     ROUND(raw / CAST(SUM(CAST(raw AS DECIMAL(38,12))) OVER ()
@@ -116,82 +124,66 @@ ORDER BY authority DESC, a.node
 )
 def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kleinberg HITS on the directed nation trade network: {k}
-    unrolled hub/authority superstep pairs, each an edges⋈scores join
-    + hash-agg + L1 normalization — the two-vector sibling of
-    ``pagerank_trade_network`` (same lazy-chain discipline: no driver
-    round-trips; the oracle unrolls identical CTEs). L1 rather than
+    unrolled hub/authority superstep pairs, each an edge propagation +
+    L1 normalization — the two-vector sibling of
+    ``pagerank_trade_network`` (same gathered fold: no Spark action
+    per step; the oracle unrolls identical CTEs). L1 rather than
     L2 normalization keeps the per-step math inside the engine's
     round-12-decimal-sum convention (no sqrt inside the loop; the
     fixed point's RANKING is identical, only the scale convention
     differs — documented deviation from the classical L2 spelling).
 
     Determinism: every per-node sum and every normalizer is a
-    round-12-then-DECIMAL(38,12) sum (order-free); scores stay ≤ 1 by
-    normalization, so decimal casts are exact-range; outputs ROUND 6.
+    round-12-then-exact-decimal sum (``array_dsum``, order-free); scores
+    stay ≤ 1 by normalization, so decimal casts are exact-range; outputs
+    ROUND 6.
 
-    Scale: per superstep, the score vector is node-sized (25 rows —
-    broadcast onto the persisted weighted edge table), the agg is
-    keyed by dst (then src) — identical shuffle shape to PageRank;
-    edge weights build once from one fact scan.
+    Scale: the edge weights build once from one fact scan. Gather
+    contract: the weighted edge list is gathered into one row
+    (``gather_graph``), bounded by the nation dimension (≤600 directed
+    lanes), never by row count. The state is a struct of two node-sized
+    arrays (authority, hub); the {k} superstep pairs run in that row as
+    one ``fold_steps`` column — no per-step join, shuffle, checkpoint or
+    Spark job, nothing persisted. Each step's raw vector and its
+    normalizer are let-bound once (``_let``), so no fold is re-evaluated
+    per element.
     """
-    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nodes = read_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node")
-    )
     edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(s, l["l_suppkey"] == s["s_suppkey"])
+        trade_lines(spark, sf_dir)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count("*").cast("double").alias("w"))
-        .persist()
     )
-    def _propagate(scores: DataFrame, key_in: str, key_out: str) -> DataFrame:
-        raw = (
-            edges.join(F.broadcast(scores), scores["node"] == edges[key_in])
-            .select(
-                F.col(key_out).alias("pnode"),
-                F.round(F.col("score") * F.col("w"), 12).alias("term"),
-            )
-            .groupBy("pnode")
-            .agg(
-                F.sum(F.col("term").cast("decimal(38,12)"))
-                .cast("double")
-                .alias("v")
-            )
-        )
-        # node-sized (25 rows) and consumed TWICE below (normalizer agg
-        # + the normalized select) at the tail of an unrolled 8-step
-        # chain — localCheckpoint per superstep, or lineage re-executes
-        # the whole upstream chain per consumer (the engine's
-        # iterative-chain discipline; see dedup_connected_components).
-        raw_full = (
-            nodes.join(F.broadcast(raw), nodes["node"] == raw["pnode"], "left")
-            .select("node", F.coalesce("v", F.lit(0.0)).alias("raw"))
-            .localCheckpoint()
-        )
-        z = raw_full.agg(
-            F.sum(F.col("raw").cast("decimal(38,12)")).cast("double").alias("z")
-        )
-        return raw_full.crossJoin(F.broadcast(z)).select(
-            "node", F.round(F.col("raw") / F.col("z"), 12).alias("score")
+
+    def propagate(x: Column, es: Column, key_in: str, key_out: str) -> Column:
+        """Scores x pushed along the edges from key_in to key_out, then
+        L1-normalized; raw and its normalizer are let-bound once."""
+        raw = F.transform("ns", lambda _, i: F.coalesce(array_dsum(edge_terms(
+            es, i, key_out, lambda e: F.round(F.element_at(x, e[key_in]) * e["w"], 12)
+        )).cast("double"), F.lit(0.0)))
+        return _let(raw, lambda r: _let(
+            array_dsum(r).cast("double"),
+            lambda z: F.transform(r, lambda v: F.round(v / z, 12)),
+        ))
+
+    def step(st: Column, es: Column) -> Column:
+        return _let(
+            propagate(st["hub"], es, "s", "d"),
+            lambda a: F.struct(a.alias("auth"), propagate(a, es, "d", "s").alias("hub")),
         )
 
-    hub = nodes.select("node", F.lit(1.0 / _N_NODES).alias("score"))
-    auth = None
-    for _ in range(_HITS_ITER):
-        auth = _propagate(hub, "src", "dst")
-        hub = _propagate(auth, "dst", "src")
+    h0 = F.transform("ns", lambda _: F.lit(1.0 / _N_NODES))
+    st0 = F.struct(h0.alias("auth"), h0.alias("hub"))
     return (
-        auth.select("node", F.round("score", 6).alias("authority"))
-        .join(
-            hub.select("node", F.round("score", 6).alias("hub")), "node"
+        gather_graph(edges, nations(spark, sf_dir))
+        .select("ns", F.element_at(fold_graph(st0, step, _HITS_ITER), -1).alias("st"))
+        .select(F.posexplode("ns").alias("i", "node"), "st")
+        .select(
+            "node",
+            F.round(F.element_at("st.auth", F.col("i") + 1), 6).alias("authority"),
+            F.round(F.element_at("st.hub", F.col("i") + 1), 6).alias("hub"),
         )
         .orderBy(F.desc("authority"), "node")
     )

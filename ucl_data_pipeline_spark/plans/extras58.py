@@ -29,7 +29,7 @@ where the oracle references a frame per unrolled step.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.functions import vector as VX
@@ -38,7 +38,13 @@ from ucl_data_pipeline_spark.plans.clustering import (
     _dists,
     _seed_centers,
 )
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import (
+    array_dsum,
+    edge_terms,
+    fold_graph,
+    gather_graph,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table
 
 # ---------------------------------------------------------------------------
@@ -290,13 +296,18 @@ def markov_absorption_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: transition probabilities are exact-count ratios
     (identical IEEE divisions); each superstep's per-state sum is
-    ROUND-12 then DECIMAL(38,12)-summed over ≤|types| terms; the
-    absorbing state is pinned to 1.0 each step; outputs ROUND 6.
+    ROUND-12 then exactly decimal-summed over ≤|types| terms
+    (``array_dsum``); the absorbing state is pinned to 1.0 each step;
+    outputs ROUND 6.
 
     Scale: the fact-sized stage is the one sessionization window +
-    (src, dst) hash-agg; all {k} supersteps run on the ≤|types|²
-    bounded matrix. Oracle unrolls identical CTEs (MATERIALIZED
-    matrix — single-reference-per-step discipline, extras53).
+    (src, dst) hash-agg. Gather contract: the transition matrix is
+    gathered into one row (``gather_graph``), bounded by the number of
+    event types squared, never by row count; all {k} supersteps run in
+    that row as one ``fold_steps`` column — no per-step join, shuffle,
+    checkpoint or Spark job, nothing persisted. Oracle unrolls
+    identical CTEs (MATERIALIZED matrix — single-reference-per-step
+    discipline, extras53).
     """
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -310,58 +321,22 @@ def markov_absorption_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src",
         "dst",
         (F.col("c").cast("double") / F.sum("c").over(w_src)).alias("p"),
-    ).persist()
-    states = trans.select(F.col("src").alias("s")).distinct().persist()
-
-    a = states.select(
-        "s",
-        F.when(F.col("s") == _ABS_TARGET, 1.0).otherwise(0.0).alias("a"),
     )
-    keep = {}
-    for i in range(1, _ABS_STEPS + 1):
-        step = (
-            trans.join(a, a["s"] == trans["dst"])
-            .select(
-                F.col("src").alias("cs"),
-                F.round(F.col("p") * F.col("a"), 12).alias("term"),
-            )
-            .groupBy("cs")
-            .agg(
-                F.sum(F.col("term").cast("decimal(38,12)"))
-                .cast("double")
-                .alias("v")
-            )
-        )
-        a = states.join(step, states["s"] == step["cs"], "left").select(
-            "s",
-            F.when(F.col("s") == _ABS_TARGET, 1.0)
-            .otherwise(F.round(F.coalesce("v", F.lit(0.0)), 12))
-            .alias("a"),
-        )
-        if i in (2, 4, 8):
-            # kept frames are consumed twice (chain continuation + the
-            # final three-way join) — localCheckpoint the ≤|types|-row
-            # frame so neither consumer re-executes the superstep chain
-            # (the engine's iterative-chain discipline, extras53).
-            a = a.localCheckpoint()
-            keep[i] = a
+
+    def step(a: Column, es: Column) -> Column:
+        return F.transform("ns", lambda s, i: F.when(s == _ABS_TARGET, 1.0).otherwise(
+            F.round(F.coalesce(array_dsum(edge_terms(es, i, "s", lambda e: F.round(
+                e["p"] * F.element_at(a, e["d"]), 12))).cast("double"), F.lit(0.0)), 12)
+        ))
+
+    a0 = F.transform("ns", lambda s: F.when(s == _ABS_TARGET, 1.0).otherwise(0.0))
+    h = gather_graph(trans).select("ns", fold_graph(a0, step, _ABS_STEPS).alias("h"))
     return (
-        keep[2]
-        .select(F.col("s").alias("start_state"), F.round("a", 6).alias("p_absorb_2"))
-        .join(
-            keep[4].select(
-                F.col("s").alias("start_state"),
-                F.round("a", 6).alias("p_absorb_4"),
-            ),
-            "start_state",
-        )
-        .join(
-            keep[8].select(
-                F.col("s").alias("start_state"),
-                F.round("a", 6).alias("p_absorb_8"),
-            ),
-            "start_state",
-        )
+        h.select(F.posexplode("ns").alias("i", "start_state"), "h")
+        .select("start_state", *(
+            F.round(F.element_at(F.element_at("h", k + 1), F.col("i") + 1), 6)
+            .alias(f"p_absorb_{k}") for k in (2, 4, 8)
+        ))
         .orderBy("start_state")
     )
 

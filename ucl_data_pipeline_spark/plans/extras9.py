@@ -13,7 +13,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.registry import pdisc_rank, rank_select, register
+from ucl_data_pipeline_spark.plans.graph import nations, trade_lines
+from ucl_data_pipeline_spark.plans.registry import (
+    edge_terms,
+    fold_graph,
+    gather_graph,
+    pdisc_rank,
+    rank_select,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table, stats_barrier
 
 # ---------------------------------------------------------------------------
@@ -582,22 +590,16 @@ def cheapest_route_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     conventions needed (the mean itself is the exact-decimal davg
     both engines compute bit-identically before the floor).
 
-    Scale shape: the fact-side edge aggregation happens ONCE and is
-    persisted; each relaxation joins broadcast node-bounded state
-    (≤25 rows) against the edge table — no SortMergeJoin, edges never
-    re-shuffle, one lazy Catalyst plan end-to-end; the oracle unrolls
-    the identical supersteps as chained CTEs.
+    Scale shape: the fact-side edge aggregation is the one
+    row-count-bound stage. Gather contract: its result is gathered into
+    one row (``gather_graph``), bounded by the nation dimension (≤625
+    lanes), never by row count; the {N} relaxations run in that row as
+    one ``fold_steps`` column — no per-step join, shuffle or Spark job,
+    nothing persisted. The oracle unrolls the identical supersteps as
+    chained CTEs.
     """
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(s, l["l_suppkey"] == s["s_suppkey"])
+        trade_lines(spark, sf_dir, "l_extendedprice")
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
@@ -611,31 +613,21 @@ def cheapest_route_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("w")
         )
-        .persist()
     )
-    d = read_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"),
-        F.when(F.col("n_nationkey") == _BF_SOURCE, F.lit(0))
-        .cast("bigint")
-        .alias("cost"),
+
+    def step(d: Column, es: Column) -> Column:
+        # least() skips NULLs: unreached stays NULL, a cheaper path relaxes
+        return F.transform(d, lambda c, i: F.least(c, F.array_min(
+            edge_terms(es, i, "d", lambda e: F.element_at(d, e["s"]) + e["w"])
+        )))
+
+    d0 = F.transform("ns", lambda n: F.when(n == _BF_SOURCE, F.lit(0)).cast("bigint"))
+    return (
+        gather_graph(edges, nations(spark, sf_dir))
+        .select("ns", F.element_at(fold_graph(d0, step, _BF_ITER), -1).alias("d"))
+        .select(F.posexplode("ns").alias("i", "node"), "d")
+        .select("node", F.element_at("d", F.col("i") + 1).alias("cost"))
     )
-    for _ in range(_BF_ITER):
-        cand = (
-            edges.join(
-                F.broadcast(d.filter(F.col("cost").isNotNull())),
-                d["node"] == edges["src"],
-            )
-            .groupBy(F.col("dst").alias("cnode"))
-            .agg(F.min(F.col("cost") + F.col("w")).alias("cand"))
-        )
-        d = d.join(F.broadcast(cand), d["node"] == cand["cnode"], "left").select(
-            "node",
-            F.when(F.col("cost").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("cost"))
-            .otherwise(F.least("cost", "cand"))
-            .alias("cost"),
-        )
-    return d.select("node", F.col("cost").cast("bigint").alias("cost"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,27 +1,33 @@
 """Graph analytics over the star schema: PageRank on the trade
 network. Unlike k-means (driver-coordinated argmin/init → rows-only),
-FIXED-ITERATION PageRank is fully oracle-checkable: the Spark side
-chains five lazy iteration plans (no driver round-trips at all) and
-the DuckDB oracle unrolls the same five steps as chained CTEs, with
-every per-iteration sum made order-independent by the registry's
-round-then-decimal-sum convention — so an ITERATIVE algorithm gets an
-exact cross-engine value hash.
+FIXED-ITERATION PageRank is fully oracle-checkable: the DuckDB oracle
+unrolls the five steps as chained CTEs, with every per-iteration sum
+made order-independent by the registry's round-then-decimal-sum
+convention — so an ITERATIVE algorithm gets an exact cross-engine
+value hash.
 
-Scale shape: each iteration is one join (ranks ⋈ edges, keyed by src)
-+ one hash-agg (keyed by dst) + one left join back onto the node list
-— identical to a Pregel superstep. Ranks are (node, double) pairs:
-tiny relative to edges, so at scale the edge table keeps a fixed
-partitioning and ranks shuffle to it each round. For long iteration
-counts, localCheckpoint every few rounds bounds lineage (five plans
-deep needs none).
+Scale shape: the edge aggregation over the fact join is the only
+row-count-bound stage. Its result is bounded by the nation dimension
+(≤25² edges), so the Spark side gathers it into ONE row
+(``registry.gather_graph``) and runs every superstep inside that row
+as one ``registry.fold_steps`` column: the Pregel superstep (edge
+terms, exact sum per dst, update per node) with no per-step join,
+shuffle, checkpoint or Spark job, and no lineage that grows with the
+step count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import (
+    array_dsum,
+    edge_terms,
+    fold_graph,
+    gather_graph,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table
 
 _DAMP = 0.85
@@ -76,92 +82,91 @@ ORDER BY rank DESC, node
 """
 
 
-def pagerank_rank_chain(
-    spark: SparkSession, sf_dir: str, n_iter: int = _N_ITER
-) -> list[DataFrame]:
-    """The full lazy rank chain [r0, r1, ..., r_n_iter] — shared by
-    ``pagerank_trade_network`` (which returns the last frame) and the
-    round-8 ``pagerank_residual_audit`` in extras34 (which differences
-    consecutive frames). Extracting the list changes NO expression in
-    the witnessed pagerank plan: the loop body below is the round-1
-    spelling verbatim; this wrapper only keeps references to the
-    intermediate (still lazy) DataFrames instead of dropping them."""
-    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+def trade_lines(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """lineitem ⋈ orders ⋈ customer ⋈ supplier: one row per line with
+    its supplier nation ``s_nationkey``, customer nation ``c_nationkey``
+    and the lineitem columns ``cols`` — the fact side of the nation trade
+    graph."""
+    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", *cols)
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nodes = read_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node")
-    )
-    edges = (
+    return (
         l.join(o, l["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(s, l["l_suppkey"] == s["s_suppkey"])
-        .groupBy(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .agg(F.count("*").cast("double").alias("w"))
-        # edges ⋈ out-weights reused every iteration: materialize once
-        .persist()
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    # outw has one row per source node (≤25) — broadcast it onto edges.
-    ew = (
-        edges.join(F.broadcast(outw), "src")
-        .select("src", "dst", "w", "ow")
-        .persist()
     )
 
-    ranks = nodes.select("node", F.lit(1.0 / _N_NODES).alias("rank"))
-    chain = [ranks]
-    for _ in range(n_iter):
-        # ranks/contrib are bounded by node count (25 rows) — broadcast
-        # them so the weighted edge table never re-shuffles per
-        # superstep (same policy as bfs_reach_hops).
-        contrib = (
-            ew.join(F.broadcast(ranks), ranks["node"] == ew["src"])
-            .select(
-                F.col("dst").alias("cnode"),
-                F.round(F.col("rank") * F.col("w") / F.col("ow"), 12).alias(
-                    "term"
-                ),
-            )
-            .groupBy("cnode")
-            .agg(
-                F.sum(F.col("term").cast("decimal(28,12)"))
-                .cast("double")
-                .alias("contrib")
-            )
+
+def nations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trade graph's node set: one ``node`` per nation."""
+    return read_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
+
+
+def pagerank_history(
+    spark: SparkSession, sf_dir: str, n_iter: int = _N_ITER
+) -> DataFrame:
+    """(node, ranks): each node's rank iterates [r0, r1, ..., r_n_iter],
+    shared by ``pagerank_trade_network`` (the last iterate) and
+    extras34's ``pagerank_residual_audit`` (the last three).
+
+    The weighted edge table is the one fact-sized stage. It is gathered
+    into one row with the sorted node keys (``gather_graph``: ≤25² edges,
+    bounded by the nation dimension, never by row count), and all
+    supersteps run inside that row as one ``fold_steps`` column — no
+    per-step join, shuffle, checkpoint or Spark job. Each step is the
+    Pregel superstep expression for expression: per-edge contributions
+    ROUND-12, then summed exactly per dst (``array_dsum``)."""
+    edges = (
+        trade_lines(spark, sf_dir)
+        .groupBy(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
+        .agg(F.count("*").cast("double").alias("w"))
+        # out-weights: integral doubles, so the sum is exact in any order
+        .withColumn("ow", F.sum("w").over(Window.partitionBy("src")))
+    )
+
+    def step(r: Column, es: Column) -> Column:
+        return F.transform("ns", lambda _, i: F.round(
+            F.lit((1 - _DAMP) / _N_NODES) + F.lit(_DAMP) * F.coalesce(
+                array_dsum(edge_terms(es, i, "d", lambda e: F.round(
+                    F.element_at(r, e["s"]) * e["w"] / e["ow"], 12))).cast("double"),
+                F.lit(0.0)),
+            12,
+        ))
+
+    r0 = F.transform("ns", lambda _: F.lit(1.0 / _N_NODES))
+    return (
+        gather_graph(edges, nations(spark, sf_dir))
+        .select("ns", fold_graph(r0, step, n_iter).alias("h"))
+        .select(F.posexplode("ns").alias("i", "node"), "h")
+        .select(
+            "node", F.transform("h", lambda r: F.element_at(r, F.col("i") + 1)).alias("ranks")
         )
-        ranks = nodes.join(
-            F.broadcast(contrib), nodes["node"] == contrib["cnode"], "left"
-        ).select(
-            "node",
-            F.round(
-                F.lit((1 - _DAMP) / _N_NODES)
-                + F.lit(_DAMP) * F.coalesce("contrib", F.lit(0.0)),
-                12,
-            ).alias("rank"),
-        )
-        chain.append(ranks)
-    return chain
+    )
 
 
 @register("pagerank_trade_network", oracle=_PAGERANK_ORACLE, tags=("graph", "iterative", "join"))
 def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (d=0.85, 5 fixed iterations) over the nation trade
     network: an edge supplier-nation → customer-nation per
-    (lineitem ⋈ orders) flow, weighted by flow count. Each iteration
-    is one lazy join+agg superstep — NO driver round-trips (contrast
-    kmeans, whose centroid argmin forces per-iteration collects); the
-    whole five-step computation is a single Catalyst plan.
+    (lineitem ⋈ orders) flow, weighted by flow count. The five
+    supersteps are one ``fold_steps`` column over the gathered edge
+    matrix (``pagerank_history``): one Catalyst plan, no Spark action
+    per step (contrast kmeans, whose centroid argmin forces
+    per-iteration collects), nothing persisted.
+
+    Gather contract: the gathered matrix is bounded by the nation
+    dimension (25 nodes, ≤625 edges), never by row count.
 
     Cross-engine determinism: per-edge contributions are rounded to
     12 dp and summed exactly in decimal each iteration, so both
     engines produce bit-identical ranks after every step.
     """
-    ranks = pagerank_rank_chain(spark, sf_dir, _N_ITER)[-1]
-    return ranks.orderBy(F.col("rank").desc(), "node")
+    return (
+        pagerank_history(spark, sf_dir)
+        .select("node", F.element_at("ranks", -1).alias("rank"))
+        .orderBy(F.col("rank").desc(), "node")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -213,54 +218,34 @@ def bfs_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS ({N} fixed supersteps) over the distinct trade
     edges: minimum hop count from the region-0 nations to every nation;
     NULL hops = unreached within {N}. Like pagerank_trade_network the
-    whole computation is ONE lazy Catalyst plan (no driver round-trips)
-    and the oracle unrolls the identical supersteps as chained CTEs —
-    but here the state is integral, so cross-engine exactness needs no
-    float conventions at all.
+    supersteps are one ``fold_steps`` column over the gathered edge list
+    (no Spark action per step, nothing persisted) and the oracle unrolls
+    the identical supersteps as chained CTEs — but here the state is
+    integral, so cross-engine exactness needs no float conventions.
 
-    Scale shape: each superstep is one join (frontier ⋈ edges, keyed by
-    src) + one min-agg (keyed by dst) + one left join back to the node
-    list — a Pregel superstep; distances are one int per node, tiny
-    next to edges, which keep a fixed partitioning across rounds. For
-    long diameters, localCheckpoint every few supersteps bounds
-    lineage (four plans deep needs none).
+    Scale shape: the distinct (src, dst) nation pairs over the fact
+    join are the one row-count-bound stage. Gather contract: the
+    gathered edge list is bounded by the nation dimension (≤625 pairs),
+    never by row count. Each superstep relaxes every node against its
+    in-edges inside that one row.
     """
-    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(s, l["l_suppkey"] == s["s_suppkey"])
-        .select(
-            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
-        )
-        .distinct()
-        .persist()
-    )
-    d = read_table(spark, sf_dir, "nation").select(
+    edges = trade_lines(spark, sf_dir).select(
+        F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+    ).distinct()
+    nodes = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"),
-        F.when(F.col("n_regionkey") == 0, F.lit(0)).alias("hops"),
+        F.when(F.col("n_regionkey") == 0, F.lit(0)).alias("d0"),
     )
-    for _ in range(_BFS_ITER):
-        # Both sides of each superstep's joins that carry distance state
-        # are bounded by the node count (nation: 25 rows) — broadcast
-        # them so edges NEVER shuffle: each superstep is then a
-        # broadcast join + partial-aggregated min, no sort-merge.
-        cand = (
-            edges.join(
-                F.broadcast(d.filter(F.col("hops").isNotNull())),
-                d["node"] == edges["src"],
-            )
-            .groupBy(F.col("dst").alias("cnode"))
-            .agg((F.min("hops") + 1).alias("cand"))
-        )
-        d = d.join(F.broadcast(cand), d["node"] == cand["cnode"], "left").select(
-            "node",
-            F.when(F.col("hops").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("hops"))
-            .otherwise(F.least("hops", "cand"))
-            .alias("hops"),
-        )
-    return d.select("node", F.col("hops").cast("int").alias("hops"))
+
+    def step(d: Column, es: Column) -> Column:
+        # least() skips NULLs: unreached stays NULL, a new path relaxes
+        return F.transform(d, lambda h, i: F.least(
+            h, F.array_min(edge_terms(es, i, "d", lambda e: F.element_at(d, e["s"]) + 1))
+        ))
+
+    return (
+        gather_graph(edges, nodes)
+        .select("ns", F.element_at(fold_graph("d0", step, _BFS_ITER), -1).alias("d"))
+        .select(F.posexplode("ns").alias("i", "node"), "d")
+        .select("node", F.element_at("d", F.col("i") + 1).cast("int").alias("hops"))
+    )

@@ -19,7 +19,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.functions import text as TX
@@ -1344,8 +1344,8 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-superstep broadcast rebuild in the CC loop scanned all 66 as
     separate tasks — pure scheduling overhead, and the cause of the
     r12 scaling block's 8-core-beats-32 inversion on this family. The
-    count() after the checkpoint is a narrow read of the materialized
-    RDD (no lineage re-execution); the partition target scales with
+    pair count rides the checkpoint job as an ``Observation`` metric
+    (no separate count job); the partition target scales with
     the dup-graph size (~64k pair rows ≈ 1.5 MB per partition),
     capped at default parallelism, so a corpus-scale dup graph keeps
     full parallelism while a bench-scale one collapses to 1.
@@ -1364,10 +1364,15 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     near = dedup_minhash_lsh(spark, sf_dir, feats=feats).select(
         "doc_a", "doc_b"
     )
-    pairs = near.unionByName(exact).localCheckpoint()
+    size = Observation()
+    pairs = (
+        near.unionByName(exact)
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
     feats.unpersist()
     rep.unpersist()
-    n_pairs = pairs.count()
+    n_pairs = size.get["n"]
     n_parts = max(
         1,
         min(
@@ -1433,8 +1438,9 @@ def dedup_connected_components(
     with corpus size, which is the 100 TB argument). The convergence
     check also rides the label aggregate itself (min over the
     own-label-flagged union gives both the new label and the old one),
-    so each round is ONE materializing job instead of two — the old
-    shape paid a second join+count job per round purely to decide
+    and the changed-label count is an ``Observation`` metric on that
+    aggregate, filled by its localCheckpoint job — so each round is ONE
+    materializing job, with no separate join or count job to decide
     termination. Results are bit-identical: same min-label fixpoint,
     same early-exit round (isolated docs never contributed to either).
     """
@@ -1453,6 +1459,7 @@ def dedup_connected_components(
             .join(labels, F.col("dst") == F.col("doc_id"))
             .select(F.col("src").alias("doc_id"), "component_id")
         )
+        moved = Observation()
         merged = (
             labels.withColumn("__own", F.lit(1))
             .unionByName(nbr.withColumn("__own", F.lit(0)))
@@ -1463,13 +1470,14 @@ def dedup_connected_components(
                     F.when(F.col("__own") == 1, F.col("component_id"))
                 ).alias("__old"),
             )
+            .observe(
+                moved,
+                F.count_if(F.col("component_id") != F.col("__old")).alias("n"),
+            )
             .localCheckpoint()
         )
-        changed = merged.filter(
-            F.col("component_id") != F.col("__old")
-        ).count()
         labels = merged.select("doc_id", "component_id")
-        if changed == 0:
+        if moved.get["n"] == 0:
             break
     if owns_edges:
         edges.unpersist()
