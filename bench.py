@@ -215,7 +215,6 @@ _REGISTRY_HELPER_FNS: tuple[str, ...] = (
     "rank_select",
     "fold_steps",
     "gather_graph",
-    "fold_graph",
     "edge_terms",
     "array_dsum",
 )

@@ -145,59 +145,144 @@ def _absorb_loop(trans, states, target, k):
     return out
 
 
-def _absorb_fold(trans, states, target, k):
-    """The same supersteps as one fold over the gathered matrix."""
-    from pyspark.sql import functions as F
+def _absorb_fold(trans, target, k):
+    """The same supersteps as one fold over the gathered matrix, by the
+    query's own absorption_history."""
+    from ucl_data_pipeline_spark.plans.extras58 import absorption_history
 
-    from ucl_data_pipeline_spark.plans.registry import (
-        array_dsum,
-        edge_terms,
-        fold_graph,
-        gather_graph,
-    )
-
-    def step(a, es):
-        return F.transform("ns", lambda s, i: F.when(s == target, 1.0).otherwise(
-            F.round(F.coalesce(array_dsum(edge_terms(es, i, "s", lambda e: F.round(
-                e["p"] * F.element_at(a, e["d"]), 12))).cast("double"), F.lit(0.0)), 12)
-        ))
-
-    a0 = F.transform("ns", lambda s: F.when(s == target, 1.0).otherwise(0.0))
-    row = gather_graph(trans, states).select("ns", fold_graph(a0, step, k).alias("h"))
-    row = row.collect()[0]
+    row = absorption_history(trans, target, k).collect()[0]
     return [dict(zip(row.ns, x)) for x in row.h]
 
 
 def test_fold_steps_matches_explicit_supersteps(spark):
-    # The hand-built matrix has a dst that is never a src nor a state
-    # ('x'), a state with no out-edges ('c'), a self-loop, and
-    # probabilities whose products need the ROUND-12 + exact decimal sum.
+    # The hand-built matrix has a dst that is never a src ('x'), a state
+    # whose only out-edge leads there, so it has none inside the states
+    # ('c'), a self-loop, and probabilities whose products need the
+    # ROUND-12 + exact decimal sum.
     from pyspark.sql import functions as F
 
     edges = [
         ("a", "b", 0.1), ("a", "t", 0.2), ("a", "a", 0.7),
         ("b", "a", 1 / 3), ("b", "x", 2 / 3),
-        ("t", "t", 1.0), ("b", "c", 0.0),
+        ("t", "t", 1.0), ("b", "c", 0.0), ("c", "x", 1.0),
     ]
     schema = "src string, dst string, p double"
     trans = spark.createDataFrame(edges, schema)
     empty = spark.createDataFrame([], schema)
-    nodes = spark.createDataFrame([(s,) for s in "abct"], "s string")
-    no_nodes = spark.createDataFrame([], "s string")
     cases = [
-        (trans, nodes, "t"),
-        (trans, nodes, "z"),  # absorbing target absent
-        (trans, trans.select(F.col("src").alias("s")).distinct(), "t"),
-        (empty, nodes, "t"),  # empty matrix
-        (empty, no_nodes, "t"),
+        (trans, "t"),
+        (trans, "z"),  # absorbing target absent
+        (empty, "t"),  # empty matrix
     ]
-    for tr, st, target in cases:
-        want = _absorb_loop(tr, st, target, 5)
-        got = _absorb_fold(tr, st, target, 5)
+    for tr, target in cases:
+        states = tr.select(F.col("src").alias("s")).distinct()
+        want = _absorb_loop(tr, states, target, 5)
+        got = _absorb_fold(tr, target, 5)
         assert got == want, (target, got, want)
     # the absent target absorbs nothing; 'c' (no out-edges) stays 0
-    got = _absorb_fold(trans, nodes, "z", 3)
+    got = _absorb_fold(trans, "z", 3)
     assert all(v == 0.0 for x in got for v in x.values())
+    assert all(x["c"] == 0.0 for x in _absorb_fold(trans, "t", 5))
+
+
+def _write_events(path, streams):
+    """events.parquet with one user per stream, events in stream order."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev, eid = [], 0
+    t0 = dt.datetime(2024, 1, 1)
+    for u, stream in enumerate(streams):
+        for j, t in enumerate(stream):
+            ev.append((eid, t0 + dt.timedelta(minutes=j), u, t))
+            eid += 1
+    eid_, ts, uid, et = zip(*ev)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(eid_, pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array(uid, pa.int64()),
+            "event_type": pa.array(et, pa.string()),
+            "value": pa.array([1.0] * len(ev), pa.float64()),
+            "props": pa.array(["{}"] * len(ev), pa.string()),
+        }),
+        f"{path}/events.parquet",
+    )
+
+
+def test_markov_queries_count_transitions_into_to_only_types(spark, tmp_path):
+    # 'x' only ever ends a stream, so it is a to-only type, and 'c''s
+    # one transition goes into it: the fold drops edges into 'x', but
+    # n_from, the total and empirical_p count them, as the oracle does.
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from ucl_data_pipeline_spark.plans.extras40 import (
+        _MARKOV_ITERS,
+        markov_stationary_events,
+    )
+    from ucl_data_pipeline_spark.plans.extras58 import (
+        _ABS_STEPS,
+        _ABS_TARGET,
+        markov_absorption_funnel,
+    )
+
+    streams = [
+        ["a", "b", _ABS_TARGET, "x"],
+        ["a", "a", "b", "x"],
+        ["b", _ABS_TARGET, _ABS_TARGET, "a"],
+        ["a", "c", "x"],
+        ["a"],
+    ]
+    _write_events(tmp_path, streams)
+    pairs = defaultdict(lambda: defaultdict(int))
+    for stream in streams:
+        for a, b in zip(stream, stream[1:]):
+            pairs[a][b] += 1
+    n_from = {a: sum(row.values()) for a, row in pairs.items()}
+    total = sum(n_from.values())
+    assert "x" not in n_from and n_from["c"] == 1
+
+    # power iteration on the from-types; mass into 'x' leaves the chain
+    states = sorted(n_from)
+    P = {a: {b: round(c / n_from[a], 6) for b, c in row.items()} for a, row in pairs.items()}
+    pi = [{s: 1.0 / len(states) for s in states}]
+    for _ in range(_MARKOV_ITERS):
+        nxt = defaultdict(float)
+        for a, p in pi[-1].items():
+            for b, q in P[a].items():
+                if b in n_from:
+                    nxt[b] += p * q
+        pi.append(dict(nxt))
+    got = {r.event_type: r for r in markov_stationary_events(spark, str(tmp_path)).collect()}
+    assert set(got) == set(pi[-1]) == set(states)
+    for s in states:
+        assert got[s].empirical_p == round(n_from[s] / total, 6), s
+        assert abs(got[s].stationary_p - pi[-1][s]) < 2e-6, s
+        assert abs(got[s].abs_delta - abs(pi[-1][s] - pi[-2][s])) < 1e-9, s
+
+    # the registered absorption query against the explicit superstep loop
+    ev = spark.read.parquet(f"{tmp_path}/events.parquet")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    cnt = (
+        ev.select(F.col("event_type").alias("src"), F.lead("event_type").over(w).alias("dst"))
+        .filter(F.col("dst").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("c"))
+    )
+    trans = cnt.select(
+        "src", "dst", (F.col("c") / F.sum("c").over(Window.partitionBy("src"))).alias("p")
+    )
+    loop = _absorb_loop(
+        trans, trans.select(F.col("src").alias("s")).distinct(), _ABS_TARGET, _ABS_STEPS
+    )
+    got = markov_absorption_funnel(spark, str(tmp_path)).collect()
+    assert [r.start_state for r in got] == states
+    for r in got:
+        for k in (2, 4, 8):
+            assert r[f"p_absorb_{k}"] == round(loop[k][r.start_state], 6), (k, r)
 
 
 def test_array_dsum_is_sql_sum(spark):

@@ -43,7 +43,7 @@ from ucl_data_pipeline_spark.plans.extras39 import _KCORE_EDGES_SQL
 from ucl_data_pipeline_spark.plans.registry import (
     array_dsum,
     edge_terms,
-    fold_graph,
+    fold_steps,
     gather_graph,
     register,
 )
@@ -260,13 +260,11 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("from_type").alias("src"), F.col("to_type").alias("dst"),
         "n", "p_transition",
     )
-    # Nodes are the from-types: a to-only type has no out-edge, so it
-    # never feeds a from-type's iterate, and only from-types are output.
-    nf = F.transform("ns", lambda _, i: F.aggregate(
-        edge_terms(F.col("es"), i, "s", lambda e: e["n"]),
-        F.lit(0).cast("bigint"), lambda a, n: a + n,
-    ))
-    tot = F.aggregate("es.n", F.lit(0).cast("bigint"), lambda a, n: a + n)
+    # Nodes are the from-types with their transition counts, summed
+    # over every edge: a to-only type never feeds a from-type's iterate
+    # (gather_graph drops its edges), but its transitions still count.
+    states = tm.groupBy(F.col("src").alias("s")).agg(F.sum("n").alias("nf"))
+    tot = F.aggregate("nf", F.lit(0).cast("bigint"), lambda a, n: a + n)
     pi0 = F.transform("ns", lambda _: F.lit(1.0) / F.size("ns"))
 
     def step(pi: Column, es: Column) -> Column:
@@ -275,9 +273,9 @@ def markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             es, i, "d", lambda e: F.round(F.element_at(pi, e["s"]) * e["p_transition"], 12)
         )).cast("double"))
 
-    h = gather_graph(tm).select(
-        "ns", nf.alias("nf"), tot.alias("tot"),
-        fold_graph(pi0, step, _MARKOV_ITERS).alias("h"),
+    h = gather_graph(tm, states).select(
+        "ns", "nf", tot.alias("tot"),
+        fold_steps(pi0, step, _MARKOV_ITERS).alias("h"),
     ).select(F.posexplode("ns").alias("i", "event_type"), "nf", "tot", "h")
     p_cur = F.element_at(F.element_at("h", -1), F.col("i") + 1)
     p_prev = F.element_at(F.element_at("h", -2), F.col("i") + 1)

@@ -31,11 +31,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.functions.text import _let
-from ucl_data_pipeline_spark.plans.graph import nations, trade_lines
+from ucl_data_pipeline_spark.plans.graph import trade_lines
 from ucl_data_pipeline_spark.plans.registry import (
     array_dsum,
     edge_terms,
-    fold_graph,
+    fold_steps,
     gather_graph,
     register,
 )
@@ -177,8 +177,8 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     h0 = F.transform("ns", lambda _: F.lit(1.0 / _N_NODES))
     st0 = F.struct(h0.alias("auth"), h0.alias("hub"))
     return (
-        gather_graph(edges, nations(spark, sf_dir))
-        .select("ns", F.element_at(fold_graph(st0, step, _HITS_ITER), -1).alias("st"))
+        gather_graph(edges, read_table(spark, sf_dir, "nation").select("n_nationkey"))
+        .select("ns", F.element_at(fold_steps(st0, step, _HITS_ITER), -1).alias("st"))
         .select(F.posexplode("ns").alias("i", "node"), "st")
         .select(
             "node",

@@ -41,7 +41,7 @@ from ucl_data_pipeline_spark.plans.clustering import (
 from ucl_data_pipeline_spark.plans.registry import (
     array_dsum,
     edge_terms,
-    fold_graph,
+    fold_steps,
     gather_graph,
     register,
 )
@@ -279,6 +279,22 @@ ORDER BY start_state
 """
 
 
+def absorption_history(trans: DataFrame, target: str, k: int) -> DataFrame:
+    """One row (ns, h): the sorted from-states of the transition matrix
+    ``trans`` (src, dst, p) and the iterates h[i][j] = P(state ns[j]
+    reaches ``target`` within i steps), i = 0..k. ``target`` is held
+    absorbing; a state with no out-edge into ns stays at 0."""
+
+    def step(a: Column, es: Column) -> Column:
+        return F.transform("ns", lambda s, i: F.when(s == target, 1.0).otherwise(
+            F.round(F.coalesce(array_dsum(edge_terms(es, i, "s", lambda e: F.round(
+                e["p"] * F.element_at(a, e["d"]), 12))).cast("double"), F.lit(0.0)), 12)
+        ))
+
+    a0 = F.transform("ns", lambda s: F.when(s == target, 1.0).otherwise(0.0))
+    return gather_graph(trans).select("ns", fold_steps(a0, step, k).alias("h"))
+
+
 @register(
     "markov_absorption_funnel",
     oracle=_ABS_ORACLE,
@@ -323,14 +339,7 @@ def markov_absorption_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c").cast("double") / F.sum("c").over(w_src)).alias("p"),
     )
 
-    def step(a: Column, es: Column) -> Column:
-        return F.transform("ns", lambda s, i: F.when(s == _ABS_TARGET, 1.0).otherwise(
-            F.round(F.coalesce(array_dsum(edge_terms(es, i, "s", lambda e: F.round(
-                e["p"] * F.element_at(a, e["d"]), 12))).cast("double"), F.lit(0.0)), 12)
-        ))
-
-    a0 = F.transform("ns", lambda s: F.when(s == _ABS_TARGET, 1.0).otherwise(0.0))
-    h = gather_graph(trans).select("ns", fold_graph(a0, step, _ABS_STEPS).alias("h"))
+    h = absorption_history(trans, _ABS_TARGET, _ABS_STEPS)
     return (
         h.select(F.posexplode("ns").alias("i", "start_state"), "h")
         .select("start_state", *(

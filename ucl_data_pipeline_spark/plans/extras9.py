@@ -13,10 +13,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.graph import nations, trade_lines
+from ucl_data_pipeline_spark.plans.graph import trade_lines
 from ucl_data_pipeline_spark.plans.registry import (
     edge_terms,
-    fold_graph,
+    fold_steps,
     gather_graph,
     pdisc_rank,
     rank_select,
@@ -623,8 +623,8 @@ def cheapest_route_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d0 = F.transform("ns", lambda n: F.when(n == _BF_SOURCE, F.lit(0)).cast("bigint"))
     return (
-        gather_graph(edges, nations(spark, sf_dir))
-        .select("ns", F.element_at(fold_graph(d0, step, _BF_ITER), -1).alias("d"))
+        gather_graph(edges, read_table(spark, sf_dir, "nation").select("n_nationkey"))
+        .select("ns", F.element_at(fold_steps(d0, step, _BF_ITER), -1).alias("d"))
         .select(F.posexplode("ns").alias("i", "node"), "d")
         .select("node", F.element_at("d", F.col("i") + 1).alias("cost"))
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ucl_data_pipeline_spark.plans.registry import (
     array_dsum,
     edge_terms,
-    fold_graph,
+    fold_steps,
     gather_graph,
     register,
 )
@@ -98,11 +98,6 @@ def trade_lines(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     )
 
 
-def nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trade graph's node set: one ``node`` per nation."""
-    return read_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
-
-
 def pagerank_history(
     spark: SparkSession, sf_dir: str, n_iter: int = _N_ITER
 ) -> DataFrame:
@@ -136,8 +131,8 @@ def pagerank_history(
 
     r0 = F.transform("ns", lambda _: F.lit(1.0 / _N_NODES))
     return (
-        gather_graph(edges, nations(spark, sf_dir))
-        .select("ns", fold_graph(r0, step, n_iter).alias("h"))
+        gather_graph(edges, read_table(spark, sf_dir, "nation").select("n_nationkey"))
+        .select("ns", fold_steps(r0, step, n_iter).alias("h"))
         .select(F.posexplode("ns").alias("i", "node"), "h")
         .select(
             "node", F.transform("h", lambda r: F.element_at(r, F.col("i") + 1)).alias("ranks")
@@ -245,7 +240,7 @@ def bfs_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         gather_graph(edges, nodes)
-        .select("ns", F.element_at(fold_graph("d0", step, _BFS_ITER), -1).alias("d"))
+        .select("ns", F.element_at(fold_steps("d0", step, _BFS_ITER), -1).alias("d"))
         .select(F.posexplode("ns").alias("i", "node"), "d")
         .select("node", F.element_at("d", F.col("i") + 1).cast("int").alias("hops"))
     )

@@ -232,28 +232,21 @@ def r6(c: Column) -> Column:
 FOLD_DEC = "decimal(30,12)"
 
 
-def fold_steps(
-    init: Column | str, step: Callable[[Column], Column], k: int
-) -> Column:
-    """The iterates [x0, x1, ..., xk] of x_{i+1} = step(x_i) as one array
-    column: a single ``aggregate`` over ``sequence(1, k)``. ``step`` must
-    return init's type."""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(k)),
-        F.array(init),
-        lambda acc, _: F.concat(acc, F.array(step(F.element_at(acc, -1)))),
-    )
-
-
 def gather_graph(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """The one row a bounded-domain fold runs on. ``ns`` holds the sorted
-    keys of ``nodes``' first column (default: the distinct ``src`` of
-    ``edges``); each further ``nodes`` column becomes an array aligned
-    with ns. ``es`` holds the rows of ``edges`` (``src``, ``dst`` and any
-    payload) as structs with ``s`` and ``d`` added, the 1-based positions
-    of src and dst in ns. An edge with an endpoint outside ns is dropped,
-    as a superstep's inner join to the node states drops it. Callers
-    gather a dimension-sized matrix, never a row-count-sized one."""
+    keys of ``nodes``' first column; each further ``nodes`` column
+    becomes an array aligned with ns. ``es`` holds the rows of ``edges``
+    (``src``, ``dst`` and any payload) as structs with ``s`` and ``d``
+    added, the 1-based positions of src and dst in ns. An edge with an
+    endpoint outside ns is dropped, as a superstep's inner join to the
+    node states drops it. Callers gather a dimension-sized matrix, never
+    a row-count-sized one.
+
+    Without ``nodes``, ns is the distinct ``src`` of the gathered edges,
+    read inside the row. A node frame derived from ``edges`` instead
+    (``edges.select("src").distinct()``) is a second reference to their
+    fact-sized stage, and Catalyst prunes the two references apart, so
+    that stage runs twice."""
     es = F.collect_list(F.struct(*edges.columns)).alias("es")
     if nodes is None:
         ns = F.array_sort(F.array_distinct("es.src"))
@@ -274,13 +267,19 @@ def gather_graph(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     return g.withColumn("es", F.filter(at, lambda e: (e["s"] > 0) & (e["d"] > 0)))
 
 
-def fold_graph(
+def fold_steps(
     init: Column | str, step: Callable[[Column, Column], Column], k: int
 ) -> Column:
-    """``fold_steps`` over a ``gather_graph`` row: ``step(x, es)`` reads
-    the edges let-bound once per row (``_let``), so no superstep
+    """The iterates [x0, x1, ..., xk] of x_{i+1} = step(x_i, es) over a
+    ``gather_graph`` row, as one array column: a single ``aggregate``
+    over ``sequence(1, k)``. ``step`` must return init's type. The edges
+    ``es`` are let-bound once per row (``_let``), so no superstep
     re-derives their node positions."""
-    return _let(F.col("es"), lambda es: fold_steps(init, lambda x: step(x, es), k))
+    return _let(F.col("es"), lambda es: F.aggregate(
+        F.sequence(F.lit(1), F.lit(k)),
+        F.array(init),
+        lambda acc, _: F.concat(acc, F.array(step(F.element_at(acc, -1), es))),
+    ))
 
 
 def edge_terms(
