@@ -25,7 +25,7 @@ from ucl_data_pipeline_spark import plans  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from ucl_data_pipeline_spark.plans.core import pricing_summary
+    from ucl_data_pipeline_spark.plans.aggregates import pricing_summary
 
     return pricing_summary(spark, "/root/testdata/sf0.001")
 

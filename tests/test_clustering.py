@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.clustering import K, kmeans_clusters
+from ucl_data_pipeline_spark.plans.similarity import K, kmeans_clusters
 
 
 def test_kmeans_deterministic_and_complete(spark, sf_dir):
@@ -27,7 +27,7 @@ def test_kmeans_improves_on_init(spark, sf_dir):
     final_inertia = final.agg(F.sum("sq_dist")).collect()[0][0]
     # Init-only assignment (centroids = first K embeddings, 0 iterations)
     from ucl_data_pipeline_spark.functions import vector as VX
-    from ucl_data_pipeline_spark.plans.clustering import _sq_dist
+    from ucl_data_pipeline_spark.plans.similarity import _sq_dist
     from ucl_data_pipeline_spark.sources.io import read_table
     from pyspark.sql import Window
 
@@ -56,7 +56,7 @@ def test_kmeans_assign_partitions_corpus(spark, sf_dir):
     # cluster, cluster ids are the K fixed centers, and the per-cluster
     # counts are constant across dimensions (the agg is keyed by
     # (cluster, dim) over one assignment).
-    from ucl_data_pipeline_spark.plans.clustering import kmeans_assign
+    from ucl_data_pipeline_spark.plans.similarity import kmeans_assign
     from ucl_data_pipeline_spark.sources.io import read_table
 
     rows = kmeans_assign(spark, sf_dir).collect()

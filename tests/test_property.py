@@ -288,10 +288,7 @@ def test_bloom_filter_never_false_negative(spark, keys):
 
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras17 import (
-        _BLOOM_BITS,
-        _bloom_positions,
-    )
+    from ucl_data_pipeline_spark.plans.aggregates import _BLOOM_BITS, _bloom_positions
 
     df = spark.createDataFrame([(k,) for k in keys], "k: long")
     p1, p2 = _bloom_positions(F.col("k"))

@@ -149,9 +149,7 @@ def test_decile_cuts_one_buffer_matches_percentile_disc(spark):
     exercises the rank floor at 1."""
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras19 import (
-        _decile_cuts_one_buffer,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _decile_cuts_one_buffer
 
     for n in (1, 2, 3, 7, 10, 37, 150):
         # Deterministic, unsorted, with duplicates.

@@ -155,9 +155,7 @@ def test_cc_subgraph_propagation_identical_to_corpus_walk(spark, sf_dir):
     diameter-2 chain (multi-round propagation) and isolated docs."""
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.llm_ops import (
-        dedup_connected_components,
-    )
+    from ucl_data_pipeline_spark.plans.similarity import dedup_connected_components
     from ucl_data_pipeline_spark.sources.io import read_table
 
     pairs = [(7, 1), (1, 2), (410, 411), (2, 350)]  # chain + pair

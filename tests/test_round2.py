@@ -182,10 +182,7 @@ def test_read_table_restores_nanos_conf_and_pins_utc(spark):
 
 
 def test_pack_sequences_budget_structure(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops2 import (
-        _PACK_BUDGET,
-        pack_sequences_greedy,
-    )
+    from ucl_data_pipeline_spark.plans.text import _PACK_BUDGET, pack_sequences_greedy
 
     out = pack_sequences_greedy(spark, SF).collect()
     by_pack: dict[tuple, list] = {}
@@ -206,10 +203,7 @@ def test_pack_sequences_budget_structure(spark):
 
 
 def test_repetition_and_entropy_bounds(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops2 import (
-        repetition_score,
-        unigram_entropy,
-    )
+    from ucl_data_pipeline_spark.plans.text import repetition_score, unigram_entropy
 
     rep = repetition_score(spark, SF).collect()
     assert all(0.0 <= r.dup_frac <= 1.0 for r in rep)
@@ -223,7 +217,7 @@ def test_repetition_and_entropy_bounds(spark):
 
 
 def test_contamination_fraction_bounds(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops2 import contamination_ngram_overlap
+    from ucl_data_pipeline_spark.plans.text import contamination_ngram_overlap
 
     out = contamination_ngram_overlap(spark, SF).collect()
     assert len(out) > 0
@@ -240,8 +234,8 @@ def test_contamination_fraction_bounds(spark):
 
 
 def test_sq8_topk_structure_and_recall(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops import embedding_ivf_topk
-    from ucl_data_pipeline_spark.plans.llm_ops3 import embedding_sq8_topk
+    from ucl_data_pipeline_spark.plans.similarity import embedding_ivf_topk
+    from ucl_data_pipeline_spark.plans.similarity import embedding_sq8_topk
 
     sq = embedding_sq8_topk(spark, SF).collect()
     by_q: dict[int, list] = {}
@@ -274,8 +268,8 @@ def test_sq8_topk_structure_and_recall(spark):
 
 
 def test_containment_dominates_jaccard(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops import jaccard_shingle_pairs
-    from ucl_data_pipeline_spark.plans.llm_ops3 import shingle_containment_pairs
+    from ucl_data_pipeline_spark.plans.similarity import jaccard_shingle_pairs
+    from ucl_data_pipeline_spark.plans.similarity import shingle_containment_pairs
 
     cont = {
         (r.doc_a, r.doc_b): (r.containment_a, r.containment_b)
@@ -293,7 +287,7 @@ def test_containment_dominates_jaccard(spark):
 
 
 def test_url_normalize_canonical_form(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops3 import url_normalize
+    from ucl_data_pipeline_spark.plans.text import url_normalize
 
     rows = url_normalize(spark, SF).collect()
     assert len(rows) > 0
@@ -309,7 +303,7 @@ def test_url_normalize_canonical_form(spark):
 
 
 def test_mixture_weights_sum_to_one(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops3 import domain_mixture_weights
+    from ucl_data_pipeline_spark.plans.text import domain_mixture_weights
 
     rows = domain_mixture_weights(spark, SF).collect()
     assert abs(sum(r.p for r in rows) - 1.0) < 1e-9
@@ -362,7 +356,7 @@ def test_cli_list_and_run(capsys):
 
 
 def test_boilerplate_chunk_removal_semantics(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops3 import (
+    from ucl_data_pipeline_spark.plans.similarity import (
         _BOILER_DF,
         boilerplate_chunk_removal,
     )

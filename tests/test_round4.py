@@ -22,7 +22,7 @@ def test_rendezvous_minimal_relocation(spark):
     # THE property that justifies rendezvous over mod-N: dropping one
     # shard relocates ONLY the docs that lived on it; every other doc
     # keeps its shard (its winning weight is unchanged and still wins).
-    from ucl_data_pipeline_spark.plans.extras3 import rendezvous_pick
+    from ucl_data_pipeline_spark.plans.text import rendezvous_pick
     from ucl_data_pipeline_spark.sources.io import read_table
 
     d = read_table(spark, SF_SMOKE, "documents").select("doc_id")
@@ -68,7 +68,7 @@ def test_twap_hand_computed(spark):
         "event_id: long, user_id: long, ts: string, value: double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
-    import ucl_data_pipeline_spark.plans.extras3 as m
+    import ucl_data_pipeline_spark.plans.temporal as m
 
     path = None  # reuse the registered fn via a temp view-free call:
     # the query only needs (user_id, value, ts, event_id) from `events`;
@@ -90,7 +90,7 @@ def test_twap_hand_computed(spark):
 
 
 def test_transition_rows_sum_to_one(spark):
-    from ucl_data_pipeline_spark.plans.extras3 import event_transition_matrix
+    from ucl_data_pipeline_spark.plans.temporal import event_transition_matrix
 
     rows = event_transition_matrix(spark, SF_SMOKE).collect()
     assert rows, "transition matrix must be non-empty"
@@ -113,7 +113,7 @@ def test_triangle_count_known_graph(spark):
     # sits in C(3,2)=3 triangles, node 4 in none. Inject via the same
     # monkeypatch seam as TWAP (the query derives edges from the four
     # fact/dim tables; feed it a fact set that produces exactly K4+tail).
-    import ucl_data_pipeline_spark.plans.extras3 as m
+    import ucl_data_pipeline_spark.plans.graph as m
 
     edges = [(a, b) for a in range(4) for b in range(4) if a < b] + [(3, 4)]
     # one order/lineitem per directed edge: supplier nation -> cust nation
@@ -153,7 +153,7 @@ def test_triangle_count_known_graph(spark):
 
 def test_pmi_identity_bound(spark):
     # PMI(a,b) <= min(-log2 p(a), -log2 p(b)): co <= min(df_a, df_b).
-    from ucl_data_pipeline_spark.plans.extras3 import token_pmi_pairs
+    from ucl_data_pipeline_spark.plans.text import token_pmi_pairs
 
     rows = token_pmi_pairs(spark, SF_SMOKE).collect()
     if not rows:  # sf0.001 corpus may not clear the thresholds

@@ -476,7 +476,7 @@ def test_sliding_dau_bounds(spark):
 
 
 def test_apportion_exact_budget(spark):
-    from ucl_data_pipeline_spark.plans.extras9 import _APPORTION_BUDGET
+    from ucl_data_pipeline_spark.plans.text import _APPORTION_BUDGET
 
     rows = _run(spark, "largest_remainder_apportion").collect()
     assert rows
@@ -546,11 +546,7 @@ def test_scd2_pit_resolves_versions(spark):
 
 
 def test_holt_matches_direct_recursion(spark):
-    from ucl_data_pipeline_spark.plans.extras9 import (
-        _HOLT_ALPHA,
-        _HOLT_BETA,
-        _HOLT_N,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import _HOLT_ALPHA, _HOLT_BETA, _HOLT_N
     from ucl_data_pipeline_spark.sources.io import read_table
 
     row = _run(spark, "holt_linear_forecast").collect()[0]
@@ -578,7 +574,7 @@ def test_holt_matches_direct_recursion(spark):
 
 
 def test_cheapest_route_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras9 import _BF_ITER, _BF_SOURCE
+    from ucl_data_pipeline_spark.plans.graph import _BF_ITER, _BF_SOURCE
 
     rows = {r.node: r.cost for r in _run(spark, "cheapest_route_nations").collect()}
     # rebuild the edge list with the same integer weights
@@ -621,7 +617,7 @@ def test_cheapest_route_matches_reference(spark):
 
 
 def test_prefix_filter_complete(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops import _rep_features
+    from ucl_data_pipeline_spark.plans.similarity import _rep_features
 
     got = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -827,7 +823,7 @@ def test_trending_top3_consistent(spark):
 
 
 def test_recursive_matches_reference_bfs(spark):
-    from ucl_data_pipeline_spark.plans.extras11 import _REC_DEPTH, _REC_SOURCE
+    from ucl_data_pipeline_spark.plans.tpch import _REC_DEPTH, _REC_SOURCE
     from ucl_data_pipeline_spark.sources.io import read_table
 
     got = {r.node: r.min_depth

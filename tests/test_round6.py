@@ -23,13 +23,10 @@ from __future__ import annotations
 import datetime
 import os
 
-from ucl_data_pipeline_spark.plans.extras16 import (
-    dup_span_fraction,
-    ks_two_sample_drift,
-    mann_whitney_u,
-)
-from ucl_data_pipeline_spark.plans.extras4 import ann_recall_ivf_at_3
-from ucl_data_pipeline_spark.plans.extras17 import ann_recall_ivf2_at_3
+from ucl_data_pipeline_spark.plans.stats import ks_two_sample_drift, mann_whitney_u
+from ucl_data_pipeline_spark.plans.text import dup_span_fraction
+from ucl_data_pipeline_spark.plans.similarity import ann_recall_ivf_at_3
+from ucl_data_pipeline_spark.plans.similarity import ann_recall_ivf2_at_3
 
 
 def _words(n: int, tag: str) -> str:
@@ -132,10 +129,8 @@ def test_spearman_grain_equals_window_spelling(spark, sf_dir):
     window spelling EXACTLY (midrank = #rows<v + (cnt+1)/2 is an
     identity, not an approximation) — this equality is what licenses
     swapping in the grain plan at scale."""
-    from ucl_data_pipeline_spark.plans.extras17 import spearman_price_qty
-    from ucl_data_pipeline_spark.plans.extras18 import (
-        spearman_rank_via_grain,
-    )
+    from ucl_data_pipeline_spark.plans.stats import spearman_price_qty
+    from ucl_data_pipeline_spark.plans.stats import spearman_rank_via_grain
 
     a = {
         r["flag"]: (r["n"], r["spearman_rho"])

@@ -56,7 +56,7 @@ def test_shingles_values_and_short_input_guard(spark):
 
 
 def test_ann_recall_frontier_monotone(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras17 import ann_recall_frontier
+    from ucl_data_pipeline_spark.plans.similarity import ann_recall_frontier
 
     rows = sorted(
         ann_recall_frontier(spark, sf_dir).collect(),
@@ -153,9 +153,9 @@ def test_frontier_family_curves(spark, sf_dir):
     # - Contamination rate falls as grams lengthen (an 8-gram match
     #   contains 5-gram matches; distinct-instance rates on the
     #   fixture follow).
-    from ucl_data_pipeline_spark.plans.extras21 import (
+    from ucl_data_pipeline_spark.plans.similarity import minhash_size_frontier
+    from ucl_data_pipeline_spark.plans.text import (
         contamination_gram_frontier,
-        minhash_size_frontier,
         pack_budget_frontier,
     )
 
@@ -190,7 +190,7 @@ def test_curation_pipeline_ladder(spark, sf_dir):
     # Structural invariants of the end-to-end composite: one row per
     # input doc; kept rows (and ONLY kept rows) carry split + pack_id;
     # the benchmark count matches the doc_id % 97 rule.
-    from ucl_data_pipeline_spark.plans.extras21 import curation_pipeline
+    from ucl_data_pipeline_spark.plans.text import curation_pipeline
     from ucl_data_pipeline_spark.sources.io import read_table
 
     rows = curation_pipeline(spark, sf_dir).collect()
@@ -241,7 +241,7 @@ def test_theil_sen_matches_python_reference(spark, sf_dir):
     k = (len(slopes) + 1) // 2
     expect_n, expect_med = len(slopes), slopes[k - 1]
 
-    from ucl_data_pipeline_spark.plans.extras22 import theil_sen_slope_daily
+    from ucl_data_pipeline_spark.plans.temporal import theil_sen_slope_daily
 
     row = theil_sen_slope_daily(spark, sf_dir).collect()[0]
     assert row["n_pairs"] == expect_n
@@ -258,7 +258,7 @@ def test_kendall_tau_matches_contingency_reference(spark, sf_dir):
 
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_returnflag", "l_discount", "l_tax"])
-    from ucl_data_pipeline_spark.plans.extras22 import kendall_tau_via_grain
+    from ucl_data_pipeline_spark.plans.stats import kendall_tau_via_grain
 
     got = {r["flag"]: r for r in kendall_tau_via_grain(spark, sf_dir).collect()}
     for flag, sub in li.groupby("l_returnflag"):
@@ -303,7 +303,7 @@ def test_erfc_polynomial_matches_math_erfc():
 
 
 def test_benjamini_hochberg_stepup_properties(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras22 import benjamini_hochberg_promo
+    from ucl_data_pipeline_spark.plans.stats import benjamini_hochberg_promo
 
     rows = sorted(
         benjamini_hochberg_promo(spark, sf_dir).collect(),
@@ -351,7 +351,7 @@ def test_brown_forsythe_matches_python_reference(spark, sf_dir):
     f_expect = ((n_total - k) / (k - 1)) * (
         sum_sq_over_n - s_all * s_all / n_total) / ssw
 
-    from ucl_data_pipeline_spark.plans.extras22 import brown_forsythe_priority
+    from ucl_data_pipeline_spark.plans.stats import brown_forsythe_priority
 
     row = brown_forsythe_priority(spark, sf_dir).collect()[0]
     assert (row["n_groups"], row["n_total"]) == (k, n_total)
@@ -379,7 +379,7 @@ def test_page_hinkley_matches_python_reference(spark, sf_dir):
         mmin = min(mmin, m)
         expect.append((day, float(r6(m - mmin))))
 
-    from ucl_data_pipeline_spark.plans.extras22 import page_hinkley_drift_daily
+    from ucl_data_pipeline_spark.plans.temporal import page_hinkley_drift_daily
 
     got = sorted(
         page_hinkley_drift_daily(spark, sf_dir).collect(),
@@ -422,9 +422,7 @@ def test_assortativity_matches_python_reference(spark, sf_dir):
            * math.sqrt(n * int((v * v).sum()) - int(v.sum()) ** 2))
     expect = None if den == 0 else round(num / den, 6)
 
-    from ucl_data_pipeline_spark.plans.extras22 import (
-        degree_assortativity_trade,
-    )
+    from ucl_data_pipeline_spark.plans.graph import degree_assortativity_trade
 
     row = degree_assortativity_trade(spark, sf_dir).collect()[0]
     assert row["n_edges"] == n
@@ -463,7 +461,7 @@ def test_source_jsd_matches_python_reference(spark, sf_dir):
                 s += q * math.log2(2 * q / (p + q))
         return s / 2
 
-    from ucl_data_pipeline_spark.plans.extras23 import source_jsd_matrix
+    from ucl_data_pipeline_spark.plans.text import source_jsd_matrix
 
     rows = source_jsd_matrix(spark, sf_dir).collect()
     srcs = sorted(dist)
@@ -476,8 +474,8 @@ def test_source_jsd_matches_python_reference(spark, sf_dir):
 
 
 def test_ann_rrf_fusion_invariants(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras23 import _RRF_K, ann_rrf_fusion
-    from ucl_data_pipeline_spark.plans.llm_ops import (
+    from ucl_data_pipeline_spark.plans.similarity import _RRF_K, ann_rrf_fusion
+    from ucl_data_pipeline_spark.plans.similarity import (
         embedding_ivf_topk,
         embedding_lsh_topk,
     )
@@ -511,7 +509,7 @@ def test_ann_rrf_fusion_invariants(spark, sf_dir):
 
 
 def test_dedup_threshold_frontier_monotone(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras24 import dedup_threshold_frontier
+    from ucl_data_pipeline_spark.plans.similarity import dedup_threshold_frontier
 
     rows = sorted(
         dedup_threshold_frontier(spark, sf_dir).collect(),
@@ -534,9 +532,7 @@ def test_dedup_threshold_frontier_monotone(spark, sf_dir):
 
 
 def test_watermark_lateness_frontier_monotone(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras24 import (
-        watermark_lateness_frontier,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import watermark_lateness_frontier
 
     rows = sorted(
         watermark_lateness_frontier(spark, sf_dir).collect(),
@@ -587,7 +583,7 @@ def test_logrank_matches_python_reference(spark, sf_dir):
         n0r -= int((cell["grp"] == 0).sum())
     chi2 = (o1 - e1) ** 2 / v
 
-    from ucl_data_pipeline_spark.plans.extras25 import logrank_survival_ab
+    from ucl_data_pipeline_spark.plans.stats import logrank_survival_ab
 
     row = logrank_survival_ab(spark, sf_dir).collect()[0]
     assert (row["n_users_a"], row["n_users_b"]) == (na, nb)
@@ -603,7 +599,7 @@ def test_tokenizer_fertility_matches_python_reference(spark, sf_dir):
 
     d = pd.read_parquet(f"{sf_dir}/documents.parquet",
                         columns=["lang", "n_chars", "text"])
-    from ucl_data_pipeline_spark.plans.extras25 import tokenizer_fertility
+    from ucl_data_pipeline_spark.plans.text import tokenizer_fertility
 
     got = {r["lang"]: r for r in tokenizer_fertility(spark, sf_dir).collect()}
     for lang, sub in d.groupby("lang"):
@@ -622,7 +618,7 @@ def test_srm_gate_flags_biased_splitter(spark, sf_dir):
     # biased assignment (70/20/10 observed vs 80/10/10 declared at
     # n=500) would exceed the 2-df critical value — computed here
     # directly to pin the flag threshold's meaning.
-    from ucl_data_pipeline_spark.plans.extras26 import _SRM_CRIT, srm_check_split
+    from ucl_data_pipeline_spark.plans.stats import _SRM_CRIT, srm_check_split
 
     row = srm_check_split(spark, sf_dir).collect()[0]
     assert row["n_docs"] == row["n_train"] + row["n_val"] + row["n_test"]
@@ -651,7 +647,7 @@ def test_bm25_matches_python_reference(spark, sf_dir):
 
     import pandas as pd
 
-    from ucl_data_pipeline_spark.plans.extras26 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _BM25_B,
         _BM25_K1,
         _BM25_TERMS,
@@ -735,10 +731,7 @@ def test_nbits_ladder_values(spark):
 def test_source_overlap_matrix_shape(spark, sf_dir):
     """Every unordered source pair appears exactly once; the estimate
     is n_agree/16 by construction and bounded in [0, 1]."""
-    from ucl_data_pipeline_spark.plans.extras27 import (
-        _N_PERM,
-        source_minhash_overlap,
-    )
+    from ucl_data_pipeline_spark.plans.similarity import _N_PERM, source_minhash_overlap
 
     n_src = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -808,7 +801,7 @@ def test_source_overlap_plan_shape(spark, sf_dir):
     partial_min combine (shuffle bytes independent of corpus size) and
     the pairwise stage is a broadcast join over the aggregated table —
     never a cartesian doc-pair stage."""
-    from ucl_data_pipeline_spark.plans.extras27 import source_minhash_overlap
+    from ucl_data_pipeline_spark.plans.similarity import source_minhash_overlap
 
     df = source_minhash_overlap(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -829,10 +822,7 @@ def test_join_cardinality_audit_semantics(spark, sf_dir):
     uniform-frequency meets skew: q_error must exceed 1 there iff the
     per-nation count products deviate from uniform. q_error >= 1 is a
     mathematical invariant (max(r, 1/r))."""
-    from ucl_data_pipeline_spark.plans.extras28 import (
-        _FK_JOINS,
-        join_cardinality_audit,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _FK_JOINS, join_cardinality_audit
 
     rows = {r["join_name"]: r for r in join_cardinality_audit(spark, sf_dir).collect()}
     assert set(rows) == {name for name, *_ in _FK_JOINS}
@@ -864,7 +854,7 @@ def test_join_cardinality_audit_plan_shape(spark, sf_dir):
     map-side partial_count combine BEFORE any join; the only
     non-equi-join stages are the broadcast singleton cross-joins. No
     CartesianProduct, no row-level join of the base tables."""
-    from ucl_data_pipeline_spark.plans.extras28 import join_cardinality_audit
+    from ucl_data_pipeline_spark.plans.stats import join_cardinality_audit
 
     df = join_cardinality_audit(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -881,10 +871,7 @@ def test_join_skew_advisor_semantics(spark, sf_dir):
     (0, 1], mean_cnt recomputes from the row's own integers, and the
     events.user_id profile matches an independently-spelled pandas
     computation (value_counts on the tiny fixture)."""
-    from ucl_data_pipeline_spark.plans.extras29 import (
-        _SKEW_KEYS,
-        join_skew_advisor,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _SKEW_KEYS, join_skew_advisor
 
     rows = {r["key_col"]: r for r in join_skew_advisor(spark, sf_dir).collect()}
     assert set(rows) == {label for label, *_ in _SKEW_KEYS}
@@ -927,7 +914,7 @@ def test_join_skew_advisor_plan_shape(spark, sf_dir):
     rows — grain hash-agg with map-side partial_count; the argmax and
     advisory math run on the NDV-grain table via broadcast singletons.
     No CartesianProduct, no sort, no row-level self-join."""
-    from ucl_data_pipeline_spark.plans.extras29 import join_skew_advisor
+    from ucl_data_pipeline_spark.plans.stats import join_skew_advisor
 
     df = join_skew_advisor(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -951,7 +938,7 @@ def test_doc_lm_cross_entropy_semantics(spark, sf_dir):
     import math
     import tempfile
 
-    from ucl_data_pipeline_spark.plans.extras30 import doc_lm_cross_entropy
+    from ucl_data_pipeline_spark.plans.text import doc_lm_cross_entropy
 
     docs = [
         ("d1", "common common common common common common"),
@@ -995,7 +982,7 @@ def test_doc_lm_cross_entropy_plan_shape(spark, sf_dir):
     every shuffle is a grain hash-agg with map-side partial combine;
     the total-token scalar joins as a broadcast singleton. No
     CartesianProduct."""
-    from ucl_data_pipeline_spark.plans.extras30 import doc_lm_cross_entropy
+    from ucl_data_pipeline_spark.plans.text import doc_lm_cross_entropy
 
     df = doc_lm_cross_entropy(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -1016,7 +1003,7 @@ def test_kmv_sketch_python_reference(spark, sf_dir):
     parquet file."""
     import hashlib
 
-    from ucl_data_pipeline_spark.plans.extras31 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _AUDIT_COLS,
         _EST_NUM,
         _K,
@@ -1058,7 +1045,7 @@ def test_kmv_small_cardinality_branch(spark):
     the estimator must return the exact count with zero error."""
     import tempfile
 
-    from ucl_data_pipeline_spark.plans.extras31 import _kmv_one
+    from ucl_data_pipeline_spark.plans.stats import _kmv_one
 
     with tempfile.TemporaryDirectory() as td:
         spark.createDataFrame(
@@ -1074,7 +1061,7 @@ def test_kmv_plan_shape(spark, sf_dir):
     """PLANS.md property: the bottom-k is TakeOrderedAndProject over
     the NDV-grain distinct-hash table (per-partition top-k + k-row
     merge), never a global sort exchange; no CartesianProduct."""
-    from ucl_data_pipeline_spark.plans.extras31 import ndv_kmv_sketch_error
+    from ucl_data_pipeline_spark.plans.stats import ndv_kmv_sketch_error
 
     df = ndv_kmv_sketch_error(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -1092,7 +1079,7 @@ def test_copurchase_pairs_no_join_plan(spark, sf_dir):
     operator left to mis-size (the old basket self-join's fact-sized
     build side was getting auto-broadcast). partial_ aggregation
     (map-side combine) must appear for the collect_set stage."""
-    from ucl_data_pipeline_spark.plans.extras3 import copurchase_pairs
+    from ucl_data_pipeline_spark.plans.tpch import copurchase_pairs
 
     df = copurchase_pairs(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -1110,7 +1097,7 @@ def test_kmv_merge_parity_gate(spark, sf_dir):
     the union of per-source bottom-k sketches equals the direct
     global bottom-k — same k-th minimum, same sketch size, gate true.
     Per-source rows carry a NULL gate; row count = |sources| + 2."""
-    from ucl_data_pipeline_spark.plans.extras32 import kmv_merge_parity
+    from ucl_data_pipeline_spark.plans.stats import kmv_merge_parity
 
     rows = kmv_merge_parity(spark, sf_dir).collect()
     by_scope = {r["scope"]: r for r in rows}
@@ -1136,7 +1123,7 @@ def test_kmv_merge_parity_plan_shape(spark, sf_dir):
     WITHIN source partitions; the merged bottom-k is a TakeOrdered
     over the sketch-sized pool (k x |sources| rows max). No
     CartesianProduct."""
-    from ucl_data_pipeline_spark.plans.extras32 import kmv_merge_parity
+    from ucl_data_pipeline_spark.plans.stats import kmv_merge_parity
 
     df = kmv_merge_parity(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
@@ -1183,10 +1170,10 @@ def test_quantile_sample_python_reference(spark, sf_dir):
     import hashlib
     import math
 
-    from ucl_data_pipeline_spark.plans.extras33 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _QS,
+        _QSAMPLE_TAG as _TAG,
         _SAMPLE_K,
-        _TAG,
         quantile_sample_error,
     )
 
@@ -1222,7 +1209,7 @@ def test_quantile_sample_plan_shape(spark, sf_dir):
     never shuffled; the exact side is the audited-against full
     aggregate. No CartesianProduct beyond the broadcast singleton
     cross."""
-    from ucl_data_pipeline_spark.plans.extras33 import quantile_sample_error
+    from ucl_data_pipeline_spark.plans.stats import quantile_sample_error
 
     df = quantile_sample_error(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(

@@ -147,10 +147,7 @@ def test_percentile_sketch_rank_error_within_band(spark, sf_dir):
     4-sigma rank band of the true median: |F(sample_median) - 0.5|
     <= 4 * 1/(2*sqrt(k)) = 0.125. Rank (not value) error is the
     quantity the estimator controls."""
-    from ucl_data_pipeline_spark.plans.extras34 import (
-        _PS_K,
-        percentile_sketch_error,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _PS_K, percentile_sketch_error
     from ucl_data_pipeline_spark.sources.io import read_table
 
     rows = percentile_sketch_error(spark, sf_dir).collect()
@@ -168,10 +165,7 @@ def test_percentile_sketch_rank_error_within_band(spark, sf_dir):
 
 
 def test_pagerank_residual_contracts_and_converged(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras34 import (
-        _PR_TOL,
-        pagerank_residual_audit,
-    )
+    from ucl_data_pipeline_spark.plans.graph import _PR_TOL, pagerank_residual_audit
 
     [r] = pagerank_residual_audit(spark, sf_dir).collect()
     assert r["n_nodes"] == 25
@@ -185,7 +179,7 @@ def test_pagerank_residual_contracts_and_converged(spark, sf_dir):
 
 
 def test_cc_supersteps_reach_fixpoint(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras34 import cc_superstep_convergence
+    from ucl_data_pipeline_spark.plans.similarity import cc_superstep_convergence
 
     rows = sorted(
         cc_superstep_convergence(spark, sf_dir).collect(),
@@ -200,7 +194,7 @@ def test_cc_supersteps_reach_fixpoint(spark, sf_dir):
 
 
 def test_salted_exec_fans_out_and_merge_joins(spark, sf_dir):
-    from ucl_data_pipeline_spark.plans.extras34 import join_skew_salted_exec
+    from ucl_data_pipeline_spark.plans.tpch import join_skew_salted_exec
 
     df = join_skew_salted_exec(spark, sf_dir)
     rows = df.collect()
@@ -288,10 +282,7 @@ def test_robust_zscore_sketch_parity_frontier(spark, sf_dir):
     """Decision-level substitution audit: sampled cuts UNDER-flag
     (precision stays >= 0.97 on every row) and the worst-group recall
     improves monotonically with sample size k."""
-    from ucl_data_pipeline_spark.plans.extras34 import (
-        _RZ_KS,
-        robust_zscore_sketch_parity,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _RZ_KS, robust_zscore_sketch_parity
 
     rows = robust_zscore_sketch_parity(spark, sf_dir).collect()
     assert len(rows) == 5 * len(_RZ_KS)
@@ -319,7 +310,7 @@ def test_percentile_sketch_python_reference(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from ucl_data_pipeline_spark.plans.extras34 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _PS_K,
         _PS_TAG,
         percentile_sketch_error,
@@ -362,7 +353,7 @@ def test_zorder_beats_linear_on_2d_probes(spark, sf_dir):
     the Z-ordered layout reads no more files and strictly less data
     than the linear sort, and the Morton-aligned window collapses to
     a single file with amplification exactly 1.0."""
-    from ucl_data_pipeline_spark.plans.extras35 import zorder_layout_audit
+    from ucl_data_pipeline_spark.plans.aggregates import zorder_layout_audit
 
     rows = {
         (r["layout"], r["probe"]): r
@@ -387,7 +378,7 @@ def test_theta_intersection_sketch_properties(spark, sf_dir):
     inside the documented band for this overlap regime."""
     import statistics
 
-    from ucl_data_pipeline_spark.plans.extras36 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _K,
         _U,
         ndv_intersection_sketch_error,
@@ -413,7 +404,7 @@ def test_morton_interleave_property(spark):
     bits of z are the interleave of the top 3 bits of qx and qy."""
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras35 import _morton_col
+    from ucl_data_pipeline_spark.plans.aggregates import _morton_col
 
     def py_morton(qx: int, qy: int) -> int:
         z = 0
@@ -465,9 +456,9 @@ def test_theta_intersection_python_reference(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from ucl_data_pipeline_spark.plans.extras36 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _K,
-        _TAG,
+        _NDV_INTERSECT_TAG as _TAG,
         _U,
         ndv_intersection_sketch_error,
     )
@@ -511,9 +502,7 @@ def test_mv_incremental_equals_recompute(spark, sf_dir):
     and deletes."""
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras37 import (
-        mv_incremental_agg_parity,
-    )
+    from ucl_data_pipeline_spark.plans.aggregates import mv_incremental_agg_parity
     from ucl_data_pipeline_spark.sources.io import read_table
 
     o = read_table(spark, sf_dir, "orders").select(
@@ -554,11 +543,9 @@ def test_canonical_selection_prefers_quality_over_min_id(spark, sf_dir):
     otherwise the operator adds nothing over pairwise dedup."""
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras38 import cc_canonical_selection
-    from ucl_data_pipeline_spark.plans.llm_ops import (
-        dedup_connected_components,
-        text_quality_score,
-    )
+    from ucl_data_pipeline_spark.plans.similarity import cc_canonical_selection
+    from ucl_data_pipeline_spark.plans.similarity import dedup_connected_components
+    from ucl_data_pipeline_spark.plans.text import text_quality_score
 
     rows = cc_canonical_selection(spark, sf_dir).collect()
     assert rows, "fixture must contain multi-member components"

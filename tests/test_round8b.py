@@ -17,7 +17,7 @@ def test_kcore_six_rounds_is_a_fixpoint(spark):
     a truncation) must hold at sf0.01 where peeling is non-trivial
     (3 measured peel rounds): round 5 and round 6 outputs are
     identical, and peeling actually removed nodes vs round 0."""
-    from ucl_data_pipeline_spark.plans.extras39 import kcore_peel
+    from ucl_data_pipeline_spark.plans.graph import kcore_peel
 
     sf = "/root/testdata/sf0.01"
     r5 = {tuple(r) for r in kcore_peel(spark, sf, 5).collect()}
@@ -33,7 +33,7 @@ def test_attribution_columns_sum_to_total_conversion_value(spark, sf_dir):
     columns must sum (across channels) to the total purchase value.
     Tolerance covers only the per-term ROUND(...,12)/ROUND(...,6)
     quantization."""
-    from ucl_data_pipeline_spark.plans.extras39 import attribution_multi_touch
+    from ucl_data_pipeline_spark.plans.tpch import attribution_multi_touch
     from ucl_data_pipeline_spark.sources.io import read_table
 
     total = (
@@ -52,7 +52,7 @@ def test_t_closeness_matches_pandas_reference(spark, sf_dir):
     """TVD per QI group recomputed straight from the parquet with
     pandas (float formula, no integer restatement) must agree with the
     exact-integer Spark spelling to the rounding the query emits."""
-    from ucl_data_pipeline_spark.plans.extras39 import t_closeness_check
+    from ucl_data_pipeline_spark.plans.aggregates import t_closeness_check
 
     df = pd.read_parquet(f"{sf_dir}/customer.parquet")
     df["bal_band"] = np.floor(df.c_acctbal / 2000).astype(int)
@@ -80,11 +80,8 @@ def test_auc_matches_bruteforce_pairwise(spark, sf_dir):
     the quantized buckets (numpy outer comparison — viable at
     sf0.001's doc count, independent of both engines' window/agg
     spellings)."""
-    from ucl_data_pipeline_spark.plans.extras39 import (
-        _AUC_BUCKETS,
-        auc_quality_langid,
-    )
-    from ucl_data_pipeline_spark.plans.llm_ops import text_quality_score
+    from ucl_data_pipeline_spark.plans.stats import _AUC_BUCKETS, auc_quality_langid
+    from ucl_data_pipeline_spark.plans.text import text_quality_score
 
     q = {
         r.doc_id: r.quality_score
@@ -116,9 +113,7 @@ def test_clustering_coeff_matches_bruteforce(spark, sf_dir):
     set intersection over the same support>=2 edge list (pure Python,
     no degree ordering, no SQL) — agreement proves the compact-forward
     orientation counts every triangle exactly once."""
-    from ucl_data_pipeline_spark.plans.extras40 import (
-        clustering_coeff_copurchase,
-    )
+    from ucl_data_pipeline_spark.plans.graph import clustering_coeff_copurchase
 
     df = pd.read_parquet(f"{sf_dir}/lineitem.parquet")[
         ["l_orderkey", "l_partkey"]
@@ -151,8 +146,8 @@ def test_markov_stationary_converged_and_matches_numpy(spark, sf_dir):
     ~0 (the convergence witness the abs_delta column exists for),
     (b) sum to ~1, and (c) match an independent numpy power iteration
     from the same registered transition matrix."""
-    from ucl_data_pipeline_spark.plans.extras3 import event_transition_matrix
-    from ucl_data_pipeline_spark.plans.extras40 import (
+    from ucl_data_pipeline_spark.plans.temporal import event_transition_matrix
+    from ucl_data_pipeline_spark.plans.temporal import (
         _MARKOV_ITERS,
         markov_stationary_events,
     )
@@ -179,8 +174,8 @@ def test_reciprocal_best_match_properties_and_reconstruction(spark, sf_dir):
     candidate list by an independent python argmax+mutuality pass and
     (b) be a PARTIAL MATCHING: mutual-best pairs are disjoint — no
     document appears in two output pairs."""
-    from ucl_data_pipeline_spark.plans.extras41 import reciprocal_best_match
-    from ucl_data_pipeline_spark.plans.llm_ops import (
+    from ucl_data_pipeline_spark.plans.similarity import reciprocal_best_match
+    from ucl_data_pipeline_spark.plans.similarity import (
         _rep_features,
         lsh_candidate_pairs,
     )
@@ -230,7 +225,7 @@ def test_bag_jaccard_matches_python_token_bags(spark, sf_dir):
     required (repetition can push either way) but both are in [0,1]."""
     from collections import Counter
 
-    from ucl_data_pipeline_spark.plans.extras41 import bag_jaccard_pairs
+    from ucl_data_pipeline_spark.plans.similarity import bag_jaccard_pairs
 
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")[["doc_id", "text"]]
     rep = docs.loc[docs.groupby("text").doc_id.idxmin()]
@@ -254,8 +249,8 @@ def test_quality_gate_disparity_structure_and_pandas_rates(spark, sf_dir):
     all ratios are in (0, 1], the flag equals ratio < 0.8, and the
     pass counts match a pandas recount from the registered quality
     scores."""
-    from ucl_data_pipeline_spark.plans.extras41 import quality_gate_disparity
-    from ucl_data_pipeline_spark.plans.llm_ops import text_quality_score
+    from ucl_data_pipeline_spark.plans.text import quality_gate_disparity
+    from ucl_data_pipeline_spark.plans.text import text_quality_score
 
     q = {
         r.doc_id: r.quality_score

@@ -27,7 +27,7 @@ def test_winnowing_matches_python_reference(spark):
     """Winnowing recomputed per the SIGMOD'03 pseudocode (explicit
     window loop, rightmost-min tie rule) must reproduce the engine's
     n_fps / n_fp_hashes / density for every document."""
-    from ucl_data_pipeline_spark.plans.extras42 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _WIN_K,
         _WIN_W,
         winnowing_fingerprints,
@@ -72,7 +72,7 @@ def test_winnowing_density_near_guarantee(spark):
     """Corpus-mean selected density should sit near the paper's
     2/(w+1) expectation for random hashes (w=4 → 0.4). md5 over the
     31-word vocabulary's 4-grams is random enough for a wide band."""
-    from ucl_data_pipeline_spark.plans.extras42 import winnowing_fingerprints
+    from ucl_data_pipeline_spark.plans.text import winnowing_fingerprints
 
     rows = winnowing_fingerprints(spark, SF_DIR).collect()
     dens = [r.fp_density for r in rows if r.n_windows > 0]
@@ -85,10 +85,7 @@ def test_bpe_merges_match_python_reference(spark):
     greedy left-to-right merge exactly as in the Sennrich et al.
     reference implementation) must learn the same 3 merges with the
     same weighted counts."""
-    from ucl_data_pipeline_spark.plans.extras42 import (
-        _BPE_STEPS,
-        bpe_merge_training,
-    )
+    from ucl_data_pipeline_spark.plans.text import _BPE_STEPS, bpe_merge_training
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     wfreq = Counter(w for text in docs.text for w in _toks(text))
@@ -132,8 +129,8 @@ def test_rake_matches_python_reference(spark):
     at stopwords, degree/freq word scores, phrase score = Σ member
     scores — must rank the same top phrases with matching scores (to
     the engines' 6-dp term rounding)."""
-    from ucl_data_pipeline_spark.plans.extras42 import _RAKE_TOPN, rake_keywords
-    from ucl_data_pipeline_spark.plans.llm_ops import _STOPWORDS
+    from ucl_data_pipeline_spark.plans.text import _RAKE_TOPN, rake_keywords
+    from ucl_data_pipeline_spark.plans.stats import _STOPWORDS
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     stops = set(_STOPWORDS)

@@ -18,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def _quality_frame(spark):
-    from ucl_data_pipeline_spark.plans.llm_ops import text_quality_score
+    from ucl_data_pipeline_spark.plans.text import text_quality_score
 
     q = text_quality_score(spark, SF_DIR).select("doc_id", "quality_score")
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")[["doc_id", "lang"]]
@@ -31,10 +31,7 @@ def test_isotonic_minimax_equals_pav_loop(spark):
     formula; this reference runs the classic PAV pooling LOOP on the
     same binned data. They are provably the same fit — agreement
     checks the relational restatement, not a shared spelling."""
-    from ucl_data_pipeline_spark.plans.extras43 import (
-        _ISO_BINS,
-        isotonic_calibration_bins,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _ISO_BINS, isotonic_calibration_bins
 
     df = _quality_frame(spark)
     df["b"] = np.floor(df.quality_score * _ISO_BINS).astype(int)
@@ -73,7 +70,7 @@ def test_conformal_matches_numpy_replay_and_coverage_bound(spark):
     1-α guarantee (wide tolerance — finite-sample, per-lang n is
     small at sf0.01)."""
     from ucl_data_pipeline_spark.functions.scalar import knuth_bucket  # noqa: F401
-    from ucl_data_pipeline_spark.plans.extras43 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _CONF_ALPHA,
         _CONF_M,
         conformal_split_coverage,
@@ -120,10 +117,7 @@ def test_conformal_matches_numpy_replay_and_coverage_bound(spark):
 def test_map_mrr_matches_python_ranking(spark):
     """Brute-force the 5 query rankings in numpy (cosine, same
     tie-break), then AP@10/MRR@10 straight from the definitions."""
-    from ucl_data_pipeline_spark.plans.extras43 import (
-        _MAP_K,
-        retrieval_map_mrr,
-    )
+    from ucl_data_pipeline_spark.plans.similarity import _MAP_K, retrieval_map_mrr
 
     emb = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
     vecs = np.stack(emb.embedding.to_numpy()).astype(np.float64)

@@ -71,10 +71,7 @@ def _lsh_pairs(docs: pd.DataFrame):
 
 
 def test_kneser_ney_matches_python_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras44 import (
-        _KN_D,
-        kneser_ney_bigram_lm,
-    )
+    from ucl_data_pipeline_spark.plans.text import _KN_D, kneser_ney_bigram_lm
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cs = Counter()
@@ -122,7 +119,7 @@ def test_kneser_ney_matches_python_reference(spark):
 
 
 def test_fellegi_sunter_matches_python_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras44 import fellegi_sunter_patterns
+    from ucl_data_pipeline_spark.plans.similarity import fellegi_sunter_patterns
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cand, feats, _ = _lsh_pairs(docs)
@@ -188,7 +185,7 @@ def test_fellegi_sunter_matches_python_reference(spark):
 
 
 def test_split_leakage_matches_python_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras44 import split_leakage_audit
+    from ucl_data_pipeline_spark.plans.text import split_leakage_audit
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cand, feats, _ = _lsh_pairs(docs)

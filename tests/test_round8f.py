@@ -28,8 +28,8 @@ def test_component_split_closes_the_leak_the_doc_split_has(spark):
     doc-keyed split (split_leakage_audit) must show leakage on this
     fixture, the component-keyed split must show exactly zero, and
     the component split's inventory must cover every document."""
-    from ucl_data_pipeline_spark.plans.extras44 import split_leakage_audit
-    from ucl_data_pipeline_spark.plans.extras45 import component_split_assign
+    from ucl_data_pipeline_spark.plans.text import split_leakage_audit
+    from ucl_data_pipeline_spark.plans.text import component_split_assign
 
     audit = split_leakage_audit(spark, SF_DIR).collect()
     doc_leaks = sum(r.n_dup_pairs for r in audit if r.is_leak == 1)
@@ -50,7 +50,7 @@ def test_dsir_matches_numpy_replay(spark):
     """Replay DSIR end-to-end in plain Python: md5-prefix bucket
     hash, Laplace bucket models, per-doc summed log-ratios, P75
     selection — counts and sums must match exactly."""
-    from ucl_data_pipeline_spark.plans.extras45 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _DSIR_B,
         _DSIR_TARGET_LANG,
         dsir_importance_weights,
@@ -106,8 +106,8 @@ def test_dsir_matches_numpy_replay(spark):
 def test_perplexity_gate_matches_python_replay(spark):
     """Recompute per-doc KN cross-entropy and the Tukey fence in
     plain Python; flag counts per source must match."""
-    from ucl_data_pipeline_spark.plans.extras44 import _KN_D
-    from ucl_data_pipeline_spark.plans.extras45 import perplexity_outlier_gate
+    from ucl_data_pipeline_spark.plans.text import _KN_D
+    from ucl_data_pipeline_spark.plans.text import perplexity_outlier_gate
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cd = Counter()

@@ -14,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_neyman_matches_numpy_and_optimality(spark):
-    from ucl_data_pipeline_spark.plans.extras46 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _NEYMAN_BUDGET,
         neyman_allocation_sample,
     )
@@ -57,7 +57,7 @@ def test_neyman_matches_numpy_and_optimality(spark):
 
 
 def test_jl_distortion_matches_numpy_and_concentrates(spark):
-    from ucl_data_pipeline_spark.plans.extras46 import (
+    from ucl_data_pipeline_spark.plans.similarity import (
         _JL_K,
         _JL_ROWS,
         jl_projection_distortion,
@@ -103,7 +103,7 @@ def test_jl_distortion_matches_numpy_and_concentrates(spark):
 
 
 def test_mase_matches_pandas_shift_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras46 import forecast_mase_seasonal
+    from ucl_data_pipeline_spark.plans.temporal import forecast_mase_seasonal
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     daily = (

@@ -15,8 +15,8 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_semdedup_prunes_seeded_copies_and_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.clustering import K
-    from ucl_data_pipeline_spark.plans.extras47 import (
+    from ucl_data_pipeline_spark.plans.similarity import K
+    from ucl_data_pipeline_spark.plans.similarity import (
         _SEM_THETA,
         semdedup_cluster_prune,
     )
@@ -68,7 +68,7 @@ def test_semdedup_prunes_seeded_copies_and_matches_numpy(spark):
 
 
 def test_dp_sensitivity_matches_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras47 import dp_sensitivity_audit
+    from ucl_data_pipeline_spark.plans.stats import dp_sensitivity_audit
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
     ev["v"] = ev.value.round(2)
@@ -99,7 +99,7 @@ def test_dp_sensitivity_matches_pandas(spark):
 
 
 def test_query_likelihood_matches_python_and_differs_from_bm25(spark):
-    from ucl_data_pipeline_spark.plans.extras47 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _QL_MU,
         _QL_TERMS,
         _QL_TOPN,
@@ -141,7 +141,7 @@ def test_query_likelihood_matches_python_and_differs_from_bm25(spark):
 
     # the two rankers must actually disagree somewhere in their
     # top-20 ordering (they weight length/absent terms differently)
-    from ucl_data_pipeline_spark.plans.extras26 import bm25_doc_ranking
+    from ucl_data_pipeline_spark.plans.text import bm25_doc_ranking
 
     bm25 = [
         r.doc_id

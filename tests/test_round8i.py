@@ -20,7 +20,7 @@ def _kbucket(key: int, m: int) -> int:
 
 
 def test_matryoshka_recall_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras48 import (
+    from ucl_data_pipeline_spark.plans.similarity import (
         _MRL_DIMS,
         _MRL_K,
         matryoshka_truncation_recall,
@@ -69,7 +69,7 @@ def test_matryoshka_recall_matches_numpy(spark):
 
 
 def test_stratified_ate_matches_pandas_and_identity(spark):
-    from ucl_data_pipeline_spark.plans.extras48 import stratified_ate_adjustment
+    from ucl_data_pipeline_spark.plans.stats import stratified_ate_adjustment
 
     li = pd.read_parquet(f"{SF_DIR}/lineitem.parquet")
     part = pd.read_parquet(f"{SF_DIR}/part.parquet")
@@ -121,10 +121,7 @@ def test_stratified_ate_matches_pandas_and_identity(spark):
 
 
 def test_merkle_diff_matches_pandas_and_is_consistent(spark):
-    from ucl_data_pipeline_spark.plans.extras48 import (
-        _MERKLE_B,
-        merkle_bucket_diff,
-    )
+    from ucl_data_pipeline_spark.plans.aggregates import _MERKLE_B, merkle_bucket_diff
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")[["o_orderkey", "o_totalprice"]]
     o["cents"] = (o.o_totalprice.round(2) * 100).round().astype(np.int64)

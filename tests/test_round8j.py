@@ -19,11 +19,8 @@ def _toks(text: str) -> list[str]:
 
 
 def test_otsu_matches_numpy_exhaustive(spark):
-    from ucl_data_pipeline_spark.plans.extras49 import (
-        _OTSU_B,
-        otsu_quality_threshold,
-    )
-    from ucl_data_pipeline_spark.plans.llm_ops import text_quality_score
+    from ucl_data_pipeline_spark.plans.stats import _OTSU_B, otsu_quality_threshold
+    from ucl_data_pipeline_spark.plans.text import text_quality_score
 
     q = (
         text_quality_score(spark, SF_DIR)
@@ -66,7 +63,7 @@ def test_otsu_matches_numpy_exhaustive(spark):
 
 
 def test_chao1_matches_counter_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras49 import chao1_vocab_estimate
+    from ucl_data_pipeline_spark.plans.text import chao1_vocab_estimate
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     per_src = defaultdict(Counter)
@@ -90,10 +87,7 @@ def test_chao1_matches_counter_replay(spark):
 
 
 def test_jm_frontier_matches_dict_lm_and_is_monotone(spark):
-    from ucl_data_pipeline_spark.plans.extras49 import (
-        _JM_LAMBDAS,
-        jm_smoothing_frontier,
-    )
+    from ucl_data_pipeline_spark.plans.text import _JM_LAMBDAS, jm_smoothing_frontier
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cvw = Counter()

@@ -19,7 +19,7 @@ def _toks(text: str) -> list[str]:
 
 
 def test_texttiling_matches_python_loop(spark):
-    from ucl_data_pipeline_spark.plans.extras50 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _TT_BLOCK,
         _TT_RADIUS,
         texttiling_boundaries,
@@ -67,8 +67,8 @@ def test_texttiling_matches_python_loop(spark):
 
 
 def test_nmi_purity_matches_counter_replay(spark):
-    from ucl_data_pipeline_spark.plans.clustering import K
-    from ucl_data_pipeline_spark.plans.extras50 import cluster_nmi_purity
+    from ucl_data_pipeline_spark.plans.similarity import K
+    from ucl_data_pipeline_spark.plans.similarity import cluster_nmi_purity
 
     emb = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
     vecs = {r.vec_id: np.asarray(r.embedding, np.float64) for r in emb.itertuples()}
@@ -111,9 +111,9 @@ def test_nmi_purity_matches_counter_replay(spark):
 
 
 def test_rbo_matches_definition_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras26 import bm25_doc_ranking
-    from ucl_data_pipeline_spark.plans.extras47 import query_likelihood_dirichlet
-    from ucl_data_pipeline_spark.plans.extras50 import (
+    from ucl_data_pipeline_spark.plans.text import bm25_doc_ranking
+    from ucl_data_pipeline_spark.plans.text import query_likelihood_dirichlet
+    from ucl_data_pipeline_spark.plans.text import (
         _RBO_DEPTH,
         _RBO_P,
         rbo_ranker_agreement,

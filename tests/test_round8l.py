@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_sequential_support_matches_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras51 import (
+    from ucl_data_pipeline_spark.plans.temporal import (
         _SEQ_TOPN,
         sequential_pattern_support,
     )
@@ -57,7 +57,7 @@ def test_sequential_support_matches_pandas(spark):
 
 
 def test_dispersion_matches_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras51 import event_dispersion_index
+    from ucl_data_pipeline_spark.plans.temporal import event_dispersion_index
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
     ev["h"] = ev.ts.dt.floor("h")
@@ -75,7 +75,7 @@ def test_dispersion_matches_pandas(spark):
 
 
 def test_neg_sampling_table_partitions_exactly(spark):
-    from ucl_data_pipeline_spark.plans.extras51 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _NEG_SLOTS,
         unigram_neg_sampling_table,
     )

@@ -20,7 +20,7 @@ def _groups():
 
 
 def test_oneway_anova_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras52 import oneway_anova_f
+    from ucl_data_pipeline_spark.plans.stats import oneway_anova_f
 
     gs = _groups()
     all_v = np.concatenate(list(gs.values()))
@@ -59,7 +59,7 @@ def _rankdata_avg(v: np.ndarray) -> np.ndarray:
 
 
 def test_kruskal_wallis_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras52 import kruskal_wallis_h
+    from ucl_data_pipeline_spark.plans.stats import kruskal_wallis_h
 
     gs = _groups()
     labels = np.concatenate(
@@ -87,7 +87,7 @@ def test_kruskal_wallis_matches_reference(spark):
 
 
 def test_cochran_armitage_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras52 import cochran_armitage_trend
+    from ucl_data_pipeline_spark.plans.stats import cochran_armitage_trend
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     o["s"] = o.o_orderpriority.str[0].astype(int)
@@ -121,10 +121,7 @@ def test_anova_and_kw_agree_on_null(spark):
     """Both k-group tests read the same (null) fixture: neither should
     scream. F near 1 and H near its k-1 expectation — consistency of
     the parametric and rank reads."""
-    from ucl_data_pipeline_spark.plans.extras52 import (
-        kruskal_wallis_h,
-        oneway_anova_f,
-    )
+    from ucl_data_pipeline_spark.plans.stats import kruskal_wallis_h, oneway_anova_f
 
     f = oneway_anova_f(spark, SF_DIR).collect()[0]
     h = kruskal_wallis_h(spark, SF_DIR).collect()[0]

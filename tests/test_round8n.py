@@ -52,7 +52,7 @@ def _major_lanes(edges: pd.DataFrame, k: int = 5) -> set[tuple[int, int]]:
 
 
 def test_hits_matches_numpy_power_iteration(spark):
-    from ucl_data_pipeline_spark.plans.extras53 import (
+    from ucl_data_pipeline_spark.plans.graph import (
         _HITS_ITER,
         _N_NODES,
         hits_hub_authority,
@@ -80,7 +80,7 @@ def test_hits_matches_numpy_power_iteration(spark):
 
 
 def test_adamic_adar_matches_set_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras53 import adamic_adar_linkpred
+    from ucl_data_pipeline_spark.plans.graph import adamic_adar_linkpred
 
     lanes = _major_lanes(_directed_weighted_edges())
     und = {(min(a, b), max(a, b)) for a, b in lanes}
@@ -113,7 +113,7 @@ def test_adamic_adar_matches_set_replay(spark):
 
 
 def test_dyad_census_identities(spark):
-    from ucl_data_pipeline_spark.plans.extras53 import (
+    from ucl_data_pipeline_spark.plans.graph import (
         _N_NODES,
         _TOP_LANES,
         dyad_census_trade,

@@ -13,7 +13,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_decile_lift_matches_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras54 import decile_lift_table
+    from ucl_data_pipeline_spark.plans.stats import decile_lift_table
 
     c = pd.read_parquet(f"{SF_DIR}/customer.parquet")
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")[["o_orderkey", "o_custkey"]]
@@ -62,7 +62,7 @@ def test_decile_lift_matches_pandas(spark):
 
 
 def test_mcnemar_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras54 import mcnemar_paired_gates
+    from ucl_data_pipeline_spark.plans.stats import mcnemar_paired_gates
 
     d = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     a = (d.n_chars >= 128).to_numpy()
@@ -81,7 +81,7 @@ def test_mcnemar_matches_reference(spark):
 
 
 def test_cliffs_delta_matches_bruteforce(spark):
-    from ucl_data_pipeline_spark.plans.extras54 import cliffs_delta_priority
+    from ucl_data_pipeline_spark.plans.stats import cliffs_delta_priority
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     x = o[o.o_orderpriority == "1-URGENT"].o_totalprice.to_numpy()
@@ -115,8 +115,8 @@ def test_cliffs_delta_matches_bruteforce(spark):
 def test_cliffs_delta_consistent_with_mwu(spark):
     """delta = 2*U_a/(n_a*n_b) - 1 (tie-split U): the two queries
     must tell one story about the same pair of samples."""
-    from ucl_data_pipeline_spark.plans.extras16 import mann_whitney_u
-    from ucl_data_pipeline_spark.plans.extras54 import cliffs_delta_priority
+    from ucl_data_pipeline_spark.plans.stats import mann_whitney_u
+    from ucl_data_pipeline_spark.plans.stats import cliffs_delta_priority
 
     u = mann_whitney_u(spark, SF_DIR).collect()[0]
     d = cliffs_delta_priority(spark, SF_DIR).collect()[0]

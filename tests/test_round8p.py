@@ -26,10 +26,7 @@ def _daily():
 
 
 def test_periodogram_matches_direct_dft(spark):
-    from ucl_data_pipeline_spark.plans.extras55 import (
-        _PERIODS,
-        periodogram_fixed_freqs,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import _PERIODS, periodogram_fixed_freqs
 
     d = _daily()
     days = (d.index - d.index.min()).days.to_numpy()
@@ -71,9 +68,7 @@ def test_periodogram_pure_tone_detects_period():
 
 
 def test_permutation_entropy_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras55 import (
-        permutation_entropy_daily,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import permutation_entropy_daily
 
     x = _daily().to_numpy()
     codes = Counter()
@@ -97,7 +92,7 @@ def test_permutation_entropy_matches_replay(spark):
 
 
 def test_burstiness_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras55 import burstiness_interevent
+    from ucl_data_pipeline_spark.plans.temporal import burstiness_interevent
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet").sort_values(
         ["event_type", "ts", "event_id"]

@@ -14,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_price_indices_match_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras56 import (
+    from ucl_data_pipeline_spark.plans.aggregates import (
         _BASE_YEAR,
         _CUR_YEAR,
         price_index_fisher,
@@ -45,7 +45,7 @@ def test_price_indices_match_pandas(spark):
 
 
 def test_abc_classification_matches_pandas(spark):
-    from ucl_data_pipeline_spark.plans.extras56 import abc_classification
+    from ucl_data_pipeline_spark.plans.aggregates import abc_classification
 
     li = pd.read_parquet(f"{SF_DIR}/lineitem.parquet")
     rev = (
@@ -80,9 +80,7 @@ def test_abc_classification_matches_pandas(spark):
 
 
 def test_theil_decomposition_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras56 import (
-        theil_index_decomposition,
-    )
+    from ucl_data_pipeline_spark.plans.stats import theil_index_decomposition
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")[
         ["o_custkey", "o_totalprice"]

@@ -19,7 +19,7 @@ def _doc_tokens():
 
 
 def test_textrank_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras57 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _TR_DAMP,
         _TR_ITER,
         _TR_TOPN,
@@ -55,10 +55,7 @@ def test_textrank_matches_numpy(spark):
 
 
 def test_hurst_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras57 import (
-        _HURST_SIZES,
-        hurst_rs_exponent,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import _HURST_SIZES, hurst_rs_exponent
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     x = (
@@ -99,10 +96,7 @@ def test_hurst_matches_replay(spark):
 
 
 def test_heaps_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras57 import (
-        _HEAPS_STEP,
-        heaps_law_exponent,
-    )
+    from ucl_data_pipeline_spark.plans.text import _HEAPS_STEP, heaps_law_exponent
 
     docs = _doc_tokens()
     first = {}

@@ -21,8 +21,8 @@ def _emb():
 
 
 def test_centroid_outliers_match_numpy(spark):
-    from ucl_data_pipeline_spark.plans.clustering import K
-    from ucl_data_pipeline_spark.plans.extras58 import (
+    from ucl_data_pipeline_spark.plans.similarity import K
+    from ucl_data_pipeline_spark.plans.similarity import (
         _OUT_TOPN,
         centroid_distance_outliers,
     )
@@ -45,8 +45,8 @@ def test_centroid_outliers_match_numpy(spark):
 
 
 def test_simplified_silhouette_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.clustering import K
-    from ucl_data_pipeline_spark.plans.extras58 import simplified_silhouette
+    from ucl_data_pipeline_spark.plans.similarity import K
+    from ucl_data_pipeline_spark.plans.similarity import simplified_silhouette
 
     _, X = _emb()
     C = X[:K]
@@ -72,7 +72,7 @@ def test_simplified_silhouette_matches_numpy(spark):
 
 
 def test_markov_absorption_matches_matrix_power(spark):
-    from ucl_data_pipeline_spark.plans.extras58 import (
+    from ucl_data_pipeline_spark.plans.temporal import (
         _ABS_TARGET,
         markov_absorption_funnel,
     )
@@ -148,7 +148,7 @@ def _absorb_loop(trans, states, target, k):
 def _absorb_fold(trans, target, k):
     """The same supersteps as one fold over the gathered matrix, by the
     query's own absorption_history."""
-    from ucl_data_pipeline_spark.plans.extras58 import absorption_history
+    from ucl_data_pipeline_spark.plans.temporal import absorption_history
 
     row = absorption_history(trans, target, k).collect()[0]
     return [dict(zip(row.ns, x)) for x in row.h]
@@ -219,11 +219,11 @@ def test_markov_queries_count_transitions_into_to_only_types(spark, tmp_path):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras40 import (
+    from ucl_data_pipeline_spark.plans.temporal import (
         _MARKOV_ITERS,
         markov_stationary_events,
     )
-    from ucl_data_pipeline_spark.plans.extras58 import (
+    from ucl_data_pipeline_spark.plans.temporal import (
         _ABS_STEPS,
         _ABS_TARGET,
         markov_absorption_funnel,

@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_cuped_matches_numpy_and_identity(spark):
-    from ucl_data_pipeline_spark.plans.extras59 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _EXP_YEAR,
         _PRE_YEAR,
         cuped_variance_reduction,
@@ -52,7 +52,7 @@ def test_cuped_matches_numpy_and_identity(spark):
 
 
 def test_odds_ratio_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras59 import odds_ratio_gates
+    from ucl_data_pipeline_spark.plans.stats import odds_ratio_gates
 
     d = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     en = d.lang == "en"
@@ -80,7 +80,7 @@ def test_odds_ratio_matches_reference(spark):
 
 
 def test_hill_profile_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras59 import hill_diversity_profile
+    from ucl_data_pipeline_spark.plans.text import hill_diversity_profile
 
     d = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     cnt = Counter(d.source)

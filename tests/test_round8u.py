@@ -20,7 +20,7 @@ def _docs():
 
 
 def test_vsm_matches_reference(spark):
-    from ucl_data_pipeline_spark.plans.extras60 import (
+    from ucl_data_pipeline_spark.plans.text import (
         _VSM_TERMS,
         _VSM_TOPN,
         vsm_tfidf_ranking,
@@ -64,7 +64,7 @@ def _emb():
 
 
 def test_rocchio_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras60 import (
+    from ucl_data_pipeline_spark.plans.similarity import (
         _PRF_FB,
         _PRF_QUERY_ID,
         _PRF_TOPN,
@@ -101,9 +101,9 @@ def test_rocchio_matches_numpy(spark):
 
 
 def test_err_matches_reference_and_bounds(spark):
-    from ucl_data_pipeline_spark.plans.extras16 import mann_whitney_u  # noqa: F401
-    from ucl_data_pipeline_spark.plans.extras43 import retrieval_map_mrr
-    from ucl_data_pipeline_spark.plans.extras60 import (
+    from ucl_data_pipeline_spark.plans.stats import mann_whitney_u
+    from ucl_data_pipeline_spark.plans.similarity import retrieval_map_mrr
+    from ucl_data_pipeline_spark.plans.similarity import (
         _ERR_K,
         _ERR_QUERIES,
         err_cascade_metric,

@@ -20,10 +20,7 @@ def _daily():
 
 
 def test_sprt_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras61 import (
-        _SPRT_LIFT,
-        sprt_sequential_test,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import _SPRT_LIFT, sprt_sequential_test
 
     g = _daily()
     n = g.size()
@@ -55,7 +52,7 @@ def test_sprt_matches_replay(spark):
 
 
 def test_huber_matches_replay_and_is_robust(spark):
-    from ucl_data_pipeline_spark.plans.extras61 import (
+    from ucl_data_pipeline_spark.plans.stats import (
         _HUBER_ITER,
         _HUBER_K,
         huber_location_irls,
@@ -92,7 +89,7 @@ def test_huber_matches_replay_and_is_robust(spark):
 
 
 def test_grubbs_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras61 import grubbs_extreme_day
+    from ucl_data_pipeline_spark.plans.temporal import grubbs_extreme_day
 
     g = _daily()
     rev = g.o_totalprice.sum().round(2).sort_index()

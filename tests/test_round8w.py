@@ -14,10 +14,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_mus_matches_replay_and_pps_law(spark):
-    from ucl_data_pipeline_spark.plans.extras62 import (
-        _MUS_N,
-        monetary_unit_sample,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _MUS_N, monetary_unit_sample
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet").sort_values("o_orderkey")
     x = o.o_totalprice.round(2).to_numpy()
@@ -40,9 +37,7 @@ def test_mus_matches_replay_and_pps_law(spark):
 
 
 def test_jackknife_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras62 import (
-        jackknife_group_influence,
-    )
+    from ucl_data_pipeline_spark.plans.stats import jackknife_group_influence
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")[
         ["o_custkey", "o_totalprice"]
@@ -87,10 +82,7 @@ def test_jackknife_matches_replay(spark):
 def test_capture_recapture_matches_replay(spark):
     import hashlib
 
-    from ucl_data_pipeline_spark.plans.extras62 import (
-        _CR_THRESH,
-        capture_recapture_ndv,
-    )
+    from ucl_data_pipeline_spark.plans.stats import _CR_THRESH, capture_recapture_ndv
 
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     seen = sorted(set(o.o_custkey))

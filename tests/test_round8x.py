@@ -25,11 +25,8 @@ def _daily_rev():
 
 
 def test_esd_matches_replay_and_masking_law(spark):
-    from ucl_data_pipeline_spark.plans.extras61 import grubbs_extreme_day
-    from ucl_data_pipeline_spark.plans.extras63 import (
-        _ESD_STEPS,
-        esd_outlier_sequence,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import grubbs_extreme_day
+    from ucl_data_pipeline_spark.plans.temporal import _ESD_STEPS, esd_outlier_sequence
 
     rev = _daily_rev()
     remaining = rev.copy()
@@ -56,7 +53,7 @@ def test_esd_matches_replay_and_masking_law(spark):
 
 
 def test_allen_census_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras63 import allen_interval_census
+    from ucl_data_pipeline_spark.plans.temporal import allen_interval_census
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
 
@@ -108,11 +105,8 @@ def test_allen_census_matches_replay(spark):
 
 
 def test_acf_matches_numpy(spark):
-    from ucl_data_pipeline_spark.plans.extras5 import autocorr_daily_revenue
-    from ucl_data_pipeline_spark.plans.extras63 import (
-        _ACF_MAX_LAG,
-        acf_table_daily,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import autocorr_daily_revenue
+    from ucl_data_pipeline_spark.plans.temporal import _ACF_MAX_LAG, acf_table_daily
 
     x = _daily_rev().to_numpy()
     rows = {r.lag: r for r in acf_table_daily(spark, SF_DIR).collect()}

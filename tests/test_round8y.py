@@ -14,10 +14,8 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_mde_matches_replay_and_cuped_link(spark):
-    from ucl_data_pipeline_spark.plans.extras59 import (
-        cuped_variance_reduction,
-    )
-    from ucl_data_pipeline_spark.plans.extras64 import (
+    from ucl_data_pipeline_spark.plans.stats import cuped_variance_reduction
+    from ucl_data_pipeline_spark.plans.stats import (
         _EXP_YEAR,
         _MDE_POINTS,
         _PRE_YEAR,
@@ -62,7 +60,7 @@ def test_mde_matches_replay_and_cuped_link(spark):
 
 
 def test_dedup_saturation_matches_replay(spark):
-    from ucl_data_pipeline_spark.plans.extras64 import (
+    from ucl_data_pipeline_spark.plans.similarity import (
         _SAT_STEP,
         dedup_saturation_curve,
     )
@@ -88,8 +86,8 @@ def test_dedup_saturation_matches_replay(spark):
 
 
 def test_nelson_aalen_matches_replay_and_km_bound(spark):
-    from ucl_data_pipeline_spark.plans.extras16 import kaplan_meier_survival
-    from ucl_data_pipeline_spark.plans.extras64 import nelson_aalen_hazard
+    from ucl_data_pipeline_spark.plans.stats import kaplan_meier_survival
+    from ucl_data_pipeline_spark.plans.stats import nelson_aalen_hazard
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
     us = ev.groupby("user_id").agg(

@@ -9,7 +9,7 @@ from collections import Counter
 
 import pytest
 
-from ucl_data_pipeline_spark.plans.events_windows import (
+from ucl_data_pipeline_spark.plans.temporal import (
     dedup_events_first,
     session_window_agg,
     sliding_window_agg,
@@ -166,9 +166,7 @@ def test_dedup_within_watermark_keeps_one_per_key(
 
 
 def test_interval_join_stream_equals_batch(spark, sf_dir, events_dir, tmp_path):
-    from ucl_data_pipeline_spark.plans.events_windows import (
-        view_click_interval_join,
-    )
+    from ucl_data_pipeline_spark.plans.temporal import view_click_interval_join
     from ucl_data_pipeline_spark.streaming import interval_join_stream
 
     v = read_events_stream(spark, events_dir)
@@ -203,7 +201,7 @@ def test_stream_static_broadcast_enrich(spark, sf_dir, events_dir, tmp_path):
 
 
 def test_ohlc_stream_equals_batch(spark, sf_dir, events_dir, tmp_path):
-    from ucl_data_pipeline_spark.plans.extras5 import ohlc_resample_hourly
+    from ucl_data_pipeline_spark.plans.temporal import ohlc_resample_hourly
     from ucl_data_pipeline_spark.streaming import ohlc_stream
 
     stream = ohlc_stream(read_events_stream(spark, events_dir))
@@ -256,7 +254,7 @@ def test_session_length_stream_equals_batch_histogram(
     # strictly-greater cut) must reproduce the registered
     # session_length_histogram exactly once its closed sessions are
     # rolled up.
-    from ucl_data_pipeline_spark.plans.extras11 import session_length_histogram
+    from ucl_data_pipeline_spark.plans.temporal import session_length_histogram
     from ucl_data_pipeline_spark.streaming import (
         rollup_session_histogram,
         session_length_stream,
@@ -277,7 +275,7 @@ def test_late_events_stream_equals_batch_single_batch(
     # One micro-batch (no maxFilesPerTrigger): the stateful function's
     # within-batch event_id sort IS the batch query's arrival order, so
     # the rolled-up partials must match out_of_order_stats exactly.
-    from ucl_data_pipeline_spark.plans.extras12 import out_of_order_stats
+    from ucl_data_pipeline_spark.plans.temporal import out_of_order_stats
     from ucl_data_pipeline_spark.streaming import (
         late_events_stream,
         rollup_late_stats,
@@ -306,7 +304,7 @@ def test_late_events_stream_state_across_ordered_batches(
 
     import pyarrow.parquet as pq
 
-    from ucl_data_pipeline_spark.plans.extras12 import out_of_order_stats
+    from ucl_data_pipeline_spark.plans.temporal import out_of_order_stats
     from ucl_data_pipeline_spark.streaming import (
         late_events_stream,
         rollup_late_stats,
@@ -360,7 +358,7 @@ def test_cusum_stream_equals_batch(spark, sf_dir, orders_dir, tmp_path):
     # must reproduce the driver-oracle-checked batch query exactly.
     # complete mode: at AvailableNow end-of-input the newest days are
     # still inside the watermark horizon and append would hold them.
-    from ucl_data_pipeline_spark.plans.extras5 import cusum_drift_daily
+    from ucl_data_pipeline_spark.plans.temporal import cusum_drift_daily
     from ucl_data_pipeline_spark.streaming import (
         daily_revenue_stream,
         read_orders_stream,
@@ -377,7 +375,7 @@ def test_cusum_stream_equals_batch(spark, sf_dir, orders_dir, tmp_path):
 
 
 def test_changepoint_stream_equals_batch(spark, sf_dir, orders_dir, tmp_path):
-    from ucl_data_pipeline_spark.plans.extras20 import changepoint_single_split
+    from ucl_data_pipeline_spark.plans.stats import changepoint_single_split
     from ucl_data_pipeline_spark.streaming import (
         daily_revenue_stream,
         read_orders_stream,
@@ -398,7 +396,7 @@ def test_daily_revenue_stream_multi_batch_state(spark, sf_dir, orders_dir, tmp_p
     # straddle both files must still aggregate to ONE exact row via the
     # window state store — the incremental path a daily-ingest pipeline
     # actually runs.
-    from ucl_data_pipeline_spark.plans.extras5 import cusum_drift_daily
+    from ucl_data_pipeline_spark.plans.temporal import cusum_drift_daily
     from ucl_data_pipeline_spark.streaming import (
         daily_revenue_stream,
         read_orders_stream,
@@ -427,7 +425,7 @@ def test_curation_gate_stream_equals_batch(spark, sf_dir, tmp_path):
     # 'candidate' — they are downstream batch steps by design.
     from pyspark.sql import functions as F
 
-    from ucl_data_pipeline_spark.plans.extras21 import curation_pipeline
+    from ucl_data_pipeline_spark.plans.text import curation_pipeline
     from ucl_data_pipeline_spark.streaming import (
         bench_gram_digests_static,
         curation_gate_stream,
@@ -457,7 +455,7 @@ def test_page_hinkley_stream_equals_batch(spark, sf_dir, orders_dir, tmp_path):
     # Same discipline as the CUSUM/changepoint twins: the streaming
     # day-grain pre-agg + the SHARED page_hinkley_over_daily math must
     # reproduce the driver-oracle-checked batch query exactly.
-    from ucl_data_pipeline_spark.plans.extras22 import page_hinkley_drift_daily
+    from ucl_data_pipeline_spark.plans.temporal import page_hinkley_drift_daily
     from ucl_data_pipeline_spark.streaming import (
         daily_revenue_stream,
         read_orders_stream,

@@ -6,85 +6,14 @@ exposes them to the driver harness.
 """
 
 from ucl_data_pipeline_spark.plans import registry  # noqa: F401
-from ucl_data_pipeline_spark.plans import core  # noqa: F401  (registers)
-from ucl_data_pipeline_spark.plans import reference_parity  # noqa: F401
-from ucl_data_pipeline_spark.plans import analytics  # noqa: F401
-from ucl_data_pipeline_spark.plans import llm_ops  # noqa: F401
-from ucl_data_pipeline_spark.plans import events_windows  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras  # noqa: F401
-from ucl_data_pipeline_spark.plans import temporal  # noqa: F401
 from ucl_data_pipeline_spark.plans import tpch  # noqa: F401
-from ucl_data_pipeline_spark.plans import clustering  # noqa: F401
-from ucl_data_pipeline_spark.plans import llm_ops2  # noqa: F401
-from ucl_data_pipeline_spark.plans import tpch2  # noqa: F401
-from ucl_data_pipeline_spark.plans import llm_ops3  # noqa: F401
-from ucl_data_pipeline_spark.plans import llm_ops4  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras2  # noqa: F401
-from ucl_data_pipeline_spark.plans import tpch3  # noqa: F401
+from ucl_data_pipeline_spark.plans import aggregates  # noqa: F401
+from ucl_data_pipeline_spark.plans import stats  # noqa: F401
+from ucl_data_pipeline_spark.plans import similarity  # noqa: F401
+from ucl_data_pipeline_spark.plans import text  # noqa: F401
+from ucl_data_pipeline_spark.plans import temporal  # noqa: F401
 from ucl_data_pipeline_spark.plans import graph  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras3  # noqa: F401
-from ucl_data_pipeline_spark.plans import tpch4  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras4  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras5  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras6  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras7  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras8  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras9  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras10  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras11  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras12  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras13  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras14  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras15  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras16  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras17  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras18  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras19  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras20  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras21  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras22  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras23  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras24  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras25  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras26  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras27  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras28  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras29  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras30  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras31  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras32  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras33  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras34  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras35  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras36  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras37  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras38  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras39  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras40  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras41  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras42  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras43  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras44  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras45  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras46  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras47  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras48  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras49  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras50  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras51  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras52  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras53  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras54  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras55  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras56  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras57  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras58  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras59  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras60  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras61  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras62  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras63  # noqa: F401
-from ucl_data_pipeline_spark.plans import extras64  # noqa: F401
+from ucl_data_pipeline_spark.plans import reference_parity  # noqa: F401
 
 all_queries = registry.all_queries
 oracle_sqls = registry.oracle_sqls

@@ -1,19 +1,12 @@
-"""Graph analytics over the star schema: PageRank on the trade
-network. Unlike k-means (driver-coordinated argmin/init → rows-only),
-FIXED-ITERATION PageRank is fully oracle-checkable: the DuckDB oracle
-unrolls the five steps as chained CTEs, with every per-iteration sum
-made order-independent by the registry's round-then-decimal-sum
-convention — so an ITERATIVE algorithm gets an exact cross-engine
-value hash.
+"""Graph queries over the trade and co-purchase networks.
 
-Scale shape: the edge aggregation over the fact join is the only
-row-count-bound stage. Its result is bounded by the nation dimension
-(≤25² edges), so the Spark side gathers it into ONE row
-(``registry.gather_graph``) and runs every superstep inside that row
-as one ``registry.fold_steps`` column: the Pregel superstep (edge
-terms, exact sum per dst, update per node) with no per-step join,
-shuffle, checkpoint or Spark job, and no lineage that grows with the
-step count.
+PageRank, HITS, BFS, Bellman-Ford, triangles, k-core, modularity,
+assortativity, link prediction and dyad census. Iterative queries
+with a bounded node domain run as one ``registry.fold_steps`` plan.
+
+Registry conventions apply (plans/registry.py): exact decimal sums,
+ROUND 6 on transcendental/division outputs, atomic columns,
+BIGINT/DOUBLE/VARCHAR oracle casts.
 """
 
 from __future__ import annotations
@@ -21,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ucl_data_pipeline_spark.functions.text import _let
 from ucl_data_pipeline_spark.plans.registry import (
     array_dsum,
     edge_terms,
@@ -30,8 +24,11 @@ from ucl_data_pipeline_spark.plans.registry import (
 )
 from ucl_data_pipeline_spark.sources.io import read_table
 
+
 _DAMP = 0.85
+
 _N_ITER = 5
+
 _N_NODES = 25  # nation is a fixed-size dimension
 
 
@@ -243,4 +240,1311 @@ def bfs_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ns", F.element_at(fold_steps("d0", step, _BFS_ITER), -1).alias("d"))
         .select(F.posexplode("ns").alias("i", "node"), "d")
         .select("node", F.element_at("d", F.col("i") + 1).cast("int").alias("hops"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Triangle counting on the trade graph
+# ---------------------------------------------------------------------------
+
+_TRIANGLE_ORACLE = """
+WITH und AS (  -- undirected simple edges: canonical (lo, hi), no loops
+  SELECT DISTINCT
+         LEAST(s.s_nationkey, c.c_nationkey) AS a,
+         GREATEST(s.s_nationkey, c.c_nationkey) AS b
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer c ON c.c_custkey = o.o_custkey
+  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+  WHERE s.s_nationkey <> c.c_nationkey
+), tri AS (
+  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+  FROM und e1
+  JOIN und e2 ON e2.a = e1.b
+  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
+), per_node AS (
+  SELECT node, COUNT(*) AS n_triangles FROM (
+    SELECT x AS node FROM tri
+    UNION ALL SELECT y FROM tri
+    UNION ALL SELECT z FROM tri
+  ) GROUP BY node
+)
+SELECT n.n_nationkey AS node,
+       COALESCE(p.n_triangles, 0) AS n_triangles
+FROM nation n LEFT JOIN per_node p ON p.node = n.n_nationkey
+"""
+
+
+@register("triangle_count_trade", oracle=_TRIANGLE_ORACLE, tags=("graph", "join"))
+def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-node triangle count on the undirected nation trade graph —
+    the clustering-coefficient numerator, the standard community-
+    structure signal (and the classic MapReduce graph benchmark).
+    DEGREE-ORDERED compact-forward enumeration: edges are re-directed
+    from the lower to the higher endpoint in the total order
+    (degree, node) — no global rank window needed, the tuple compares
+    directly — and wedges form ONLY at each edge's source, i.e. at the
+    triangle's LOWEST-DEGREE corner. Each wedge pair then probes the
+    directed edge set once; since exactly one direction of (y, z)
+    exists, each triangle is matched exactly once with no ordering
+    filter.
+
+    Scale: this is the real skew killer on power-law graphs — a hub of
+    degree d contributes wedges only for the (few) neighbors that
+    outrank it, so per-node wedge work is bounded by the h-index-like
+    quantity min(d, #higher-degree-neighbors)², not d²; total work is
+    O(E^1.5) worst-case (Chiba–Nishizeki bound) instead of Σd². The
+    degree table is node-sized (broadcast); the O(V log V) order is
+    implicit in the tuple comparison — no sort materialized. Edge
+    derivation is the same dim-broadcast fact aggregation as pagerank;
+    the triangle joins run on the aggregated 25-node edge table, not on
+    facts. The oracle is enumeration-order invariant (per-node counts),
+    so the id-canonical SQL grades this plan unchanged.
+    """
+    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    und = (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(s, l["l_suppkey"] == s["s_suppkey"])
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .select(
+            F.least("s_nationkey", "c_nationkey").alias("a"),
+            F.greatest("s_nationkey", "c_nationkey").alias("b"),
+        )
+        .distinct()
+    )
+    deg = (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+    # Re-direct each edge from the lower to the higher endpoint in the
+    # (degree, node) total order; deg is node-sized → broadcast twice.
+    with_deg = und.join(
+        F.broadcast(deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))),
+        "a",
+    ).join(
+        F.broadcast(deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))),
+        "b",
+    )
+    a_first = (F.col("deg_a") < F.col("deg_b")) | (
+        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
+    )
+    dir_e = with_deg.select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+    )
+    w1 = dir_e.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    w2 = dir_e.select(F.col("src").alias("x"), F.col("dst").alias("z"))
+    e3 = dir_e.select(F.col("src").alias("y"), F.col("dst").alias("z"))
+    tri = w1.join(w2, "x").filter(F.col("y") != F.col("z")).join(e3, ["y", "z"])
+    corners = (
+        tri.select(F.col("x").alias("node"))
+        .unionAll(tri.select(F.col("y").alias("node")))
+        .unionAll(tri.select(F.col("z").alias("node")))
+    )
+    per_node = corners.groupBy("node").agg(F.count("*").alias("n_triangles"))
+    nodes = read_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("node")
+    )
+    return nodes.join(per_node, "node", "left").select(
+        "node", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Graph node similarity: neighbor-set Jaccard on the trade network
+# ---------------------------------------------------------------------------
+
+_NBR_JACCARD_ORACLE = """
+WITH und AS (
+  SELECT DISTINCT
+         LEAST(s.s_nationkey, c.c_nationkey) AS a,
+         GREATEST(s.s_nationkey, c.c_nationkey) AS b
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer c ON c.c_custkey = o.o_custkey
+  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+  WHERE s.s_nationkey <> c.c_nationkey
+),
+adj AS (
+  SELECT a AS node, b AS nbr FROM und
+  UNION ALL
+  SELECT b AS node, a AS nbr FROM und
+),
+deg AS (SELECT node, COUNT(*) AS d FROM adj GROUP BY node),
+common AS (
+  SELECT x.node AS u, y.node AS v, COUNT(*) AS c
+  FROM adj x JOIN adj y ON x.nbr = y.nbr AND x.node < y.node
+  GROUP BY 1, 2
+)
+SELECT cm.u, cm.v,
+       CAST(cm.c AS BIGINT) AS n_common,
+       ROUND(CAST(cm.c AS DOUBLE) / (du.d + dv.d - cm.c), 6) AS jaccard
+FROM common cm
+JOIN deg du ON du.node = cm.u
+JOIN deg dv ON dv.node = cm.v
+WHERE CAST(cm.c AS DOUBLE) / (du.d + dv.d - cm.c) >= 0.5
+"""
+
+
+@register("neighbor_jaccard_nodes", oracle=_NBR_JACCARD_ORACLE, tags=("graph", "join"))
+def neighbor_jaccard_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Structural node similarity: Jaccard of neighbor sets for every
+    node pair sharing ≥1 neighbor, thresholded at 0.5 — the standard
+    link-prediction / role-equivalence primitive (and the node-level
+    analogue of the document near-dup Jaccard in llm_ops). Same
+    trade-network edge derivation as triangle_count_trade
+    (extras3.py): distinct canonical (lo, hi) nation pairs.
+
+    Scale: the fact-sized stage is the edge derivation (one pass,
+    distinct-collapsed to ≤ |V|² rows). The pair enumeration joins the
+    ADJACENCY list with itself on the shared-neighbor key — per-key
+    blow-up is degree², the classic wedge bound; on power-law graphs
+    the production guard is degree-capping / top-h hubs removal before
+    the wedge join (same argument as the degree-ordered triangle
+    plan). Jaccard needs no per-pair set intersection: |∩| falls out of
+    the wedge count, |∪| = d(u)+d(v)−|∩| from the broadcastable degree
+    table.
+    """
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    pairs = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .select(
+            F.least("s_nationkey", "c_nationkey").alias("a"),
+            F.greatest("s_nationkey", "c_nationkey").alias("b"),
+        )
+        .distinct()
+    )
+    adj = pairs.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
+        pairs.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+    )
+    deg = adj.groupBy("node").agg(F.count("*").alias("d"))
+    x = adj.alias("x")
+    y = adj.alias("y")
+    common = (
+        x.join(y, (F.col("x.nbr") == F.col("y.nbr")) & (F.col("x.node") < F.col("y.node")))
+        .groupBy(F.col("x.node").alias("u"), F.col("y.node").alias("v"))
+        .agg(F.count("*").alias("c"))
+    )
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    jac = F.col("c").cast("double") / (F.col("du") + F.col("dv") - F.col("c"))
+    return (
+        common.join(F.broadcast(du), "u")
+        .join(F.broadcast(dv), "v")
+        .filter(jac >= 0.5)
+        .select(
+            "u",
+            "v",
+            F.col("c").cast("long").alias("n_common"),
+            F.round(jac, 6).alias("jaccard"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bounded Bellman-Ford: cheapest nation-to-nation trade route
+# ---------------------------------------------------------------------------
+
+_BF_ITER = 3
+
+_BF_SOURCE = 0
+
+
+def _sql_bf_iter(prev: str, nxt: str) -> str:
+    return f"""{nxt} AS (
+  SELECT n.node,
+         CASE WHEN n.cost IS NULL THEN c.cand
+              WHEN c.cand IS NULL THEN n.cost
+              ELSE LEAST(n.cost, c.cand) END AS cost
+  FROM {prev} n LEFT JOIN (
+    SELECT e.dst AS node, MIN(p.cost + e.w) AS cand
+    FROM {prev} p JOIN edges e ON e.src = p.node
+    WHERE p.cost IS NOT NULL GROUP BY e.dst
+  ) c ON c.node = n.node
+)"""
+
+
+_BELLMAN_FORD_ORACLE = f"""
+WITH edges AS (
+  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+         CAST(FLOOR(
+           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+           / COUNT(l.l_extendedprice)) AS BIGINT) AS w
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  WHERE s.s_nationkey <> c.c_nationkey
+  GROUP BY 1, 2
+),
+d0 AS (
+  SELECT n_nationkey AS node,
+         CASE WHEN n_nationkey = {_BF_SOURCE}
+              THEN CAST(0 AS BIGINT) END AS cost
+  FROM nation
+),
+{",".join(_sql_bf_iter(f"d{i}", f"d{i + 1}") for i in range(_BF_ITER))}
+SELECT node, CAST(cost AS BIGINT) AS cost FROM d{_BF_ITER}
+"""
+
+
+@register(
+    "cheapest_route_nations", oracle=_BELLMAN_FORD_ORACLE, tags=("graph", "iterative", "join")
+)
+def cheapest_route_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded Bellman-Ford ({N} relaxations) over the weighted trade
+    graph: minimum cumulative cost from nation {SRC} to every nation,
+    where an edge costs the FLOOR of the mean line price on that trade
+    lane — min-plus relaxation, the weighted generalization of
+    bfs_reach_hops (a 2-hop detour can genuinely beat a direct edge
+    here, which hop-BFS cannot see). Edge weights are floored to
+    BIGINT so the entire computation is integer min-plus — zero float
+    conventions needed (the mean itself is the exact-decimal davg
+    both engines compute bit-identically before the floor).
+
+    Scale shape: the fact-side edge aggregation is the one
+    row-count-bound stage. Gather contract: its result is gathered into
+    one row (``gather_graph``), bounded by the nation dimension (≤625
+    lanes), never by row count; the {N} relaxations run in that row as
+    one ``fold_steps`` column — no per-step join, shuffle or Spark job,
+    nothing persisted. The oracle unrolls the identical supersteps as
+    chained CTEs.
+    """
+    edges = (
+        trade_lines(spark, sf_dir, "l_extendedprice")
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(
+            F.floor(
+                F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))
+                .cast("double")
+                / F.count("l_extendedprice")
+            )
+            .cast("bigint")
+            .alias("w")
+        )
+    )
+
+    def step(d: Column, es: Column) -> Column:
+        # least() skips NULLs: unreached stays NULL, a cheaper path relaxes
+        return F.transform(d, lambda c, i: F.least(c, F.array_min(
+            edge_terms(es, i, "d", lambda e: F.element_at(d, e["s"]) + e["w"])
+        )))
+
+    d0 = F.transform("ns", lambda n: F.when(n == _BF_SOURCE, F.lit(0)).cast("bigint"))
+    return (
+        gather_graph(edges, read_table(spark, sf_dir, "nation").select("n_nationkey"))
+        .select("ns", F.element_at(fold_steps(d0, step, _BF_ITER), -1).alias("d"))
+        .select(F.posexplode("ns").alias("i", "node"), "d")
+        .select("node", F.element_at("d", F.col("i") + 1).alias("cost"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Trade-graph modularity of the region partition
+# ---------------------------------------------------------------------------
+
+_MODULARITY_ORACLE = """
+WITH edges AS (
+  SELECT s.s_nationkey AS src, c.c_nationkey AS dst, COUNT(*) AS w
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  GROUP BY 1, 2
+),
+lab AS (
+  SELECT e.src, e.dst, e.w,
+         ns.n_regionkey AS comm_src, nd.n_regionkey AS comm_dst
+  FROM edges e
+  JOIN nation ns ON ns.n_nationkey = e.src
+  JOIN nation nd ON nd.n_nationkey = e.dst
+),
+tot AS (SELECT SUM(w) AS m FROM lab),
+within AS (
+  SELECT SUM(CASE WHEN comm_src = comm_dst THEN w ELSE 0 END) AS w_in FROM lab
+),
+degs AS (
+  SELECT comm, SUM(w_out) AS d_out, SUM(w_in) AS d_in FROM (
+    SELECT comm_src AS comm, SUM(w) AS w_out, 0 AS w_in FROM lab GROUP BY 1
+    UNION ALL
+    SELECT comm_dst AS comm, 0 AS w_out, SUM(w) AS w_in FROM lab GROUP BY 1
+  ) GROUP BY comm
+),
+crossterm AS (SELECT SUM(d_out * d_in) AS dd FROM degs)
+SELECT CAST(tot.m AS BIGINT) AS m_edges,
+       ROUND(CAST(within.w_in AS DOUBLE) / tot.m
+             - CAST(crossterm.dd AS DOUBLE) / (tot.m * tot.m), 6)
+         AS q_modularity
+FROM tot, within, crossterm
+"""
+
+
+@register(
+    "trade_modularity_score", oracle=_MODULARITY_ORACLE, tags=("graph", "stats")
+)
+def trade_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed weighted modularity of the region partition over the
+    nation trade graph: Q = Σ_within w/m − Σ_c (dᵒᵘᵗ_c·dⁱⁿ_c)/m² —
+    the community-quality score a Louvain-style pipeline maximizes,
+    computed here for the given (region) labeling. Every sufficient
+    statistic is an INTEGER (edge-count weights, degree products), so
+    both engines divide identical exact integers — the only float ops
+    are two divisions and one subtraction, ROUND 6.
+
+    Scale: one fact-side aggregation to nation-level edges (the same
+    persisted shape pagerank/BFS/Bellman-Ford reuse), then all
+    modularity math runs on ≤ 625 edge rows and 5 community rows.
+    """
+    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    edges = (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(s, l["l_suppkey"] == s["s_suppkey"])
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(F.count("*").alias("w"))
+    )
+    ns = n.select(F.col("n_nationkey").alias("src"), F.col("n_regionkey").alias("comm_src"))
+    nd = n.select(F.col("n_nationkey").alias("dst"), F.col("n_regionkey").alias("comm_dst"))
+    lab = edges.join(F.broadcast(ns), "src").join(F.broadcast(nd), "dst").persist()
+    tot = lab.agg(F.sum("w").alias("m"))
+    within = lab.agg(
+        F.sum(F.when(F.col("comm_src") == F.col("comm_dst"), F.col("w")).otherwise(0)).alias("w_in")
+    )
+    outs = lab.groupBy(F.col("comm_src").alias("comm")).agg(F.sum("w").alias("d_out"))
+    ins = lab.groupBy(F.col("comm_dst").alias("comm")).agg(F.sum("w").alias("d_in"))
+    crossterm = (
+        outs.join(ins, "comm", "full_outer")
+        .agg(
+            F.sum(
+                F.coalesce("d_out", F.lit(0)) * F.coalesce("d_in", F.lit(0))
+            ).alias("dd")
+        )
+    )
+    return (
+        tot.crossJoin(F.broadcast(within))
+        .crossJoin(F.broadcast(crossterm))
+        .select(
+            F.col("m").cast("bigint").alias("m_edges"),
+            F.round(
+                F.col("w_in").cast("double") / F.col("m")
+                - F.col("dd").cast("double") / (F.col("m") * F.col("m")),
+                6,
+            ).alias("q_modularity"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Degree assortativity of the nation trade graph
+# ---------------------------------------------------------------------------
+
+_ASSORT_ORACLE = """
+WITH flows AS (
+  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+         CAST(COUNT(*) AS BIGINT) AS w
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer c ON c.c_custkey = o.o_custkey
+  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+  GROUP BY 1, 2
+),
+thresh AS (
+  SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) AS avg_w FROM flows
+),
+edges AS (
+  SELECT src, dst FROM flows WHERE w > (SELECT avg_w FROM thresh)
+),
+outd AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS ud FROM edges GROUP BY src),
+ind  AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS vd FROM edges GROUP BY dst),
+ev AS (
+  SELECT o.ud AS u, i.vd AS v
+  FROM edges e JOIN outd o ON o.src = e.src JOIN ind i ON i.dst = e.dst
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_edges,
+  ROUND((COUNT(*) * CAST(SUM(u * v) AS DOUBLE) - CAST(SUM(u) AS DOUBLE) * SUM(v))
+        / NULLIF(
+            SQRT(COUNT(*) * CAST(SUM(u * u) AS DOUBLE) - CAST(SUM(u) AS DOUBLE) * SUM(u))
+          * SQRT(COUNT(*) * CAST(SUM(v * v) AS DOUBLE) - CAST(SUM(v) AS DOUBLE) * SUM(v)),
+            0.0), 6)
+    AS assortativity
+FROM ev
+"""
+
+
+@register(
+    "degree_assortativity_trade", oracle=_ASSORT_ORACLE, tags=("graph", "stats")
+)
+def degree_assortativity_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the nation trade network: the Pearson
+    correlation of (out-degree of source, in-degree of destination)
+    across trade edges — positive means hub exporters trade with hub
+    importers (hub-hub mixing), negative means hub-periphery. The
+    standard one-number summary of graph mixing structure (Newman
+    2002), joining the pagerank/triangle/modularity family. Edges are
+    the ABOVE-AVERAGE-weight flows: the 25-nation flow matrix is
+    complete (every pair trades a little), so the unweighted complete
+    graph has constant degrees and an undefined correlation — the
+    thresholded backbone is the graph whose mixing is worth measuring.
+
+    Determinism: the edge threshold compares exact BIGINT flow counts
+    to one global double mean (identical division both engines);
+    degrees and all Pearson sufficient statistics are exact BIGINTs
+    over ≤ 625 edges; the only double step is the final
+    covariance/√(var·var), NULLIF-guarded against a degenerate
+    constant-degree backbone, ROUND 6.
+
+    Scale: the fact-sized stage is the distinct-edge agg (map-side
+    partial); degrees and the correlation run on the bounded edge set,
+    joined back via two broadcast joins. For a billion-node graph the
+    same plan holds with degree tables shuffle-joined on node key.
+    """
+    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    flows = (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(F.broadcast(s), l["l_suppkey"] == s["s_suppkey"])
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(F.count("*").cast("long").alias("w"))
+    )
+    thresh = flows.agg(
+        (F.sum("w").cast("double") / F.count("*")).alias("avg_w")
+    )
+    edges = (
+        flows.crossJoin(F.broadcast(thresh))
+        .filter(F.col("w") > F.col("avg_w"))
+        .select("src", "dst")
+    )
+    outd = edges.groupBy("src").agg(F.count("*").cast("long").alias("ud"))
+    ind = edges.groupBy("dst").agg(F.count("*").cast("long").alias("vd"))
+    ev = (
+        edges.join(F.broadcast(outd), "src")
+        .join(F.broadcast(ind), "dst")
+        .select(F.col("ud").alias("u"), F.col("vd").alias("v"))
+    )
+    n = F.count("*")
+    su, sv = F.sum("u").cast("double"), F.sum("v").cast("double")
+    suv = F.sum(F.col("u") * F.col("v")).cast("double")
+    suu = F.sum(F.col("u") * F.col("u")).cast("double")
+    svv = F.sum(F.col("v") * F.col("v")).cast("double")
+    return ev.agg(
+        n.cast("long").alias("n_edges"),
+        F.round(
+            (n * suv - su * sv)
+            / F.nullif(
+                F.sqrt(n * suu - su * su) * F.sqrt(n * svv - sv * sv),
+                F.lit(0.0),
+            ),
+            6,
+        ).alias("assortativity"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# PageRank convergence residual
+# ---------------------------------------------------------------------------
+
+_PR_TOL = 0.01  # documented L1 tolerance for "5 supersteps is enough"
+
+_PR_RESID_ORACLE = f"""{PAGERANK_CTE_PREFIX}
+, d_last AS (
+  SELECT a.node, ROUND(ABS(b.rank - a.rank), 12) AS d
+  FROM r{_N_ITER - 1} a JOIN r{_N_ITER} b USING (node)
+), d_prev AS (
+  SELECT a.node, ROUND(ABS(b.rank - a.rank), 12) AS d
+  FROM r{_N_ITER - 2} a JOIN r{_N_ITER - 1} b USING (node)
+), sl AS (
+  SELECT CAST(SUM(CAST(d AS DECIMAL(28,12))) AS DOUBLE) AS l1_last,
+         MAX(d) AS max_abs_delta,
+         CAST(COUNT(*) AS BIGINT) AS n_nodes
+  FROM d_last
+), sp AS (
+  SELECT CAST(SUM(CAST(d AS DECIMAL(28,12))) AS DOUBLE) AS l1_prev
+  FROM d_prev
+)
+SELECT sl.n_nodes,
+       sl.l1_last,
+       sp.l1_prev,
+       ROUND(sl.l1_last / NULLIF(sp.l1_prev, 0.0), 6) AS contraction_ratio,
+       sl.max_abs_delta,
+       sl.l1_last <= {_PR_TOL} AS within_tol
+FROM sl CROSS JOIN sp
+"""
+
+
+@register(
+    "pagerank_residual_audit",
+    oracle=_PR_RESID_ORACLE,
+    tags=("graph", "iterative", "stats"),
+)
+def pagerank_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Convergence audit for the fixed-superstep PageRank
+    (pagerank_trade_network, graph.py): ONE row with the L1 residual
+    between the last two rank frames, the previous step's residual,
+    and their ratio — plus a within-tolerance verdict at the
+    documented L1 tolerance 0.01.
+
+    Why the ratio: ||r_{{k+1}} − r_k||₁ contracts by AT MOST the
+    damping factor d=0.85 per superstep for a stochastic PageRank
+    operator — the observed rate is d·|λ₂| of the column-stochastic
+    flow matrix, and a dense near-regular 25-nation trade network
+    mixes almost instantly (measured ratio ≈ 0.02 at sf0.01) — so
+    contraction_ratio ≤ d verifies the ITERATION IS the contraction
+    theory promises (a ratio near or above 1 would mean the
+    constant-5 unroll is a guess; a tiny residual with ratio ≪ d
+    proves every further superstep buys at least another ratio×).
+    This converts "enough supersteps" from a constant in graph.py (``_N_ITER``)
+    into a driver-verifiable number, per the round-7 brief.
+
+    Plan shape: the audit reuses the SAME rank fold (shared
+    ``pagerank_history`` — not a re-implementation) and reads the last
+    three iterates from each node's history array, so it needs no join
+    and nothing persisted: one aggregate over the 25 node rows.
+
+    Determinism: every rank is 12-dp rounded each superstep (the
+    PageRank convention), so per-node |Δ| is an exact IEEE difference
+    of identical doubles, re-rounded to 12 dp and summed in
+    DECIMAL(28,12) — both residuals and their ratio are bit-identical
+    cross-engine, and the boolean verdict compares deterministic
+    doubles against an exact literal.
+    """
+    ranks = F.col("ranks")
+
+    def resid(k: int) -> Column:
+        """|r_k − r_{k-1}| per node, ROUND 12; k counts from the end."""
+        return F.round(
+            F.abs(F.element_at(ranks, k) - F.element_at(ranks, k - 1)), 12
+        )
+
+    return (
+        pagerank_history(spark, sf_dir, _N_ITER)
+        .select(resid(-1).alias("d"), resid(-2).alias("dp"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_nodes"),
+            F.sum(F.col("d").cast("decimal(28,12)")).cast("double").alias("l1_last"),
+            F.sum(F.col("dp").cast("decimal(28,12)")).cast("double").alias("l1_prev"),
+            F.max("d").alias("max_abs_delta"),
+        )
+        .select(
+            "n_nodes",
+            "l1_last",
+            "l1_prev",
+            F.round(
+                F.col("l1_last") / F.nullif(F.col("l1_prev"), F.lit(0.0)), 6
+            ).alias("contraction_ratio"),
+            "max_abs_delta",
+            (F.col("l1_last") <= F.lit(_PR_TOL)).alias("within_tol"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# k-core decomposition of the copurchase graph (fixed-superstep peel)
+# ---------------------------------------------------------------------------
+
+_KCORE_K = 2
+
+_KCORE_SUPPORT = 2  # copurchase edge = pair seen in ≥2 distinct orders
+
+_KCORE_ROUNDS = 6  # > measured fixpoint (3 @ sf0.01, 5 @ sf0.1)
+
+_KCORE_EDGES_SQL = f"""basket AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+), pairs AS (
+  SELECT a.l_partkey AS a, b.l_partkey AS b
+  FROM basket a JOIN basket b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+), e0 AS MATERIALIZED (
+  SELECT a, b FROM pairs GROUP BY a, b HAVING COUNT(*) >= {_KCORE_SUPPORT}
+)"""
+
+
+def _sql_peel(i: int) -> str:
+    """One unrolled peel superstep: degree → sub-k node set → edge
+    filter (mirrors the Spark loop body expression-for-expression).
+    Every CTE that is referenced more than once downstream is
+    MATERIALIZED: DuckDB inlines plain CTEs, and each superstep
+    references its predecessor ~5× (degree union branches + both
+    NOT-IN filters), so an un-materialized chain re-inlines the base
+    scan exponentially (observed as a too-many-open-files error at
+    six rounds) — the oracle-side analogue of the Spark loop's
+    localCheckpoint-per-round."""
+    return f"""d{i} AS MATERIALIZED (
+  SELECT node, COUNT(*) AS d FROM (
+    SELECT a AS node FROM e{i} UNION ALL SELECT b FROM e{i}
+  ) u GROUP BY node
+), bad{i} AS MATERIALIZED (
+  SELECT node FROM d{i} WHERE d < {_KCORE_K}
+), e{i + 1} AS MATERIALIZED (
+  SELECT a, b FROM e{i}
+  WHERE a NOT IN (SELECT node FROM bad{i})
+    AND b NOT IN (SELECT node FROM bad{i})
+)"""
+
+
+_KCORE_ORACLE = f"""
+WITH {_KCORE_EDGES_SQL},
+{",".join(_sql_peel(i) for i in range(_KCORE_ROUNDS))}
+SELECT node AS part, CAST(d AS BIGINT) AS core_degree
+FROM (
+  SELECT node, COUNT(*) AS d FROM (
+    SELECT a AS node FROM e{_KCORE_ROUNDS}
+    UNION ALL SELECT b FROM e{_KCORE_ROUNDS}
+  ) u GROUP BY node
+)
+"""
+
+
+def kcore_peel(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
+    """Parameterized peel (see kcore_copurchase): surviving nodes and
+    in-core degrees after ``rounds`` supersteps. Exposed so the
+    fixpoint test can assert rounds−1 ≡ rounds."""
+    baskets = (
+        read_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+    )
+    parts = F.col("parts")
+    pair_arr = F.flatten(
+        F.transform(
+            parts,
+            lambda x, i: F.transform(
+                F.slice(parts, i + F.lit(2), F.size(parts)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    edges = (
+        baskets.select(F.explode(pair_arr).alias("p"))
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("w"))
+        .filter(F.col("w") >= _KCORE_SUPPORT)
+        .select("a", "b")
+        .localCheckpoint()
+    )
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.col("a").alias("node"))
+            .unionAll(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("d"))
+        )
+
+    for _ in range(rounds):
+        bad = degrees(edges).filter(F.col("d") < _KCORE_K).select("node")
+        edges = (
+            edges.join(bad.select(F.col("node").alias("a")), "a", "left_anti")
+            .join(bad.select(F.col("node").alias("b")), "b", "left_anti")
+            .localCheckpoint()
+        )
+    return degrees(edges).select(
+        F.col("node").alias("part"),
+        F.col("d").cast("bigint").alias("core_degree"),
+    )
+
+
+@register(
+    "kcore_copurchase",
+    oracle=_KCORE_ORACLE,
+    tags=("graph", "iterative"),
+)
+def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-core of the part copurchase graph (edges = part pairs
+    co-purchased in ≥2 distinct orders): iteratively remove nodes of
+    degree < 2 for six fixed supersteps, then report every surviving
+    node with its in-core degree. Six rounds is a measured fixpoint at
+    both driver SFs (3 rounds to converge at sf0.01, 5 at sf0.1;
+    tests/test_round8b.py asserts round 5 ≡ round 6), so the output IS
+    the k-core, not a truncation — the pagerank/kmeans_lloyd
+    fixed-iteration discipline that keeps an iterative algorithm
+    exactly oracle-checkable.
+
+    Scale: edge generation is the copurchase array spelling
+    (extras3.py:43 — scan-side a<b pairs from per-order sorted part
+    arrays, NO basket self-join, per-order cost bounded by basket
+    size²); each superstep is one union + hash-agg (degree) and two
+    anti-joins, all keyed on part ids, with localCheckpoint per round
+    truncating lineage (every round's edge frame has three consumers —
+    degree + both anti-joins — so eager materialization also prevents
+    branch re-execution). Peeling strictly shrinks the edge set, so
+    superstep cost is monotonically decreasing.
+    """
+    return kcore_peel(spark, sf_dir, _KCORE_ROUNDS)
+
+
+# ---------------------------------------------------------------------------
+# Local clustering coefficient on the copurchase graph
+# ---------------------------------------------------------------------------
+
+_CLUSTER_ORACLE = f"""
+WITH {_KCORE_EDGES_SQL},
+tri AS (
+  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+  FROM e0 e1
+  JOIN e0 e2 ON e2.a = e1.b
+  JOIN e0 e3 ON e3.a = e1.a AND e3.b = e2.b
+), per_node_tri AS (
+  SELECT node, COUNT(*) AS n_triangles FROM (
+    SELECT x AS node FROM tri
+    UNION ALL SELECT y FROM tri
+    UNION ALL SELECT z FROM tri
+  ) GROUP BY node
+), deg AS (
+  SELECT node, COUNT(*) AS deg FROM (
+    SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0
+  ) GROUP BY node
+)
+SELECT d.node AS part,
+       CAST(d.deg AS BIGINT) AS degree,
+       CAST(COALESCE(t.n_triangles, 0) AS BIGINT) AS n_triangles,
+       CASE WHEN d.deg >= 2 THEN
+         ROUND(2.0 * COALESCE(t.n_triangles, 0) / (d.deg * (d.deg - 1)), 6)
+       ELSE 0.0 END AS clustering_coeff
+FROM deg d LEFT JOIN per_node_tri t USING (node)
+"""
+
+
+@register(
+    "clustering_coeff_copurchase",
+    oracle=_CLUSTER_ORACLE,
+    tags=("graph", "join"),
+)
+def clustering_coeff_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Local clustering coefficient per part on the support≥2
+    copurchase graph (same edge set as kcore_copurchase): degree,
+    triangle count, and 2·T/(deg·(deg−1)) — how much of each node's
+    neighborhood is itself connected, THE community-vs-hub
+    discriminator (high coefficient = cohesive basket cluster, low =
+    promiscuous staple part).
+
+    Triangle enumeration is the degree-ordered compact-forward plan
+    proven on the nation graph (extras3.py triangle_count_trade —
+    wedges form only at each triangle's lowest-degree corner in the
+    (degree, node) total order, each wedge probes the directed edge
+    set once, work O(E^1.5) by Chiba–Nishizeki instead of Σdeg²),
+    here exercised on a fact-derived graph with thousands of nodes.
+    The oracle enumerates triangles id-canonically (a<b edges, three
+    self-joins) — enumeration-order invariant per-node counts grade
+    both plans identically. Division is CASE-guarded: Spark yields
+    NULL for x/0 where DuckDB does not (registry convention), and
+    degree-1 nodes define coefficient 0.
+
+    Scale: edge generation is the scan-side array-pair spelling
+    (per-order baskets, no self-join); degrees are edge-grain
+    hash-aggs; the directed edge set and wedge joins run on the
+    support-thresholded edge table (3.4k–3.6k edges at sf0.01→0.1 —
+    grows with DISTINCT co-occurring pairs, far sublinear in rows).
+    """
+    baskets = (
+        read_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+    )
+    parts = F.col("parts")
+    pair_arr = F.flatten(
+        F.transform(
+            parts,
+            lambda x, i: F.transform(
+                F.slice(parts, i + F.lit(2), F.size(parts)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    und = (
+        baskets.select(F.explode(pair_arr).alias("p"))
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("a", "b")
+        .localCheckpoint()
+    )
+    deg = (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+    with_deg = und.join(
+        F.broadcast(
+            deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
+        ),
+        "a",
+    ).join(
+        F.broadcast(
+            deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
+        ),
+        "b",
+    )
+    a_first = (F.col("deg_a") < F.col("deg_b")) | (
+        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
+    )
+    dir_e = with_deg.select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+    )
+    w1 = dir_e.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    w2 = dir_e.select(F.col("src").alias("x"), F.col("dst").alias("z"))
+    e3 = dir_e.select(F.col("src").alias("y"), F.col("dst").alias("z"))
+    tri = w1.join(w2, "x").filter(F.col("y") != F.col("z")).join(e3, ["y", "z"])
+    corners = (
+        tri.select(F.col("x").alias("node"))
+        .unionAll(tri.select(F.col("y").alias("node")))
+        .unionAll(tri.select(F.col("z").alias("node")))
+    )
+    per_node = corners.groupBy("node").agg(F.count("*").alias("n_triangles"))
+    t = F.coalesce("n_triangles", F.lit(0))
+    d = F.col("deg")
+    return deg.join(per_node, "node", "left").select(
+        F.col("node").alias("part"),
+        d.cast("bigint").alias("degree"),
+        t.cast("bigint").alias("n_triangles"),
+        F.when(
+            d >= 2, F.round(2.0 * t / (d * (d - 1)), 6)
+        )
+        .otherwise(F.lit(0.0))
+        .alias("clustering_coeff"),
+    )
+
+
+_HITS_ITER = 4
+
+# Directed nation->nation trade edges (supplier nation sells to
+# customer nation), weighted by lineitem count — same fact join as
+# pagerank_trade_network (graph.py), self-loops excluded so hub and
+# authority mass cannot feed back through a single node.
+_EDGES_SQL = """
+edges AS MATERIALIZED (
+  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+         CAST(COUNT(*) AS DOUBLE) AS w
+  FROM lineitem l
+  JOIN orders o ON o.o_orderkey = l.l_orderkey
+  JOIN customer c ON c.c_custkey = o.o_custkey
+  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+  WHERE s.s_nationkey <> c.c_nationkey
+  GROUP BY s.s_nationkey, c.c_nationkey
+), nodes AS (
+  SELECT n_nationkey AS node FROM nation
+)"""
+
+
+def _hits_step(prev: str, cur: str, key_in: str, key_out: str) -> str:
+    """One propagate + L1-normalize step. The normalizer is a WINDOW
+    sum (exact DECIMAL, so order-free), NOT a scalar subquery: DuckDB
+    inlines CTEs per reference, so a subquery normalizer would make
+    each step reference its _raw frame twice and the 8-step chain
+    re-execute exponentially (the oracle-side twin of the Spark side's
+    let-bound normalizer)."""
+    return f"""{cur} AS (
+  SELECT node,
+    ROUND(raw / CAST(SUM(CAST(raw AS DECIMAL(38,12))) OVER ()
+                     AS DOUBLE), 12) AS score
+  FROM (
+    SELECT n.node, CAST(COALESCE(s.v, 0) AS DOUBLE) AS raw
+    FROM nodes n LEFT JOIN (
+      SELECT e.{key_out} AS node,
+        CAST(SUM(CAST(ROUND(p.score * e.w, 12) AS DECIMAL(38,12)))
+             AS DOUBLE) AS v
+      FROM {prev} p JOIN edges e ON e.{key_in} = p.node
+      GROUP BY e.{key_out}
+    ) s ON s.node = n.node
+  )
+)"""
+
+
+def _auth_step(h_prev: str, a_cur: str) -> str:
+    """authority(v) = Σ_{u→v} hub(u)·w, then L1-normalize."""
+    return _hits_step(h_prev, a_cur, "src", "dst")
+
+
+def _hub_step(a_cur: str, h_cur: str) -> str:
+    """hub(u) = Σ_{u→v} authority(v)·w, then L1-normalize."""
+    return _hits_step(a_cur, h_cur, "dst", "src")
+
+
+_HITS_STEPS = ",\n".join(
+    _auth_step(f"h{i}", f"a{i + 1}") + ",\n" + _hub_step(f"a{i + 1}", f"h{i + 1}")
+    for i in range(_HITS_ITER)
+)
+
+_HITS_ORACLE = f"""
+WITH {_EDGES_SQL},
+h0 AS (
+  SELECT node, CAST(1.0 / (SELECT COUNT(*) FROM nodes) AS DOUBLE) AS score
+  FROM nodes
+),
+{_HITS_STEPS}
+SELECT a.node,
+       ROUND(a.score, 6) AS authority,
+       ROUND(h.score, 6) AS hub
+FROM a{_HITS_ITER} a JOIN h{_HITS_ITER} h ON h.node = a.node
+ORDER BY authority DESC, a.node
+"""
+
+
+@register(
+    "hits_hub_authority",
+    oracle=_HITS_ORACLE,
+    tags=("graph", "iterative", "join"),
+)
+def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kleinberg HITS on the directed nation trade network: {k}
+    unrolled hub/authority superstep pairs, each an edge propagation +
+    L1 normalization — the two-vector sibling of
+    ``pagerank_trade_network`` (same gathered fold: no Spark action
+    per step; the oracle unrolls identical CTEs). L1 rather than
+    L2 normalization keeps the per-step math inside the engine's
+    round-12-decimal-sum convention (no sqrt inside the loop; the
+    fixed point's RANKING is identical, only the scale convention
+    differs — documented deviation from the classical L2 spelling).
+
+    Determinism: every per-node sum and every normalizer is a
+    round-12-then-exact-decimal sum (``array_dsum``, order-free); scores
+    stay ≤ 1 by normalization, so decimal casts are exact-range; outputs
+    ROUND 6.
+
+    Scale: the edge weights build once from one fact scan. Gather
+    contract: the weighted edge list is gathered into one row
+    (``gather_graph``), bounded by the nation dimension (≤600 directed
+    lanes), never by row count. The state is a struct of two node-sized
+    arrays (authority, hub); the {k} superstep pairs run in that row as
+    one ``fold_steps`` column — no per-step join, shuffle, checkpoint or
+    Spark job, nothing persisted. Each step's raw vector and its
+    normalizer are let-bound once (``_let``), so no fold is re-evaluated
+    per element.
+    """
+    edges = (
+        trade_lines(spark, sf_dir)
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(F.count("*").cast("double").alias("w"))
+    )
+
+    def propagate(x: Column, es: Column, key_in: str, key_out: str) -> Column:
+        """Scores x pushed along the edges from key_in to key_out, then
+        L1-normalized; raw and its normalizer are let-bound once."""
+        raw = F.transform("ns", lambda _, i: F.coalesce(array_dsum(edge_terms(
+            es, i, key_out, lambda e: F.round(F.element_at(x, e[key_in]) * e["w"], 12)
+        )).cast("double"), F.lit(0.0)))
+        return _let(raw, lambda r: _let(
+            array_dsum(r).cast("double"),
+            lambda z: F.transform(r, lambda v: F.round(v / z, 12)),
+        ))
+
+    def step(st: Column, es: Column) -> Column:
+        return _let(
+            propagate(st["hub"], es, "s", "d"),
+            lambda a: F.struct(a.alias("auth"), propagate(a, es, "d", "s").alias("hub")),
+        )
+
+    h0 = F.transform("ns", lambda _: F.lit(1.0 / _N_NODES))
+    st0 = F.struct(h0.alias("auth"), h0.alias("hub"))
+    return (
+        gather_graph(edges, read_table(spark, sf_dir, "nation").select("n_nationkey"))
+        .select("ns", F.element_at(fold_steps(st0, step, _HITS_ITER), -1).alias("st"))
+        .select(F.posexplode("ns").alias("i", "node"), "st")
+        .select(
+            "node",
+            F.round(F.element_at("st.auth", F.col("i") + 1), 6).alias("authority"),
+            F.round(F.element_at("st.hub", F.col("i") + 1), 6).alias("hub"),
+        )
+        .orderBy(F.desc("authority"), "node")
+    )
+
+
+hits_hub_authority.__doc__ = hits_hub_authority.__doc__.format(k=_HITS_ITER)
+
+
+# ---------------------------------------------------------------------------
+# Link prediction: Adamic–Adar / Resource-Allocation / Pref-Attachment
+# ---------------------------------------------------------------------------
+
+_TOP_LANES = 5
+
+# The raw nation trade graph is COMPLETE even at sf0.01 (every nation
+# trades with every other), which leaves link prediction and dyad
+# structure nothing to see. Both structural queries therefore run on
+# the MAJOR-LANE graph: each nation's top-{k} export lanes by lineitem
+# volume (rank-based sparsification — scale-invariant, unlike an
+# absolute volume threshold, and deterministic via the (w DESC, dst)
+# total order).
+_LANES_SQL = f"""
+lanes AS (
+  SELECT src, dst FROM (
+    SELECT src, dst,
+           ROW_NUMBER() OVER (PARTITION BY src
+                              ORDER BY w DESC, dst) AS rk
+    FROM (
+      SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+             CAST(COUNT(*) AS BIGINT) AS w
+      FROM lineitem l
+      JOIN orders o ON o.o_orderkey = l.l_orderkey
+      JOIN customer c ON c.c_custkey = o.o_custkey
+      JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      WHERE s.s_nationkey <> c.c_nationkey
+      GROUP BY s.s_nationkey, c.c_nationkey
+    )
+  ) WHERE rk <= {_TOP_LANES}
+)"""
+
+_AA_ORACLE = f"""
+WITH {_LANES_SQL}, und AS (
+  SELECT DISTINCT
+         LEAST(src, dst) AS a,
+         GREATEST(src, dst) AS b
+  FROM lanes
+), adj AS (
+  SELECT a AS node, b AS nbr FROM und
+  UNION ALL
+  SELECT b AS node, a AS nbr FROM und
+), deg AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY node
+), cand AS (
+  SELECT x.node AS u, y.node AS v, x.nbr AS z
+  FROM adj x JOIN adj y ON x.nbr = y.nbr AND x.node < y.node
+), missing AS (
+  SELECT cd.u, cd.v, cd.z FROM cand cd
+  LEFT JOIN und e ON e.a = cd.u AND e.b = cd.v
+  WHERE e.a IS NULL
+), scored AS (
+  SELECT m.u, m.v,
+         CAST(COUNT(*) AS BIGINT) AS n_common,
+         CAST(SUM(CAST(ROUND(1.0 / LN(dz.d), 12) AS DECIMAL(18,12)))
+              AS DOUBLE) AS aa,
+         CAST(SUM(CAST(ROUND(1.0 / dz.d, 12) AS DECIMAL(18,12)))
+              AS DOUBLE) AS ra
+  FROM missing m JOIN deg dz ON dz.node = m.z
+  GROUP BY m.u, m.v
+)
+SELECT sc.u, sc.v, sc.n_common,
+       ROUND(sc.aa, 6) AS adamic_adar,
+       ROUND(sc.ra, 6) AS resource_alloc,
+       CAST(du.d * dv.d AS BIGINT) AS pref_attach
+FROM scored sc
+JOIN deg du ON du.node = sc.u
+JOIN deg dv ON dv.node = sc.v
+ORDER BY adamic_adar DESC, sc.u, sc.v
+"""
+
+
+def _major_lanes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed major-lane graph: each nation's top-{k} export lanes
+    by lineitem volume (see _LANES_SQL — rank-based sparsification of
+    the otherwise-complete trade graph, deterministic via the
+    (w DESC, dst) total order)."""
+
+    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    w = (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(s, l["l_suppkey"] == s["s_suppkey"])
+        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
+        .groupBy(
+            F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
+        )
+        .agg(F.count("*").cast("long").alias("w"))
+    )
+    rk = F.row_number().over(
+        Window.partitionBy("src").orderBy(F.desc("w"), "dst")
+    )
+    return w.select("src", "dst", rk.alias("rk")).filter(
+        F.col("rk") <= _TOP_LANES
+    ).select("src", "dst")
+
+
+@register("adamic_adar_linkpred", oracle=_AA_ORACLE, tags=("graph", "join"))
+def adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Classical link prediction on the undirected MAJOR-LANE trade
+    graph (each nation's top-5 export lanes by volume — the raw trade
+    graph is complete, so sparsification is rank-based and therefore
+    scale-invariant): for every NON-adjacent nation pair with at
+    least one common trading partner, the three standard scores — Adamic–Adar Σ_z 1/ln(d_z)
+    (rare shared partners count more), Resource-Allocation Σ_z 1/d_z
+    (the stingier variant that wins on dense graphs), and
+    Preferential-Attachment d_u·d_v (the null model). Ranked by AA:
+    the "which trade lane opens next" shortlist. Complements
+    ``neighbor_jaccard_nodes``, which scores EXISTING-edge
+    similarity; this scores the MISSING edges.
+
+    Determinism: degrees and common-neighbor counts are exact
+    BIGINTs; each z term 1/ln(d) and 1/d is ROUND-12 then
+    DECIMAL(18,12)-summed (order-free; d ≥ 2 for any shared
+    neighbor's hub, and d ≥ 1 generally — ln(1) = 0 cannot appear in
+    a denominator because a degree-1 node's only neighbor pair is
+    itself); PA is an exact integer product; outputs ROUND 6.
+
+    Scale: the adjacency is node-grain (≤ V² rows after the DISTINCT
+    edge collapse — the fact scan reduces first); candidate
+    generation is the standard common-neighbor self-join keyed on the
+    shared neighbor (fan-in bounded by max degree); the anti-join
+    onto existing edges prunes known lanes before scoring. On a big
+    graph the z-key join IS the LSH-style bucketing — no all-pairs.
+    """
+    lanes = _major_lanes(spark, sf_dir)
+    und = (
+        lanes.select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct()
+        .persist()
+    )
+    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
+        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+    )
+    deg = adj.groupBy("node").agg(F.count("*").cast("long").alias("d"))
+    x = adj.select(F.col("node").alias("u"), F.col("nbr").alias("z"))
+    y = adj.select(F.col("node").alias("v"), F.col("nbr").alias("z"))
+    cand = x.join(y, "z").filter(F.col("u") < F.col("v"))
+    missing = cand.join(
+        und,
+        (und["a"] == cand["u"]) & (und["b"] == cand["v"]),
+        "left_anti",
+    )
+    dz = deg.select(F.col("node").alias("z"), F.col("d").alias("dz"))
+    scored = (
+        missing.join(F.broadcast(dz), "z")
+        .groupBy("u", "v")
+        .agg(
+            F.count("*").cast("long").alias("n_common"),
+            F.sum(
+                F.round(F.lit(1.0) / F.log(F.col("dz")), 12).cast(
+                    "decimal(18,12)"
+                )
+            )
+            .cast("double")
+            .alias("aa"),
+            F.sum(
+                F.round(F.lit(1.0) / F.col("dz"), 12).cast("decimal(18,12)")
+            )
+            .cast("double")
+            .alias("ra"),
+        )
+    )
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    return (
+        scored.join(F.broadcast(du), "u")
+        .join(F.broadcast(dv), "v")
+        .select(
+            "u",
+            "v",
+            "n_common",
+            F.round("aa", 6).alias("adamic_adar"),
+            F.round("ra", 6).alias("resource_alloc"),
+            (F.col("du") * F.col("dv")).cast("long").alias("pref_attach"),
+        )
+        .orderBy(F.desc("adamic_adar"), "u", "v")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dyad census: mutual / asymmetric / null, density, reciprocity
+# ---------------------------------------------------------------------------
+
+_DYAD_ORACLE = f"""
+WITH {_LANES_SQL}, und AS (
+  SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
+         CAST(COUNT(*) AS BIGINT) AS links
+  FROM lanes GROUP BY 1, 2
+), n AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS v FROM nation
+), st AS (
+  SELECT CAST(COUNT(*) FILTER (WHERE links = 2) AS BIGINT) AS mutual,
+         CAST(COUNT(*) FILTER (WHERE links = 1) AS BIGINT) AS asym,
+         CAST((SELECT SUM(links) FROM und) AS BIGINT) AS n_edges
+  FROM und
+)
+SELECT mutual AS mutual_dyads,
+       asym AS asym_dyads,
+       CAST(n.v * (n.v - 1) / 2 - mutual - asym AS BIGINT) AS null_dyads,
+       n_edges AS directed_edges,
+       ROUND(CAST(n_edges AS DOUBLE) / (n.v * (n.v - 1)), 6) AS density,
+       ROUND(2.0 * mutual / n_edges, 6) AS reciprocity
+FROM st CROSS JOIN n
+"""
+
+
+@register("dyad_census_trade", oracle=_DYAD_ORACLE, tags=("graph", "agg"))
+def dyad_census_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holland–Leinhardt dyad census of the directed MAJOR-LANE trade
+    network (top-5 export lanes per nation; the raw graph is complete
+    and so census-trivial): counts of mutual (A⇄B), asymmetric (A→B
+    only), and null nation dyads, plus edge density and reciprocity
+    2M/E (the probability that a major export lane is reciprocated).
+    The one-row structural profile read before fitting any graph
+    model — reciprocity ≫ density is the signature of bilateral trade
+    agreements; reciprocity ≈ density means lanes are independent.
+
+    Determinism: everything is an exact BIGINT count from one
+    DISTINCT-edge collapse and one dyad-grain agg (a dyad's link
+    count is 2 = mutual, 1 = asymmetric; null dyads are V(V−1)/2
+    minus the observed); the two ratios are single divisions ROUND 6.
+
+    Scale: the fact scan collapses to DISTINCT directed edges first
+    (map-side combinable), dyad grain is ≤ V²; all census math runs
+    on one row of sufficient statistics.
+    """
+    e = _major_lanes(spark, sf_dir)
+    und = e.groupBy(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).agg(F.count("*").cast("long").alias("links"))
+    nv = read_table(spark, sf_dir, "nation").agg(
+        F.count("*").cast("long").alias("v")
+    )
+    st = und.agg(
+        F.sum(F.when(F.col("links") == 2, 1).otherwise(0))
+        .cast("long")
+        .alias("mutual"),
+        F.sum(F.when(F.col("links") == 1, 1).otherwise(0))
+        .cast("long")
+        .alias("asym"),
+        F.sum("links").cast("long").alias("n_edges"),
+    )
+    v = F.col("v")
+    return st.crossJoin(F.broadcast(nv)).select(
+        F.col("mutual").alias("mutual_dyads"),
+        F.col("asym").alias("asym_dyads"),
+        (v * (v - 1) / 2 - F.col("mutual") - F.col("asym"))
+        .cast("long")
+        .alias("null_dyads"),
+        F.col("n_edges").alias("directed_edges"),
+        F.round(F.col("n_edges").cast("double") / (v * (v - 1)), 6).alias(
+            "density"
+        ),
+        F.round(F.lit(2.0) * F.col("mutual") / F.col("n_edges"), 6).alias(
+            "reciprocity"
+        ),
     )

@@ -1,11 +1,16 @@
-"""Reference-parity queries: the reference pipeline's signature scalar
-functions and its enrich-join chain (SURVEY.md §2.8, §3), exercised over
-the driver's synthetic tables so every one is oracle-checked.
+"""Reference-parity queries: the reference pipeline's scalar functions,
+its pipeline steps and its data-quality validation (SURVEY.md §2.8, §3),
+exercised over the driver's synthetic tables so every one is
+oracle-checked.
 
 Synthetic inputs are derived deterministically from table keys with
 identical expressions on the Spark and DuckDB sides (the testdata has no
 lat/lon or odds strings; the reference's domain columns are synthesized
 from keys — the OPERATORS are what is under test).
+
+Registry conventions apply (plans/registry.py): exact decimal sums,
+ROUND 6 on transcendental/division outputs, atomic columns,
+BIGINT/DOUBLE/VARCHAR oracle casts.
 """
 
 from __future__ import annotations
@@ -20,10 +25,10 @@ from ucl_data_pipeline_spark.functions.scalar import (
     parse_date_multi,
     ratio_with_floor,
     sign_score,
-    weighted_hybrid,
 )
-from ucl_data_pipeline_spark.plans.registry import r6, register
-from ucl_data_pipeline_spark.sources.io import read_table
+from ucl_data_pipeline_spark.plans.registry import davg, r6, register, sql_davg
+from ucl_data_pipeline_spark.sources.io import conform_column_names, fan_out, read_table
+
 
 # ---------------------------------------------------------------------------
 # F10 — haversine travel distance (pure column expression, no UDF)
@@ -191,7 +196,6 @@ def conform_column_names_upper(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scripts/fetch_football_data.py:31-32). Metadata-only rename: free
     at any scale.
     """
-    from ucl_data_pipeline_spark.sources.io import conform_column_names
 
     n = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -258,7 +262,6 @@ def date_parse_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     → NULL (reference: pd.to_datetime(dayfirst=True),
     scripts/fetch_football_data.py:45).
     """
-    from ucl_data_pipeline_spark.sources.io import fan_out
 
     o = fan_out(
         read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -283,140 +286,289 @@ def date_parse_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# The reference's relational core: the enrich-join chain as one lazy DAG
-# ---------------------------------------------------------------------------
-
-_ENRICH_PIPELINE_ORACLE = """
-WITH fact AS (
-  SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice, o_orderstatus
-  FROM orders
-  WHERE o_custkey IS NOT NULL
-), prev AS (
-  SELECT
-    fact.*,
-    date_diff('day',
-      lag(CAST(o_orderdate AS DATE))
-        OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-      CAST(o_orderdate AS DATE)) AS rest_days_raw
-  FROM fact
-)
+_STRINGS_ORACLE = """
 SELECT
-  p.o_orderkey,
-  p.o_orderdate,
-  p.o_totalprice,
-  COALESCE(c.c_name, 'UNKNOWN') AS customer_name,
-  COALESCE(n.n_name, 'UNKNOWN') AS nation_name,
-  COALESCE(p.rest_days_raw, 4) AS rest_days,
-  COALESCE(c.c_acctbal, 0.0) AS acct_bal,
-  greatest(0.55, least(0.90, COALESCE(c.c_acctbal / 10000.0, 0.725)))
-    AS customer_prior
-FROM prev p
-LEFT JOIN customer c ON p.o_custkey = c.c_custkey
-LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+  p_partkey,
+  concat_ws('|', p_brand, p_type) AS brand_type,
+  substring(p_name, 1, 8) AS name_head,
+  lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_padded,
+  replace(p_type, ' ', '_') AS type_snake,
+  split_part(p_type, ' ', 1) AS type_first_word,
+  strpos(p_type, 'BRUSHED') AS brushed_pos,
+  reverse(p_brand) AS brand_rev,
+  translate(p_brand, '#', '-') AS brand_dashed,
+  CAST(length(p_name) AS INTEGER) AS name_len,
+  CASE WHEN p_type LIKE '%STEEL%' THEN 1 ELSE 0 END AS is_steel
+FROM part
 """
 
 
-@register("enrich_pipeline", oracle=_ENRICH_PIPELINE_ORACLE, tags=("join", "pipeline"))
-def enrich_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry-point-2 analog (SURVEY.md §3): the reference's
-    read→filter→window→broadcast-enrich→default-fill chain
-    (scripts/enrich_features.py:151-179) as ONE lazy DataFrame DAG —
-    Catalyst sees the whole lineage; no per-stage materialization.
-    Defaults fill last, existing values win (enrich-don't-clobber).
+_JSON_RT_ORACLE = """
+WITH j AS (
+  SELECT
+    o_orderkey,
+    to_json(struct_pack(
+      o_orderkey := o_orderkey,
+      o_orderstatus := o_orderstatus,
+      o_totalprice := o_totalprice
+    )) AS js
+  FROM orders
+)
+SELECT
+  o_orderkey,
+  json_extract_string(js, '$.o_orderstatus') AS status_rt,
+  CAST(json_extract(js, '$.o_totalprice') AS DOUBLE) AS price_rt
+FROM j
+"""
+
+
+@register("json_roundtrip", oracle=_JSON_RT_ORACLE, tags=("scalar", "json"))
+def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serialize row structs to JSON strings and parse them back
+    (``to_json`` / ``from_json`` with an explicit schema) — the
+    columnar JSON codec path used at ingest/egress boundaries (S3/F12
+    in SURVEY.md §2). Doubles survive exactly: both engines print
+    shortest round-trippable representations. All JVM-side, codegen'd.
     """
-    fact = (
-        read_table(spark, sf_dir, "orders")
-        .filter(F.col("o_custkey").isNotNull())
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice",
-                "o_orderstatus")
+
+    o = fan_out(
+        read_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
     )
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    d = F.col("o_orderdate").cast("date")
-    fact = fact.withColumn("rest_days_raw", F.datediff(d, F.lag(d).over(w)))
+    js = F.to_json(F.struct("o_orderkey", "o_orderstatus", "o_totalprice"))
+    parsed = F.from_json(
+        js, "o_orderkey bigint, o_orderstatus string, o_totalprice double"
+    )
+    return o.select(
+        "o_orderkey",
+        parsed["o_orderstatus"].alias("status_rt"),
+        parsed["o_totalprice"].alias("price_rt"),
+    )
+
+
+@register("string_functions", oracle=_STRINGS_ORACLE, tags=("scalar", "text"))
+def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scalar string surface: concat_ws / substring / pad / replace
+    / split_part / strpos / reverse / translate / length / LIKE — all
+    codegen'd JVM expressions.
+    """
+    p = read_table(spark, sf_dir, "part")
+    return p.select(
+        "p_partkey",
+        F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
+        F.substring("p_name", 1, 8).alias("name_head"),
+        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_padded"),
+        F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
+        F.split_part(F.col("p_type"), F.lit(" "), F.lit(1)).alias("type_first_word"),
+        F.instr(F.col("p_type"), "BRUSHED").alias("brushed_pos"),
+        F.reverse(F.col("p_brand")).alias("brand_rev"),
+        F.translate(F.col("p_brand"), "#", "-").alias("brand_dashed"),
+        F.length("p_name").alias("name_len"),
+        F.when(F.col("p_type").like("%STEEL%"), 1).otherwise(0).alias("is_steel"),
+    )
+
+
+_DQ_ORACLE = f"""
+SELECT
+  COUNT(*) AS n_rows,
+  COUNT(DISTINCT o_orderkey) AS n_distinct_keys,
+  COUNT(*) - COUNT(o_custkey) AS null_custkeys,
+  COUNT(*) - COUNT(o_totalprice) AS null_prices,
+  MIN(o_totalprice) AS min_price,
+  MAX(o_totalprice) AS max_price,
+  {sql_davg('o_totalprice')} AS mean_price,
+  MIN(o_orderdate) AS min_date,
+  MAX(o_orderdate) AS max_date,
+  COUNT(CASE WHEN o_totalprice <= 0 THEN 1 END) AS nonpositive_prices
+FROM orders
+"""
+
+
+@register("data_quality_profile", oracle=_DQ_ORACLE, tags=("validate", "agg"))
+def data_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Single-pass data-quality profile (row/key counts, null counts,
+    ranges, violation counts) — the expectation-check aggregate every
+    pipeline stage gates on (V1/V2 generalized from warn-only prints to
+    a queryable contract). One scan, partial-aggregated; at 100 TB this
+    is the cheap pre-flight before expensive stages.
+    """
+    o = read_table(spark, sf_dir, "orders")
+    return o.agg(
+        F.count("*").alias("n_rows"),
+        F.countDistinct("o_orderkey").alias("n_distinct_keys"),
+        (F.count("*") - F.count("o_custkey")).alias("null_custkeys"),
+        (F.count("*") - F.count("o_totalprice")).alias("null_prices"),
+        F.min("o_totalprice").alias("min_price"),
+        F.max("o_totalprice").alias("max_price"),
+        davg("o_totalprice").alias("mean_price"),
+        F.min("o_orderdate").alias("min_date"),
+        F.max("o_orderdate").alias("max_date"),
+        F.count(F.when(F.col("o_totalprice") <= 0, 1)).alias("nonpositive_prices"),
+    )
+
+
+_UPSERT_ORACLE = """
+WITH v1 AS (
+  SELECT c_custkey, c_name, c_acctbal, 1 AS version FROM customer
+),
+v2 AS (
+  SELECT c_custkey, c_name, c_acctbal + 100.0 AS c_acctbal, 2 AS version
+  FROM customer WHERE c_custkey % 3 = 0
+),
+unioned AS (
+  SELECT * FROM v1 UNION ALL SELECT * FROM v2
+)
+SELECT c_custkey, c_name, c_acctbal, version FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY c_custkey ORDER BY version DESC
+  ) AS rn FROM unioned
+) WHERE rn = 1
+"""
+
+
+@register("snapshot_upsert_latest", oracle=_UPSERT_ORACLE, tags=("pipeline", "window"))
+def snapshot_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Upsert/merge without a table format: union the base snapshot
+    with a (deterministically derived) delta carrying a higher version,
+    keep the latest row per key via a ranking window — the
+    keep-latest-wins merge every incremental pipeline needs. At scale
+    this is one shuffle on the key; with Delta/Iceberg it becomes MERGE
+    INTO, but the logical semantics are exactly this window.
+    """
     c = read_table(spark, sf_dir, "customer")
-    n = read_table(spark, sf_dir, "nation")
-    return (
-        fact.join(F.broadcast(c), fact.o_custkey == c.c_custkey, "left")
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "left")
+    v1 = c.select("c_custkey", "c_name", "c_acctbal", F.lit(1).alias("version"))
+    v2 = (
+        c.filter(F.col("c_custkey") % 3 == 0)
         .select(
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            F.coalesce("c_name", F.lit("UNKNOWN")).alias("customer_name"),
-            F.coalesce("n_name", F.lit("UNKNOWN")).alias("nation_name"),
-            F.coalesce("rest_days_raw", F.lit(4)).alias("rest_days"),
-            F.coalesce("c_acctbal", F.lit(0.0)).alias("acct_bal"),
-            clamp_with_midpoint(F.col("c_acctbal") / 10000.0, 0.55, 0.90).alias(
-                "customer_prior"
-            ),
+            "c_custkey",
+            "c_name",
+            (F.col("c_acctbal") + 100.0).alias("c_acctbal"),
+            F.lit(2).alias("version"),
         )
     )
 
+    w = Window.partitionBy("c_custkey").orderBy(F.col("version").desc())
+    return (
+        v1.unionByName(v2)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("c_custkey", "c_name", "c_acctbal", "version")
+    )
 
-# ---------------------------------------------------------------------------
-# A2 applied as in the reference: hybrid xG analog over two "seasons"
-# ---------------------------------------------------------------------------
 
-_HYBRID_SEASONS_ORACLE = """
-WITH seasons AS (
-  SELECT
-    o_custkey,
-    CAST(year(o_orderdate) AS INTEGER) AS season,
-    COUNT(*) AS n_orders
-  FROM orders
-  GROUP BY 1, 2
-), ranked AS (
-  SELECT
-    *,
-    row_number() OVER (PARTITION BY o_custkey ORDER BY season DESC) AS rn
-  FROM seasons
-), cur AS (
-  SELECT o_custkey, CAST(n_orders AS DOUBLE) AS cur_orders
-  FROM ranked WHERE rn = 1
-), last AS (
-  SELECT o_custkey, CAST(n_orders AS DOUBLE) AS last_orders
-  FROM ranked WHERE rn = 2
+_SCD2_ORACLE = """
+WITH v1 AS (
+  SELECT c_custkey, c_name, c_acctbal, 1 AS version FROM customer
+),
+v2 AS (
+  SELECT c_custkey, c_name, c_acctbal + 100.0 AS c_acctbal, 2 AS version
+  FROM customer WHERE c_custkey % 3 = 0
+),
+unioned AS (
+  SELECT * FROM v1 UNION ALL SELECT * FROM v2
 )
 SELECT
-  cur.o_custkey,
-  cur.cur_orders,
-  last.last_orders,
-  CASE WHEN cur.cur_orders IS NOT NULL AND last.last_orders IS NOT NULL
-       THEN 0.6 * cur.cur_orders + 0.4 * last.last_orders
-       ELSE COALESCE(cur.cur_orders, last.last_orders)
-  END AS hybrid_orders
-FROM cur LEFT JOIN last ON cur.o_custkey = last.o_custkey
+  c_custkey, c_name, c_acctbal, version AS valid_from_version,
+  COALESCE(
+    LEAD(version) OVER (PARTITION BY c_custkey ORDER BY version) - 1,
+    2147483647
+  ) AS valid_to_version,
+  LEAD(version) OVER (PARTITION BY c_custkey ORDER BY version) IS NULL
+    AS is_current
+FROM unioned
 """
 
 
-@register("hybrid_two_seasons", oracle=_HYBRID_SEASONS_ORACLE, tags=("window", "agg"))
-def hybrid_two_seasons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O2+A2 composition exactly as the reference uses them: pick the
-    latest two seasons per key via ranking window (scripts/
-    fetch_fbr_team_xg.py:32-34,83-88), then 0.6/0.4 hybrid-weight with
-    null degradation (:113-123).
+@register("scd2_history", oracle=_SCD2_ORACLE, tags=("pipeline", "window"))
+def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Slowly-changing-dimension Type 2: every key keeps its FULL
+    version history with [valid_from, valid_to) validity ranges and an
+    is_current flag — the warehouse-standard dimension history build
+    (contrast snapshot_upsert_latest, which is SCD-1 keep-latest).
+    One LEAD window over the same (key, version) shuffle; open-ended
+    current rows carry a sentinel high version.
     """
-    seasons = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(
-            "o_custkey",
-            F.year("o_orderdate").cast("int").alias("season"),
-        )
-        .agg(F.count("*").alias("n_orders"))
+
+    c = read_table(spark, sf_dir, "customer")
+    v1 = c.select("c_custkey", "c_name", "c_acctbal", F.lit(1).alias("version"))
+    v2 = c.filter(F.col("c_custkey") % 3 == 0).select(
+        "c_custkey",
+        "c_name",
+        (F.col("c_acctbal") + 100.0).alias("c_acctbal"),
+        F.lit(2).alias("version"),
     )
-    w = Window.partitionBy("o_custkey").orderBy(F.col("season").desc())
-    ranked = seasons.withColumn("rn", F.row_number().over(w))
-    cur = ranked.filter(F.col("rn") == 1).select(
-        "o_custkey", F.col("n_orders").cast("double").alias("cur_orders")
+    w = Window.partitionBy("c_custkey").orderBy("version")
+    nxt = F.lead("version").over(w)
+    return v1.unionByName(v2).select(
+        "c_custkey",
+        "c_name",
+        "c_acctbal",
+        F.col("version").alias("valid_from_version"),
+        F.coalesce(nxt - 1, F.lit(2147483647)).alias("valid_to_version"),
+        nxt.isNull().alias("is_current"),
     )
-    last = ranked.filter(F.col("rn") == 2).select(
-        "o_custkey", F.col("n_orders").cast("double").alias("last_orders")
+
+
+_CDC_DIFF_ORACLE = """
+WITH old AS (
+  SELECT c_custkey, c_acctbal FROM customer
+),
+new AS (
+  SELECT c_custkey,
+         CASE WHEN c_custkey % 3 = 0 THEN c_acctbal + 100.0
+              ELSE c_acctbal END AS c_acctbal
+  FROM customer WHERE c_custkey % 7 <> 0
+)
+SELECT
+  COALESCE(o.c_custkey, n.c_custkey) AS c_custkey,
+  o.c_acctbal AS old_bal,
+  n.c_acctbal AS new_bal,
+  CASE
+    WHEN o.c_custkey IS NULL THEN 'inserted'
+    WHEN n.c_custkey IS NULL THEN 'deleted'
+    WHEN o.c_acctbal <> n.c_acctbal THEN 'updated'
+    ELSE 'unchanged'
+  END AS change_type
+FROM old o FULL OUTER JOIN new n ON o.c_custkey = n.c_custkey
+"""
+
+
+@register("snapshot_diff_cdc", oracle=_CDC_DIFF_ORACLE, tags=("pipeline", "join"))
+def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change-data-capture diff of two snapshot versions: one full
+    outer join on the key classifying every row inserted / deleted /
+    updated / unchanged — how a pipeline without database change
+    streams derives its delta feed (the input to SCD builds and
+    incremental downstream refreshes). One shuffle on the key; at
+    scale both snapshots are bucketed on it and the join is
+    exchange-free.
+    """
+    c = read_table(spark, sf_dir, "customer")
+    old = c.select("c_custkey", "c_acctbal")
+    new = c.filter(F.col("c_custkey") % 7 != 0).select(
+        "c_custkey",
+        # +100.0 in pure IEEE double, NOT round(bal*1.1, 2): the
+        # rounded product hits 6dp/2dp halfway cases at sf0.1 where
+        # Spark (shortest-repr HALF_UP) and DuckDB (true-binary round)
+        # disagree by one cent — found by the r9 full-registry sf0.1
+        # sweep. Addition is bit-identical across engines.
+        F.when(F.col("c_custkey") % 3 == 0, F.col("c_acctbal") + 100.0)
+        .otherwise(F.col("c_acctbal"))
+        .alias("c_acctbal"),
     )
-    joined = cur.join(last, "o_custkey", "left")
+    o = old.alias("o")
+    n = new.alias("n")
+    joined = o.join(n, F.col("o.c_custkey") == F.col("n.c_custkey"), "full_outer")
+    change = (
+        F.when(F.col("o.c_custkey").isNull(), F.lit("inserted"))
+        .when(F.col("n.c_custkey").isNull(), F.lit("deleted"))
+        .when(F.col("o.c_acctbal") != F.col("n.c_acctbal"), F.lit("updated"))
+        .otherwise(F.lit("unchanged"))
+    )
     return joined.select(
-        "o_custkey",
-        "cur_orders",
-        "last_orders",
-        weighted_hybrid("cur_orders", "last_orders", 0.60).alias("hybrid_orders"),
+        F.coalesce(F.col("o.c_custkey"), F.col("n.c_custkey")).alias("c_custkey"),
+        F.col("o.c_acctbal").alias("old_bal"),
+        F.col("n.c_acctbal").alias("new_bal"),
+        change.alias("change_type"),
     )

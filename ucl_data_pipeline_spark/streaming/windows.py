@@ -493,7 +493,7 @@ def rollup_cusum(daily: DataFrame) -> DataFrame:
     foreachBatch / downstream-batch step over the day-grain sink: the
     global mean μ makes the statistic non-incremental by definition,
     but the input is one row per day — trivial at any SF."""
-    from ucl_data_pipeline_spark.plans.extras5 import cusum_over_daily
+    from ucl_data_pipeline_spark.plans.temporal import cusum_over_daily
 
     return cusum_over_daily(daily)
 
@@ -507,7 +507,7 @@ def rollup_page_hinkley(daily: DataFrame) -> DataFrame:
     state (running count/sum/min), which is why it is THE classic
     streaming drift detector — the rollup still runs over the
     day-grain sink here for exact parity with the batch oracle."""
-    from ucl_data_pipeline_spark.plans.extras22 import page_hinkley_over_daily
+    from ucl_data_pipeline_spark.plans.temporal import page_hinkley_over_daily
 
     return page_hinkley_over_daily(daily)
 
@@ -518,7 +518,7 @@ def rollup_changepoint(daily: DataFrame) -> DataFrame:
     prefix-sum SSE scoring as the batch query
     (plans/extras20.changepoint_over_daily). Day-grain input, so the
     quadratic-free scoring runs on ≈2.4k rows regardless of SF."""
-    from ucl_data_pipeline_spark.plans.extras20 import changepoint_over_daily
+    from ucl_data_pipeline_spark.plans.stats import changepoint_over_daily
 
     return changepoint_over_daily(
         daily.select(F.col("day").alias("d"), F.col("rev").alias("v"))
@@ -561,10 +561,7 @@ def curation_gate_stream(
     SAME ``curation_doc_signals`` projection the batch pipeline uses,
     so stream ≡ batch holds by construction.
     """
-    from ucl_data_pipeline_spark.plans.extras21 import (
-        _CUR_Q_THRESH,
-        curation_doc_signals,
-    )
+    from ucl_data_pipeline_spark.plans.text import _CUR_Q_THRESH, curation_doc_signals
 
     bench_arr = bench_gram_digests.agg(
         F.collect_set("g").alias("bench_g")
@@ -591,7 +588,7 @@ def bench_gram_digests_static(docs: DataFrame) -> DataFrame:
     distinct xxhash64 digests of the benchmark docs' distinct 5-grams
     (one bounded batch job — in production this reads the external
     benchmark corpus)."""
-    from ucl_data_pipeline_spark.plans.extras21 import curation_doc_signals
+    from ucl_data_pipeline_spark.plans.text import curation_doc_signals
 
     return (
         curation_doc_signals(
