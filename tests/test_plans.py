@@ -10,8 +10,12 @@ the properties that decide 100 TB viability — not just results.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 
+from ucl_data_pipeline_spark import plans
 from ucl_data_pipeline_spark.plans import REGISTRY
 
 
@@ -545,3 +549,25 @@ def test_single_partition_windows_are_allowlisted(registry_frames):
         "range_bucket / orderBy().limit() — or declare the bounded "
         f"grain in SINGLE_PARTITION_WINDOW_GRAINS): {offenders}"
     )
+
+
+def test_plan_modules_are_imported_and_domain_named():
+    # A plans/*.py module that plans/__init__.py does not import drops
+    # its queries from the registry without any error; a module named
+    # by the round that wrote it (extrasN, llm_ops2, tpch3, ...) is the
+    # layout the domain regroup removed.
+    pkg = pathlib.Path(plans.__file__).parent
+    init = ast.parse((pkg / "__init__.py").read_text())
+    imported = {
+        a.name
+        for s in init.body
+        if isinstance(s, ast.ImportFrom) and s.module == plans.__name__
+        for a in s.names
+    }
+    modules = {p.stem for p in pkg.glob("*.py")} - {"__init__"}
+    missing = sorted(modules - imported)
+    assert not missing, f"not imported by plans/__init__.py: {missing}"
+    round_named = sorted(
+        m for m in modules if m[-1].isdigit() or m.startswith("extras")
+    )
+    assert not round_named, f"round-named plan modules: {round_named}"

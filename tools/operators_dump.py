@@ -31,23 +31,23 @@ queries in parentheses exercise it under the oracle harness):
 | S9 template schemas | schemas.py `HIST_MATCHES`/`UPCOMING_FIXTURES` |
 | P1 column-name case conform | sources/io.py `conform_column_names` (`conform_column_names_upper`) |
 | P2 candidate-column selection | functions/scalar.py `coalesce_candidates` (`coalesce_candidates`) |
-| P3-P4 rename-project / null-key drop | plans/core.py (`filter_project`) |
+| P3-P4 rename-project / null-key drop | plans/tpch.py (`filter_project`) |
 | P5-P6 default stamping / ensure_cols | sources/io.py `conform` (`conform_defaults`) |
 | P7 canonical projection | operators/pipeline.py `build_hist`/`build_upcoming` |
 | P8 column prefixing | operators/enrich.py `prefix_columns` |
 | P9 subset-column validation | operators/validate.py `required_columns_check` |
 | P10 conditional masked update | operators/enrich.py `enrich_dont_clobber` (`enrich_pipeline`) |
-| J1-J6 broadcast enrich joins | operators/enrich.py + plans/core.py (`enrich_broadcast_join`, `enrich_pipeline`) |
-| J7 full-outer hybrid | plans/core.py (`outer_join_hybrid`) |
+| J1-J6 broadcast enrich joins | operators/enrich.py + plans/tpch.py (`enrich_broadcast_join`, `enrich_pipeline`) |
+| J7 full-outer hybrid | plans/tpch.py (`outer_join_hybrid`) |
 | J8 dict-lookup join + identity fallback | operators/enrich.py `normalize_names` (`dict_lookup_join`) |
-| A1 distinct-by-key first-wins | plans/core.py (`dedup_first_wins`) |
+| A1 distinct-by-key first-wins | plans/similarity.py (`dedup_first_wins`) |
 | A2 weighted hybrid mean | functions/scalar.py `weighted_hybrid` (`hybrid_two_seasons`) |
 | A3 count/empty gates | operators/validate.py `summarize` |
-| O1-O3 sort/limit/top-per-key/head | plans/core.py (`sort_limit_topn`, `window_top2_per_key`) |
-| U1 union-all (+ intersect/except) | plans/core.py (`union_all_entities`, `intersect_nations`, `except_nations`) |
+| O1-O3 sort/limit/top-per-key/head | plans/tpch.py (`sort_limit_topn`), plans/aggregates.py (`window_top2_per_key`) |
+| U1 union-all (+ intersect/except) | plans/tpch.py (`union_all_entities`, `intersect_nations`, `except_nations`) |
 | F1-F15 scalar surface | functions/scalar.py (`fractional_odds`, `date_parse_multi`, `haversine_travel`, `bootstrap_priors`, `name_regex_strip`, ...) |
-| §2.5 windows | plans/analytics.py, plans/temporal.py (`rest_days_lag`, `moving_avg_frame`, `ntile_quartiles`, ...) |
-| §2.9 streaming | streaming/windows.py + batch twins in plans/events_windows.py (stream≡batch pytest suite) |
+| §2.5 windows | plans/aggregates.py, plans/temporal.py (`rest_days_lag`, `moving_avg_frame`, `ntile_quartiles`, ...) |
+| §2.9 streaming | streaming/windows.py + batch twins in plans/temporal.py (stream≡batch pytest suite) |
 | §2.10 zero-UDF rule + Arrow escape hatch | tests/test_plans.py plan-smell assertions; operators/multimodal.py |
 | V1-V3 validation | operators/validate.py |
 

@@ -11,7 +11,7 @@ against a per-user dimension. Times the join three ways in one session:
      mapper-output boundaries (skew=true in the final plan) and the
      straggler parallelizes, no code change;
   c) manual salting     — the engine's static alternative
-     (plans/extras.py salted_skew_join pattern), for reference.
+     (plans/tpch.py salted_skew_join pattern), for reference.
 
 Prints one JSON line; results recorded in SCALE_NOTES.md. The point at
 100 TB: AQE turns the #1 production skew hazard (one hot key in a

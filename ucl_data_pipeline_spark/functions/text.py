@@ -3,7 +3,7 @@ tokenization, shingling, quality ratios, language-ID heuristics,
 fingerprints and MinHash signatures.
 
 All pure Catalyst expressions (higher-order array functions) — no
-Python UDFs. Each has an exact DuckDB-SQL mirror (see plans.llm_ops) so
+Python UDFs. Each has an exact DuckDB-SQL mirror (see plans.text and plans.similarity) so
 the oracle harness checks values bit-for-bit. Hashes use md5 (identical
 hex output in every engine) rather than engine-private hash functions.
 """

@@ -3370,7 +3370,7 @@ _BLOOM_BAL = 9000         # member predicate: c_acctbal > threshold
 def _hexfold_sql(hx: str, start: int, n: int) -> str:
     """DuckDB spelling of Spark ``conv(substring(hx, start, n), 16, 10)``
     (DuckDB has no conv): left fold acc·16+nibble over n hex digits —
-    the same overflow-free pattern as checksum_table (extras2.py)."""
+    the same overflow-free pattern as checksum_table."""
     return (
         "list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(generate_series({start}, {start + n - 1}), "
@@ -3715,7 +3715,7 @@ def histogram_strategy_compare(
     )
     # ONE percentile_disc buffer for all nine deciles (the array form):
     # nine scalar percentile_disc aggs each materialize their own full
-    # value buffer — same fix as quantile_sample_error (extras33),
+    # value buffer — same fix as quantile_sample_error,
     # measured 2.94 s → 0.94 s cold at sf0.1 for this query.
     qs_lit = "array(" + ", ".join(f"{q / 10}D" for q in range(1, 10)) + ")"
     cuts = o.agg(
@@ -3868,6 +3868,49 @@ def _morton_col(qx, qy):
     return z
 
 
+# Physical-layout planning — the Z-order audit.
+#
+# ``zorder_layout_audit`` quantifies the file-skipping power of a
+# Z-ORDERED table layout against a linear single-key sort — the
+# decision behind ``OPTIMIZE ZORDER BY`` in lakehouse table formats and
+# the third member of the engine's write-layout planning family
+# (``range_partition_boundaries``: sorted-write split points;
+# ``dictionary_encoding_planner``: per-column encoding choice). At
+# 100 TB the scan cost of a 2-D selective query is decided before the
+# query runs, by how the writer clustered the data; this operator
+# measures that decision as min/max-pruning numbers, per layout and
+# per probe predicate.
+#
+# Method: bucket both sort keys (o_totalprice, o_orderdate-days) into
+# 256 equi-width buckets from broadcast min/max stats; interleave the
+# two 8-bit bucket ids into a 16-bit Morton code (pure integer
+# div/mod/multiply — no bit builtins, so the spelling is identical in
+# Spark and DuckDB); assign each cell to one of 64 files under each
+# layout (linear: top 6 bits of qx; zorder: top 6 bits of z); then for
+# each probe window count the files whose min/max box intersects it,
+# the rows those files hold (what a min-max-pruned scan must read),
+# and the rows that actually match (what the query wanted).
+# scan_amplification = scanned/matched is the layout's quality.
+#
+# The two probes are a 32×32 bucket window (1/64 of the grid) in an
+# ALIGNED position (Morton-ideal: the window is one contiguous
+# Z-segment → 1 file) and an UNALIGNED position (the honest case: the
+# Z-curve fragments across files). Expected shape: linear prunes to
+# ~1/8 of files (perfect on its sort key, blind on the other); zorder
+# lands 1 file aligned and a handful unaligned, with far lower row
+# amplification — the multi-dimensional-clustering trade measured.
+#
+# Registry conventions (plans/registry.py): bucketing is the broadcast
+# min/max floor-divide idiom (identical
+# IEEE arithmetic both engines, least-capped at the top edge); Morton
+# and file ids are exact integer arithmetic; all outputs are BIGINT
+# counts except the final ROUND-6 division of exact integers.
+#
+# Scale: ONE fact scan → one hash-agg at (qx, qy) cell grain (≤65,536
+# cells regardless of table size, map-side combinable); every layout /
+# file / probe statistic derives from that bounded cell table. The
+# probe tables are broadcast literals. Nothing downstream of the first
+# aggregation touches fact-sized data.
 @register(
     "zorder_layout_audit",
     oracle=_ZORDER_SKIP_ORACLE,
@@ -3878,7 +3921,7 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (o_totalprice, o_orderdate): per layout × probe window, the files
     a min/max-pruned scan must read, the rows inside them, the rows
     that actually match, and the resulting scan amplification. See
-    the module docstring for the method and the expected shape.
+    the notes above the function for the method and the expected shape.
 
     Everything derives from ONE cell-grain aggregate (≤256×256 cells
     for any table size): file boxes, hit counts, and exact matched
@@ -4012,6 +4055,42 @@ GROUP BY o_custkey
 """
 
 
+# Incremental materialized-view maintenance:
+#
+# - ``mv_incremental_agg_parity``: maintain a per-customer aggregate MV
+#   (order count + spend) from a BASE snapshot plus a CDC batch of
+#   inserts AND deletes using retractable-aggregate algebra — each
+#   change row contributes op·value with op ∈ {+1, −1}, the base MV and
+#   the delta MV merge by full-outer coalesce-addition, and groups
+#   whose maintained count reaches 0 drop out — then return the
+#   maintained MV, which the oracle proves equal to recomputing the
+#   aggregate from scratch over (base − deletes + inserts). This is the
+#   correctness contract of incremental view maintenance in lakehouse
+#   pipelines (Delta CDF / Materialized View refresh): at 100 TB you
+#   cannot re-aggregate the world per batch; you fold the change stream
+#   into the MV and the ONLY acceptable semantics is bit-equality with
+#   recomputation. Complements ``snapshot_upsert_latest`` (row-grain
+#   keep-latest) with the AGGREGATE-grain retraction algebra, and the
+#   streaming family's stream≡batch parity discipline applied to the
+#   batch-CDC path.
+#
+# The CDC batch is synthesized deterministically from orders: rows with
+# o_orderkey % 7 == 0 are "new" inserts (excluded from the base), and
+# base rows with o_orderkey % 5 == 0 are deleted by the batch — so the
+# batch exercises inserts, partial deletes, AND at least the
+# possibility of full-group retraction, with every branch identical in
+# both engines.
+#
+# Registry conventions (plans/registry.py): counts are exact BIGINTs
+# (sum of ±1); spend sums run in DECIMAL(18,6) on BOTH the base and
+# delta paths BEFORE the final double cast, so maintained and
+# recomputed results are bit-identical regardless of the order the
+# retractions fold in (the dsum order-independence convention).
+#
+# Scale: the base MV is the standing state (key-grain); the delta agg
+# shuffles only the CHANGE BATCH at key grain (map-side combinable);
+# the merge is a key-grain outer join of two aggregates. Nothing
+# re-touches base fact rows — that is the entire point.
 @register(
     "mv_incremental_agg_parity",
     oracle=_MV_ORACLE,
@@ -4023,7 +4102,7 @@ def mv_incremental_agg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE recomputes the aggregate from scratch over the effective
     row set, so the driver's hash match IS the proof that incremental
     maintenance ≡ recomputation, group-for-group and bit-for-bit.
-    See the module docstring for the CDC synthesis and the 100 TB
+    See the notes above the function for the CDC synthesis and the 100 TB
     contract.
 
     The Spark side deliberately takes the INCREMENTAL path end to
@@ -4245,7 +4324,7 @@ WHERE l.checksum_match = 0
 def merkle_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level Merkle-style snapshot diff between the orders table
     and a deterministically mutated snapshot (keys %7 deleted, keys
-    %11 repriced +1.00 — the extras37 CDC convention): level 1
+    %11 repriced +1.00 — the mv_incremental_agg_parity CDC convention): level 1
     compares {b} per-bucket checksums (order-free DECIMAL(38,0) sums
     of 60-bit row digests over the width-safe Knuth bucket), level 2
     drills into CHANGED buckets only and counts differing keys via a

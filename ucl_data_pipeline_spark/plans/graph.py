@@ -52,7 +52,7 @@ def _sql_iter(prev: str, cur: str) -> str:
 
 
 # Shared CTE prefix (nodes/edges/outw/r0 + the unrolled iterations) —
-# also consumed by extras34's pagerank_residual_audit, which SELECTs
+# also consumed by pagerank_residual_audit, which SELECTs
 # from the intermediate r{k} frames instead of the last one.
 PAGERANK_CTE_PREFIX = f"""
 WITH nodes AS (
@@ -100,7 +100,7 @@ def pagerank_history(
 ) -> DataFrame:
     """(node, ranks): each node's rank iterates [r0, r1, ..., r_n_iter],
     shared by ``pagerank_trade_network`` (the last iterate) and
-    extras34's ``pagerank_residual_audit`` (the last three).
+    ``pagerank_residual_audit`` (the last three).
 
     The weighted edge table is the one fact-sized stage. It is gathered
     into one row with the sorted node keys (``gather_graph``: ≤25² edges,
@@ -397,9 +397,9 @@ def neighbor_jaccard_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structural node similarity: Jaccard of neighbor sets for every
     node pair sharing ≥1 neighbor, thresholded at 0.5 — the standard
     link-prediction / role-equivalence primitive (and the node-level
-    analogue of the document near-dup Jaccard in llm_ops). Same
-    trade-network edge derivation as triangle_count_trade
-    (extras3.py): distinct canonical (lo, hi) nation pairs.
+    analogue of the document near-dup Jaccard, jaccard_shingle_pairs). Same
+    trade-network edge derivation as triangle_count_trade:
+    distinct canonical (lo, hi) nation pairs.
 
     Scale: the fact-sized stage is the edge derivation (one pass,
     distinct-collapsed to ≤ |V|² rows). The pair enumeration joins the
@@ -463,7 +463,9 @@ _BF_SOURCE = 0
 
 
 def _sql_bf_iter(prev: str, nxt: str) -> str:
-    return f"""{nxt} AS (
+    # MATERIALIZED: each d{i+1} reads d{i} twice, and DuckDB inlines
+    # plain CTEs, so the unrolled chain would re-expand exponentially.
+    return f"""{nxt} AS MATERIALIZED (
   SELECT n.node,
          CASE WHEN n.cost IS NULL THEN c.cand
               WHEN c.cand IS NULL THEN n.cost
@@ -477,7 +479,7 @@ def _sql_bf_iter(prev: str, nxt: str) -> str:
 
 
 _BELLMAN_FORD_ORACLE = f"""
-WITH edges AS (
+WITH edges AS MATERIALIZED (
   SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
          CAST(FLOOR(
            CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
@@ -489,7 +491,7 @@ WITH edges AS (
   WHERE s.s_nationkey <> c.c_nationkey
   GROUP BY 1, 2
 ),
-d0 AS (
+d0 AS MATERIALIZED (
   SELECT n_nationkey AS node,
          CASE WHEN n_nationkey = {_BF_SOURCE}
               THEN CAST(0 AS BIGINT) END AS cost
@@ -987,7 +989,7 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly oracle-checkable.
 
     Scale: edge generation is the copurchase array spelling
-    (extras3.py:43 — scan-side a<b pairs from per-order sorted part
+    (copurchase_pairs — scan-side a<b pairs from per-order sorted part
     arrays, NO basket self-join, per-order cost bounded by basket
     size²); each superstep is one union + hash-agg (degree) and two
     anti-joins, all keyed on part ids, with localCheckpoint per round
@@ -1045,7 +1047,7 @@ def clustering_coeff_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     promiscuous staple part).
 
     Triangle enumeration is the degree-ordered compact-forward plan
-    proven on the nation graph (extras3.py triangle_count_trade —
+    proven on the nation graph (triangle_count_trade —
     wedges form only at each triangle's lowest-degree corner in the
     (degree, node) total order, each wedge probes the directed edge
     set once, work O(E^1.5) by Chiba–Nishizeki instead of Σdeg²),

@@ -341,7 +341,7 @@ def sql_knuth_bucket(expr: str, m: int) -> str:
 # total order of a fact-sized table": split the key domain into range
 # buckets from approx_percentile split points (the same statistic the
 # sampling RangePartitioner estimates — range_partition_boundaries
-# in plans/extras9.py is the standalone demo), rank/accumulate WITHIN
+# is the standalone demo), rank/accumulate WITHIN
 # each bucket (a Window partitioned by bucket — every task sorts only
 # its bucket), and add each bucket's exclusive prefix total computed on
 # the BOUNDED bucket grain. The result is bit-identical to the global
@@ -424,7 +424,7 @@ def range_bucket(df: DataFrame, key: str) -> DataFrame:
     scalar percentile_disc aggs — each of those buffers the full
     column, the engine's documented percentile-buffer trap) and are
     COLLECTED to literals: a bounded ≤1023-value collect (the
-    PQ-codebook-to-literal precedent, llm_ops4.py) that makes bucket
+    PQ-codebook-to-literal precedent, embedding_pq_topk) that makes bucket
     assignment a pure literal fold — whole-stage-codegen row math,
     zero joins, and trivially consistent when the bucketed frame is
     lazily recomputed across plan branches.

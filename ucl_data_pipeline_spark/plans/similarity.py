@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.functions import text as TX
 from ucl_data_pipeline_spark.functions import vector as VX
+from ucl_data_pipeline_spark.operators.multimodal import (
+    attach_fake_media,
+    extract_features,
+    sample_frames,
+)
 from ucl_data_pipeline_spark.plans.registry import bucketed_row_number, register
 from ucl_data_pipeline_spark.plans.stats import (
     _QUALITY_ORACLE,
@@ -254,7 +259,7 @@ def lsh_candidate_pairs(feats: DataFrame) -> DataFrame:
     MinHash banding over a (doc_id, feats) frame — the ONE place the
     band parameters live engine-side (oracle twin:
     ``_SQL_BAND_CAND_CTES``); ``dedup_minhash_lsh`` generates with it
-    and extras19's ``dedup_minhash_pr`` grades exactly the same
+    and ``dedup_minhash_pr`` grades exactly the same
     generator because both call this.
 
     One pass over sig → (doc_id, band_idx, band_key): posexplode
@@ -312,8 +317,8 @@ def lsh_candidate_pairs(feats: DataFrame) -> DataFrame:
 # Shared 3-band × 2-row MinHash banding: `sig` + `bucket` + `cand`
 # CTEs over a prior CTE named `feat` (doc_id, feats). Interpolated
 # VERBATIM by every oracle that bands (dedup_minhash_lsh,
-# dedup_connected_components, and the dedup_minhash_pr quality gate in
-# extras19), so the band parameters can never drift between the
+# dedup_connected_components, and the dedup_minhash_pr quality gate),
+# so the band parameters can never drift between the
 # candidate generator and the gate that grades it.
 _SQL_BAND_CAND_CTES = f"""sig AS (
   SELECT doc_id, feats,
@@ -956,8 +961,6 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be pushed down BEFORE any decode at 100 TB (operators.
     multimodal holds the decode stage).
     """
-    from ucl_data_pipeline_spark.operators.multimodal import attach_fake_media
-
     media = attach_fake_media(read_table(spark, sf_dir, "documents"))
     return media.select(
         "media_id",
@@ -1017,11 +1020,6 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batching, schema, partitioning and all — is hash-verified
     against DuckDB, not just row-counted.
     """
-    from ucl_data_pipeline_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_features,
-    )
-
     media = attach_fake_media(read_table(spark, sf_dir, "documents"))
     return extract_features(media, decoder="stub")
 
@@ -1052,11 +1050,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked since round 4 (same ASCII note as
     multimodal_feature_extract).
     """
-    from ucl_data_pipeline_spark.operators.multimodal import (
-        attach_fake_media,
-        sample_frames,
-    )
-
     media = attach_fake_media(read_table(spark, sf_dir, "documents"))
     frames = sample_frames(media, frame_size=64, stride=2)
     return frames.select(
@@ -1066,7 +1059,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Shared edge-construction CTE chain (rep → tok → feat → LSH bands →
 # verified pairs → exact-dup pairs → symmetric edges) — also consumed
-# by extras34's cc_superstep_convergence, which unrolls label
+# by cc_superstep_convergence, which unrolls label
 # propagation over the same edge set instead of the recursive closure.
 CC_EDGES_SQL_CTES = rf"""rep AS (
   SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text
@@ -1105,7 +1098,7 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical copies land in their representative's component.
     Materialized once (localCheckpoint + persist) — without this the
     union would execute the whole LSH lineage twice, once per
-    direction. Shared by ``dedup_connected_components`` and extras34's
+    direction. Shared by ``dedup_connected_components`` and
     ``cc_superstep_convergence``.
 
     r13 (guide §2.2, partition right-sizing): the symmetric union is
@@ -1162,6 +1155,32 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cc_superstep(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label superstep over a symmetric edge set: each node takes
+    the min of its own label and its neighbours' labels. Returns the
+    un-checkpointed (doc_id, component_id, __old) aggregate, where
+    ``__old`` is the node's label before the step (the own-label-flagged
+    union folds it into the same min-aggregate, so a changed-label count
+    is a filter over this frame, not a join).
+    """
+    nbr = (
+        F.broadcast(edges)
+        .join(labels, F.col("dst") == F.col("doc_id"))
+        .select(F.col("src").alias("doc_id"), "component_id")
+    )
+    return (
+        labels.withColumn("__own", F.lit(1))
+        .unionByName(nbr.withColumn("__own", F.lit(0)))
+        .groupBy("doc_id")
+        .agg(
+            F.min("component_id").alias("component_id"),
+            F.min(
+                F.when(F.col("__own") == 1, F.col("component_id"))
+            ).alias("__old"),
+        )
+    )
+
+
 _CC_ORACLE = rf"""
 WITH RECURSIVE {CC_EDGES_SQL_CTES}, reach(doc_id, r) AS (
   SELECT doc_id, doc_id FROM documents
@@ -1182,8 +1201,8 @@ def dedup_connected_components(
     union-find completion that pairwise keep-lowest-id dedup
     approximates. Oracle: the same components from a recursive CTE.
 
-    ``edges`` lets a composing query (extras45's
-    ``component_split_assign``) pass an already-built ``cc_edge_set``
+    ``edges`` lets a composing query
+    (``component_split_assign``) pass an already-built ``cc_edge_set``
     frame so the LSH verify lineage runs once; ownership follows the
     argument — a caller-provided frame is not unpersisted here. The
     frame must be SYMMETRIC (every (src, dst) has its (dst, src)
@@ -1226,22 +1245,9 @@ def dedup_connected_components(
         .localCheckpoint()
     )
     for _ in range(20):  # cap ≫ any real near-dup cluster diameter
-        nbr = (
-            F.broadcast(edges)
-            .join(labels, F.col("dst") == F.col("doc_id"))
-            .select(F.col("src").alias("doc_id"), "component_id")
-        )
         moved = Observation()
         merged = (
-            labels.withColumn("__own", F.lit(1))
-            .unionByName(nbr.withColumn("__own", F.lit(0)))
-            .groupBy("doc_id")
-            .agg(
-                F.min("component_id").alias("component_id"),
-                F.min(
-                    F.when(F.col("__own") == 1, F.col("component_id"))
-                ).alias("__old"),
-            )
+            cc_superstep(edges, labels)
             .observe(
                 moved,
                 F.count_if(F.col("component_id") != F.col("__old")).alias("n"),
@@ -1926,11 +1932,43 @@ def kmeans_lloyd5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Iterative clustering over the embeddings table: distributed k-means
+# as a driver-coordinated Spark loop, with deterministic k-means||
+# (scalable k-means++) initialization.
+#
+# SQL can't express the fixed-point iteration (the oracle harness
+# records a rows-only check; pytest asserts determinism, inertia
+# monotonicity and cluster integrity instead), but every step inside an
+# iteration is declarative DataFrame algebra, so the loop scales the way
+# MLlib's own implementation does:
+#
+# - centers live on the driver and enter the plan as LITERAL arrays
+#   (k x dim doubles — tiny), so assignment is a NARROW projection:
+#   ``array_min(transform(centers, c -> sq_dist(x, c)))`` — no
+#   crossJoin, no per-point shuffle, no window;
+# - the update is one partial+final aggregation keyed by
+#   (cluster, dimension) — n*dim rows combine map-side down to k*dim;
+# - each Lloyd iteration is exactly ONE Spark job (collect the k*dim
+#   new centroid values), not a checkpoint cascade.
+#
+# Initialization is k-means|| (Bahmani et al., VLDB 2012) made
+# deterministic: per-round oversampling keeps point x iff
+# ``u(x, round) < L * d2(x) / total``, where u is a hash-derived uniform
+# (xxhash64 — no RNG state), d2 the squared distance to the nearest
+# current center, and total an EXACT decimal sum (double-sum order
+# jitter could flip a boundary point between runs). The candidate set
+# (~L per round) is weighted by cluster population and reduced to K on
+# the driver with a greedy farthest-point pass — no randomness anywhere,
+# so results are bit-identical across runs and partitionings.
+#
+# Determinism: hash-thresholded sampling, exact-decimal totals and
+# centroid means, argmin ties broken toward the lowest cluster id
+# (array_position returns the FIRST index attaining the min).
 @register("kmeans_clusters", oracle=None, tags=("vector", "llm", "iterative"))
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means (k=8, k-means|| init, 5 Lloyd iterations) over the
     embeddings table; returns (vec_id, cluster_id, sq_dist rounded to
-    6dp). See module docstring for the scale shape; no SQL oracle
+    6dp). See the notes above for the scale shape; no SQL oracle
     (iterative), the driver records rows-only and
     tests/test_clustering.py asserts the semantics.
     """
@@ -2267,7 +2305,7 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # df-cap and doc sizes as WINDOWS, not groupBy+join — and na/nb as
     # group keys determined by doc_a/doc_b (same r12 restructure and
-    # rationale as jaccard_shingle_pairs, llm_ops.py: the old
+    # rationale as jaccard_shingle_pairs: the old
     # spelling's three join build sides all grow with the corpus and
     # rode Generate-blind static estimates into broadcasts).
     w_f = Window.partitionBy("f")
@@ -2962,7 +3000,7 @@ def minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature-based Jaccard estimate (fraction of the 6 minhashes
     that agree) next to the exact shingle-set Jaccard and their
     absolute error — the dedup-pipeline sibling of the ANN recall
-    gates (extras3.py): it makes the QUALITY of the sketch driver-
+    gates (ann_recall_at_3): it makes the QUALITY of the sketch driver-
     visible, not just the speed of the dedup that uses it. A corpus
     whose mean abs_err drifts up (shorter docs, shingle distribution
     shift) needs more hashes per signature; this query is the
@@ -2995,7 +3033,7 @@ def minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats-barriered (r13, replacing the r12 merge hint): both sides
     # of the band self-join are corpus-sized with a Generate-blind
     # static estimate (the ×100-smoke broadcast class — see
-    # llm_ops.lsh_candidate_pairs); static stays SMJ, AQE's runtime
+    # lsh_candidate_pairs); static stays SMJ, AQE's runtime
     # size-measured BHJ conversion is free again.
     bucket = stats_barrier(bucket)
     a = bucket.alias("a")
@@ -3098,7 +3136,7 @@ def ann_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-quality gate: NDCG@10 of exact cosine retrieval judged
     by label agreement — "when I retrieve 10 nearest neighbors, how
     early do the same-label ones appear?". Complements the recall gates
-    (extras3.py): recall measures the INDEX against exact retrieval;
+    (ann_recall_at_3): recall measures the INDEX against exact retrieval;
     NDCG measures the EMBEDDING SPACE itself against ground-truth
     labels — the number that says whether nearest-neighbor dedup/search
     can work on this representation at all.
@@ -3327,7 +3365,7 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. Verification joins run only on surviving candidates.
 
     Shuffle keys are 8-byte xxhash64 DIGESTS of the shingles, not the
-    raw strings (same re-keying as the LSH band keys, llm_ops.py) —
+    raw strings (same re-keying as the LSH band keys, lsh_candidate_pairs) —
     the df hash-agg, the doc_id-window sort, and the prefix self-join
     all move fixed-width longs. The prefix set chosen under the
     (df, digest) total order can differ from the oracle's (df, string)
@@ -3923,7 +3961,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the near-miss that contrastive/embedding losses learn the most
     from (easy negatives are already far away). Query side is
     structurally bounded exactly like the brute-force baseline
-    (sampling predicate + id ceiling — llm_ops.py:634's cap rationale
+    (sampling predicate + id ceiling — embedding_topk_cosine's cap rationale
     applies verbatim); in production the candidate scan is replaced by
     the IVF/LSH index probes, with the label-inequality as a cheap
     post-filter on the probed lists. One broadcast of ≤64 queries
@@ -4212,7 +4250,7 @@ def minhash_size_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats-barriered (r13, replacing the r12 merge hint): both sides
     # of the band self-join are corpus-sized with a Generate-blind
     # static estimate (the ×100-smoke broadcast class — see
-    # llm_ops.lsh_candidate_pairs); the barrier keeps the static plan
+    # lsh_candidate_pairs); the barrier keeps the static plan
     # SMJ while AQE's size-measured runtime BHJ conversion stays free.
     bucket = stats_barrier(bucket)
     a = bucket.alias("a")
@@ -4252,7 +4290,7 @@ def minhash_size_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stats-barriered above: sa/sb carry corpus-sized feature
         # arrays the static planner would broadcast on a Generate-
         # blind estimate (the r12 ×100-smoke class — see
-        # dedup_minhash_lsh/extras9); the barrier replaces the r12
+        # dedup_minhash_lsh); the barrier replaces the r12
         # merge hints and re-enables AQE's runtime conversion.
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -4664,7 +4702,8 @@ def source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-persist plan re-reads the ENTIRE corpus for the second join
     # side, which at 100 TB doubles the dominant cost; the persist
     # keeps the second read at sketch size. Registry-standard
-    # .persist() precedent: extras21/extras9. (localCheckpoint was
+    # .persist() precedent: minhash_size_frontier,
+    # jaccard_prefix_filter_pairs. (localCheckpoint was
     # measured strictly worse on both counts — extra RDD stages.)
     src = doc_sigs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -4764,13 +4803,12 @@ def cc_superstep_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine by construction.
     """
     edges = cc_edge_set(spark, sf_dir)
-    # r12 (optimization round): propagate on the EDGE-NODE subgraph
-    # and fold the old label into the same min-aggregate (the
-    # dedup_connected_components r12 spelling) — isolated docs never
-    # change label, so every per-step n_changed is bit-identical while
-    # each superstep shuffles dup-graph-sized frames (477 nodes vs
-    # 5,000 docs at sf0.1) and the old per-step changed-count JOIN
-    # becomes a filter over the already-checkpointed step frame.
+    # Propagate on the EDGE-NODE subgraph with the superstep
+    # dedup_connected_components runs (cc_superstep): isolated docs
+    # never change label, so every per-step n_changed is bit-identical
+    # while each superstep shuffles dup-graph-sized frames (477 nodes
+    # vs 5,000 docs at sf0.1), and the changed count is a filter over
+    # the checkpointed step frame, not a join.
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -4779,23 +4817,7 @@ def cc_superstep_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out: DataFrame | None = None
     for step in range(1, _CC_STEPS + 1):
-        nbr = (
-            F.broadcast(edges)
-            .join(labels, F.col("dst") == F.col("doc_id"))
-            .select(F.col("src").alias("doc_id"), "component_id")
-        )
-        merged = (
-            labels.withColumn("__own", F.lit(1))
-            .unionByName(nbr.withColumn("__own", F.lit(0)))
-            .groupBy("doc_id")
-            .agg(
-                F.min("component_id").alias("component_id"),
-                F.min(
-                    F.when(F.col("__own") == 1, F.col("component_id"))
-                ).alias("__old"),
-            )
-            .localCheckpoint()
-        )
+        merged = cc_superstep(edges, labels).localCheckpoint()
         changed = (
             merged.filter(F.col("component_id") != F.col("__old"))
             .agg(F.count("*").cast("bigint").alias("n_changed"))
@@ -4835,6 +4857,36 @@ WHERE rn = 1 AND n_members >= 2
 """
 
 
+# Duplicate-cluster canonicalization:
+#
+# - ``cc_canonical_selection``: for every multi-member near-duplicate
+#   component (the connected components of the LSH near-dup graph,
+#   shared edge set with ``dedup_connected_components``), choose the
+#   ONE document to keep by quality-argmax — highest
+#   ``text_quality_score``, ties broken by smallest doc_id — and report
+#   the component's size, the kept doc, its quality, and how many
+#   copies drop. This is the curation decision the dedup family was
+#   building toward: CC tells you WHICH documents are the same content;
+#   this operator decides WHICH COPY survives, by the same quality
+#   signals the pre-training filter uses, instead of the min-doc_id
+#   proxy pairwise dedup defaults to. Composes two registered
+#   operators' exact spellings (CC's recursive closure, the quality
+#   score's length/diversity/stopword/punct mix) on BOTH engines, so
+#   the composition cannot drift from its inputs — the
+#   curation_pipeline / ann_rrf_fusion composition discipline.
+#
+# Registry conventions (plans/registry.py): the quality score is an
+# IEEE expression of exact integer counts — bit-identical cross-engine
+# (hash-proven since r1 for text_quality_score) — so ORDER BY
+# (quality DESC, doc_id) is a deterministic total order; byte-identical
+# copies tie on quality and fall to the doc_id tie-break identically.
+# Output quality is ROUND 6; counts exact BIGINTs.
+#
+# Scale: component labels are the CC output (edge-bounded iterative
+# join); quality is one document scan; the argmax is a window over
+# COMPONENT-sized partitions (near-dup clusters are tiny by
+# construction — the corpus-sized "component" does not exist after
+# dedup gating) followed by a component-grain agg.
 @register(
     "cc_canonical_selection",
     oracle=_CANON_ORACLE,
@@ -4844,8 +4896,8 @@ def cc_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-argmax canonical document per multi-member near-dup
     component: one row per component with ≥2 members — its size, the
     kept doc (highest quality, then smallest doc_id), the kept doc's
-    quality, and the number of copies dropped. See the module
-    docstring for why this replaces min-doc_id keeper selection and
+    quality, and the number of copies dropped. See the notes
+    above the function for why this replaces min-doc_id keeper selection and
     how determinism is earned.
 
     The Spark side composes the registered operators directly:
@@ -4938,7 +4990,7 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats-barriered (r13, replacing the r12 merge hints): fa/fb carry
     # corpus-sized feature arrays the static planner would broadcast on
     # a Generate-blind estimate (the ×100-smoke class — see
-    # dedup_minhash_lsh/extras9); the barrier keeps the static plan SMJ
+    # dedup_minhash_lsh); the barrier keeps the static plan SMJ
     # and re-enables AQE's size-measured runtime BHJ conversion.
     fsrc = stats_barrier(feats)
     fa = fsrc.select(F.col("doc_id").alias("doc_a"), F.col("feats").alias("fa"))
@@ -5043,7 +5095,7 @@ def bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc token counts are one hash-agg; the pair scoring joins
     candidate×token-count frames keyed on (doc, 8-byte xxhash64 token
     digest) — equality keys only, never output, so they shuffle as
-    digests (llm_ops band-key discipline); the raw-string-keyed
+    digests (lsh_candidate_pairs band-key discipline); the raw-string-keyed
     DuckDB oracle is the collision check. Bag/set sizes are doc-grain
     broadcast-able side frames.
     """
@@ -5062,7 +5114,7 @@ def bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats-barriered (r13, replacing the r12 merge hints): ta/tb are
     # corpus-sized exploded token-count frames the static planner would
     # broadcast on Generate-blind estimates (the ×100-smoke class — see
-    # extras9/llm_ops); static stays SMJ, AQE runtime conversion free.
+    # lsh_candidate_pairs); static stays SMJ, AQE runtime conversion free.
     tsrc = stats_barrier(tc)
     ta = tsrc.select(
         F.col("doc_id").alias("doc_a"), "tokd", F.col("c").alias("ca")
@@ -5376,7 +5428,7 @@ def fellegi_sunter_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats-barriered (r13, replacing the r12 merge hints): fa/fb carry
     # corpus-sized feature arrays the static planner would broadcast on
     # a Generate-blind estimate (the ×100-smoke class — see
-    # dedup_minhash_lsh/extras9); static stays SMJ, AQE runtime
+    # dedup_minhash_lsh); static stays SMJ, AQE runtime
     # conversion free again.
     fsrc = stats_barrier(feats)
     fa = fsrc.select(F.col("doc_id").alias("doc_a"), F.col("feats").alias("fa"))
@@ -6369,7 +6421,7 @@ def rocchio_prf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a bounded broadcast candidate list — no global ranking
     window ever touches the corpus grain. No all-pairs path — the
     same structural cap as the brute-force ANN baseline
-    (llm_ops._TOPK_MAX_QUERIES).
+    (_TOPK_MAX_QUERIES).
     """
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == _PRF_QUERY_ID).select(
@@ -6385,7 +6437,7 @@ def rocchio_prf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist(): `base` is consumed by THREE lazy branches (feedback
     # top-k, the re-rank scan, the rows-ahead count), so without it
     # the full corpus cosine computes three times per run — the
-    # engine's documented branch-re-execution convention (extras27's
+    # engine's documented branch-re-execution convention (source_minhash_overlap's
     # measured precedent). Materializing also makes the
     # cos0 == t_cos0 equality in the rows-ahead filter compare STORED
     # values instead of relying on bit-identical recomputation across
@@ -6681,7 +6733,7 @@ def dedup_saturation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("j")
     ).agg(F.count("*").cast("long").alias("dv"))
     n_docs = ranked.agg(F.max("rk").alias("max_rk"))
-    # Clamp-and-refilter spine guard (extras57.py heaps_law_exponent
+    # Clamp-and-refilter spine guard (heaps_law_exponent
     # has the full rationale): sequence(1, 0) defaults to step -1 and
     # yields phantom checkpoints [1, 0] when the corpus is smaller
     # than one step, while the oracle's generate_series is empty; the

@@ -1986,7 +1986,7 @@ def winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     # one percentile_disc buffer per group for BOTH cuts (array form —
     # scalar percentile_disc aggs each keep their own full value
-    # buffer; extras33 precedent)
+    # buffer; quantile_sample_error precedent)
     cuts = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.expr(
             "percentile_disc(array(0.05D, 0.95D)) WITHIN GROUP "
@@ -2380,7 +2380,7 @@ def _decile_cuts_one_buffer(labeled: DataFrame, col: str) -> DataFrame:
     full column independently (the engine's documented
     percentile-buffer trap, registry.range_bucket docstring). The
     ARRAY form of percentile_disc shares one buffer across all nine
-    fractions — the quality_filter_pipeline idiom (extras18) — with
+    fractions — the quality_filter_pipeline idiom — with
     native discrete-percentile semantics; measured 2.44 s → 0.59 s at
     sf0.1 for identical outputs (and ~2× faster than a hand-rolled
     array_sort∘collect_list + rank-pick spelling).
@@ -3838,7 +3838,7 @@ def _audit_one(
     equi-join — algebraically the exact join cardinality, at NDV-join
     cost instead of row-join cost. The three singleton aggregates
     combine via broadcast cross-joins (registry precedent: every
-    stats-vs-stats composition in extras20/extras22)."""
+    stats-vs-stats composition, e.g. runs_test_daily_revenue)."""
     gl = (
         read_table(spark, sf_dir, lt)
         .groupBy(F.col(lk).alias("k"))
@@ -4077,12 +4077,12 @@ _AUDIT_COLS: tuple[tuple[str, str, str], ...] = (
 
 def _h48(col: Column | str, tag: int) -> Column:
     """48-bit hash: first 12 hex chars of md5('{tag}:' || value) as a
-    BIGINT — the extras13 cross-engine digest spelling widened from 32
+    BIGINT — the epoch_shuffle_shards cross-engine digest spelling widened from 32
     to 48 bits so birthday collisions are negligible at any NDV this
     audit will see (collisions would only merge identically on both
     engines anyway — the sketch stays bit-identical). Accepts a column
-    name or any string-typed Column expression (extras33 hashes a
-    composite row key); the ONE Spark-side spelling of this digest —
+    name or any string-typed Column expression (quantile_sample_error hashes
+    a composite row key); the ONE Spark-side spelling of this digest —
     keep it in lockstep with ``_sql_h48``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(
@@ -4297,9 +4297,9 @@ def kmv_merge_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive path the merge REPLACES — present only to be audited
     against, like exact_ndv in ndv_kmv_sketch_error.
 
-    Determinism: same shared md5-hex digest spelling as extras31
-    (tag 1000 keeps the hash space independent); all comparisons on
-    exact BIGINTs; the boolean gate is engine-independent because
+    Determinism: same shared md5-hex digest spelling as
+    ndv_kmv_sketch_error (tag 1000 keeps the hash space independent);
+    all comparisons on exact BIGINTs; the boolean gate is engine-independent because
     both engines materialize identical sketches.
     """
     g = (
@@ -4940,6 +4940,34 @@ JOIN truth t
 """
 
 
+# Theta-sketch SET-OPERATION estimation:
+#
+# - ``ndv_intersection_sketch_error``: intersection-cardinality
+#   estimates between per-source SHINGLE vocabularies from their KMV
+#   bottom-k sketches, audited against exact truth — the THETA-SKETCH
+#   intersection rule (Dasgupta/Lang/Rhodes): with per-source sketches
+#   S_A, S_B and theta = min(kth-min_A, kth-min_B), the estimator is
+#   |{h ∈ S_A ∩ S_B : h < theta}| · U / theta over hash universe U.
+#   This completes the engine's mergeable-sketch algebra: ndv_kmv_sketch_error
+#   and kmv_merge_parity proved the KMV sketch and its UNION-merge (bottom-k of unions);
+#   intersection is the composition unions can't give you — the
+#   "shared vocabulary between feeds" question answered from 64 hashes
+#   per source instead of a vocabulary join, the same way a theta-
+#   sketch service answers audience-overlap queries at 100 TB.
+#
+# Registry conventions (plans/registry.py): the shared md5-hex 48-bit
+# digest (the ndv_kmv_sketch_error spelling, fresh tag 3000 so this hash
+# space is independent of that audit and of kmv_merge_parity); "exact" truth is exact at
+# digest grain — a 48-bit collision would merge identically on both
+# engines AND in the estimator's own universe, the ndv_kmv_sketch_error
+# convention. All counts exact BIGINTs; the estimate is one IEEE
+# division of exact integers (cnt·2^48 ≤ 2^54 — no overflow), ROUND 6.
+#
+# Scale: ONE pass to (source, token-digest) distinct grain (map-side
+# combinable), per-source bottom-k via window rank WITHIN source
+# partitions (the kmv_merge_parity spelling), then all pairwise work
+# runs on k·|sources| sketch rows — source-pair statistics never touch
+# the vocabulary again, let alone documents.
 @register(
     "ndv_intersection_sketch_error",
     oracle=_NDV_INTERSECT_ORACLE,
@@ -4952,7 +4980,7 @@ def ndv_intersection_sketch_error(
     unordered source pair's token vocabularies — one row per pair
     with the sketch evidence (common hashes below theta, theta), the
     estimate, the exact digest-grain intersection, and the signed
-    relative error. See the module docstring for the estimator and
+    relative error. See the notes above the function for the estimator and
     its place in the mergeable-sketch family.
 
     Determinism: both engines build IDENTICAL sketches (shared 48-bit
@@ -6037,8 +6065,8 @@ def oneway_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     string→double parse is correctly rounded in both engines; (2) the
     SSB/SSW terms are ~1e10–1e13 doubles where ROUND-6-then-decimal
     is meaningless, so the 5 group terms are summed by the ORDER-
-    PINNED FOLD (grp-sorted list, sequential fold — the extras18
-    pattern), giving a bit-identical addition chain. F and η² are
+    PINNED FOLD (grp-sorted list, sequential fold — the
+    mixture_temperature_weights pattern), giving a bit-identical addition chain. F and η² are
     pinned IEEE expressions over identical doubles, ROUND 6.
 
     Scale: one map-combined fact pass to the |priorities|=5 group
@@ -7378,7 +7406,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: the panel is customers with revenue in BOTH years
     (matched-model rule); all five moments are exact decimal sums —
     the three second-order moments exceed 2^53 unscaled units, so the
-    oracle VARCHAR-round-trips their casts (extras52 trap);
+    oracle VARCHAR-round-trips their casts (oneway_anova_f trap);
     covariance/variances/θ/ρ are pinned IEEE expressions, ROUND 6.
 
     Scale: one year-filtered fact pass to (customer, year) grain, a
@@ -7582,7 +7610,7 @@ def huber_location_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd: centroid matrices).
 
     Determinism: the scale c uses exact decimal moments (Σx² exceeds
-    2^53 unscaled → VARCHAR round-trip, extras52 trap); each
+    2^53 unscaled → VARCHAR round-trip, oneway_anova_f trap); each
     superstep's Σwx is ROUND-6 and Σw ROUND-12 decimal sums
     (order-free); w's |x−μ| = 0 case is NULLIF-guarded to weight 1
     on both engines via LEAST(1, c/NULL→NULL) → the term drops…
@@ -8058,7 +8086,7 @@ def mde_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     run BEFORE ``welch_ttest_promo``-style reads.
 
     Determinism: moments are exact decimal sums (second-order via the
-    VARCHAR round-trip, extras52 trap); the z constants are 6-dp
+    VARCHAR round-trip, oneway_anova_f trap); the z constants are 6-dp
     literals pinned on both sides; every MDE is a pinned expression
     ROUND 6 over a 3-row broadcast knob table.
 

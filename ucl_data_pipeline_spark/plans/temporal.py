@@ -543,7 +543,7 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     each fact row tests 3 bands with zero shuffle. The anti-pattern at
     scale is a non-equi join between two LARGE sides (a real cartesian);
     when both sides are big, bucketize the range into equi-join keys
-    first (as the LSH operators in llm_ops do).
+    first (as lsh_candidate_pairs does).
     """
 
     o = read_table(spark, sf_dir, "orders")
@@ -1389,7 +1389,7 @@ def cusum_over_daily(daily: DataFrame) -> DataFrame:
     (day, revenue, cusum). ONE implementation so the stream≡batch
     parity test pins the streaming twin against exactly the arithmetic
     the driver oracle-checks — same discipline as the shared LSH
-    candidate generator (llm_ops.lsh_candidate_pairs).
+    candidate generator (lsh_candidate_pairs).
     """
     mu = daily.agg(
         (F.sum("rev").cast("double") / F.count("*")).alias("mu")
@@ -2363,7 +2363,7 @@ _DAILY_CTE = """
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, rev) with rev an exact decimal daily sum — the shared
     fact-sized stage of every daily-series query in this module (same
-    spelling as extras5.cusum_drift_daily's input)."""
+    spelling as cusum_drift_daily's input)."""
     o = read_table(spark, sf_dir, "orders")
     return o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
@@ -3087,7 +3087,7 @@ def periodogram_fixed_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     residue sums per period, and each A/B is an order-pinned fold of
     ≤p transcendental products (bounded, engine-identical chain).
     SST comes from exact Σx/Σx² (the Σx² decimal exceeds 2^53
-    unscaled units → VARCHAR round-trip in the oracle, the extras52
+    unscaled units → VARCHAR round-trip in the oracle, the oneway_anova_f
     trap). Outputs are O(1)-magnitude fractions ROUND 6 — the cos/sin
     last-ulp engine divergence is ~1e-15 relative, far inside the
     rounding guard.
@@ -3327,7 +3327,7 @@ def burstiness_interevent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: gaps are exact BIGINT microseconds (epoch_us; LAG
     over the (ts, event_id) total order); Σd is an exact integer sum
     cast to double; Σd² runs in DECIMAL(38,0) — unscaled units exceed
-    2^53, so the oracle VARCHAR-round-trips the cast (extras52 trap);
+    2^53, so the oracle VARCHAR-round-trips the cast (oneway_anova_f trap);
     σ/μ/CV/B are pinned IEEE expressions over identical doubles,
     ROUND 6.
 
@@ -3451,7 +3451,7 @@ def hurst_rs_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: per-block running sums stay exact DECIMAL (Z = exact
     cum − j·mean is identical IEEE); Σx² per block exceeds 2^53
     unscaled units → the oracle VARCHAR-round-trips the cast
-    (extras52 trap); each block's R/S is ROUND-6 then decimal-summed
+    (oneway_anova_f trap); each block's R/S is ROUND-6 then decimal-summed
     into the per-m average; the 4-point OLS moments are ROUND-6
     decimal sums; H is one pinned expression ROUND 6. Degenerate
     zero-variance blocks are NULLIF-dropped on both sides.
@@ -3654,7 +3654,7 @@ def markov_absorption_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     that row as one ``fold_steps`` column — no per-step join, shuffle,
     checkpoint or Spark job, nothing persisted. Oracle unrolls
     identical CTEs (MATERIALIZED matrix — single-reference-per-step
-    discipline, extras53).
+    discipline, hits_hub_authority).
     """
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3859,7 +3859,7 @@ def grubbs_extreme_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     the critical value is a lookup, not data).
 
     Determinism: day sums are exact decimals; the moments use the
-    VARCHAR round-trip for Σx² (extras52 trap); G is a pinned IEEE
+    VARCHAR round-trip for Σx² (oneway_anova_f trap); G is a pinned IEEE
     expression; the argmax day uses the (G DESC, day) total order;
     ROUND 6.
 
@@ -3967,7 +3967,7 @@ def esd_outlier_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps are the unmasked follow-ups an incident review walks.
 
     Determinism: each step's moments are exact decimal sums (Σx² via
-    the VARCHAR round-trip, extras52 trap); R is a pinned expression;
+    the VARCHAR round-trip, oneway_anova_f trap); R is a pinned expression;
     each argmax uses the (R DESC, day) total order; the elimination
     chain is MATERIALIZED per step in the oracle (single-reference
     discipline) and localCheckpointed on the Spark side (day-grain
@@ -4201,7 +4201,7 @@ def acf_table_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: lagged pairs come from an exact day-index equi-join;
     per-lag moments are exact decimal sums of the 2-dp day revenues
     (second-order moments exceed 2^53 unscaled → VARCHAR round-trip,
-    extras52 trap); r and the band are pinned expressions ROUND 6
+    oneway_anova_f trap); r and the band are pinned expressions ROUND 6
     with the literal z = 1.959964.
 
     Scale: one fact pass to the calendar-bounded day grain; the

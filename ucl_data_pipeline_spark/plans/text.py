@@ -2153,8 +2153,7 @@ def mixture_temperature_weights(
     proportional sampling. The normalizer Σ√n_s is a sum of ARBITRARY
     doubles, where the engine's decimal-cast trick is unsafe — instead
     the per-source terms are collected into a source-SORTED list and
-    folded sequentially on both engines (order-pinned fold, see module
-    docstring): the identical addition chain is bit-identical. S is
+    folded sequentially on both engines (order-pinned fold): the identical addition chain is bit-identical. S is
     source-cardinality-sized, so the fold is a driver-free scalar
     regardless of corpus size.
     """
@@ -2725,7 +2724,7 @@ _CUR_Q_THRESH = 0.48   # ≈ corpus p25 — drops the worst quality quartile
 
 _CUR_PACK_B = 512      # pack budget for kept docs
 
-# Quality formula: EXACTLY text_quality_score's (llm_ops.py) spelling.
+# Quality formula: EXACTLY text_quality_score's spelling.
 _CUR_QSCORE_SQL = """
     0.4 * least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)
     + 0.3 * ttr
@@ -3276,7 +3275,7 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TakeOrderedAndProject (per-partition heaps + driver merge), then
     # the ranking window runs over the bounded k rows only — never a
     # single-partition sort of the full matched-doc set (the
-    # query_likelihood_dirichlet spelling, extras47.py).
+    # query_likelihood_dirichlet spelling).
     ranked = agg.orderBy(F.col("bm25_score").desc(), F.col("doc_id")).limit(
         _BM25_TOPN
     )
@@ -3332,7 +3331,7 @@ def doc_lm_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, not raw token instances. The grain table is
     persisted because two branches (scoring side, vocab side) consume
     it: without the persist Spark re-runs the corpus explode for the
-    vocab branch (extras27 precedent — persist pins the second read
+    vocab branch (source_minhash_overlap precedent — persist pins the second read
     at grain size; at 100 TB the grain spills columnar, still far
     under re-reading raw text). At web scale the vocab join is a
     plain shuffle join on the token; swapping the string key for the
@@ -3426,7 +3425,7 @@ FROM rates r JOIN mx m USING (threshold)
 )
 def quality_gate_disparity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four-fifths-rule disparate-impact audit of the quality gate by
-    language, at the REGISTERED curation threshold (extras21's
+    language, at the REGISTERED curation threshold (curation_pipeline's
     _CUR_Q_THRESH=0.48, IMPORTED so the audit can never drift from
     the gate it audits) and at a stricter candidate 0.6: per (threshold,
     lang) — docs, passes, pass rate, impact ratio vs the
@@ -3968,7 +3967,7 @@ _KN_D = 0.75
 
 # Bigram extraction as a SQL fragment (grain columns prepended by the
 # caller): s.v / s.w from the per-doc adjacent-pair list. Shared with
-# extras45's doc-grain perplexity gate.
+# perplexity_outlier_gate, the doc-grain gate.
 _KN_PAIR_SQL = (
     "unnest(CASE WHEN len(t) >= 2 THEN"
     " list_transform(generate_series(1, len(t) - 1),"
@@ -3977,8 +3976,8 @@ _KN_PAIR_SQL = (
 )
 
 # The KN model CTE chain given an existing cvw(v, w, c_vw) CTE —
-# shared verbatim by this module's per-source LM and extras45's
-# per-doc perplexity gate so the probability spelling can never fork.
+# shared verbatim by kneser_ney_bigram_lm (per source) and
+# perplexity_outlier_gate (per doc) so the probability spelling can never fork.
 _KN_MODEL_FROM_CVW_CTES = f"""ctx AS (
   SELECT v, CAST(SUM(c_vw) AS BIGINT) AS c_v,
          CAST(COUNT(*) AS BIGINT) AS n1p_v
@@ -4028,7 +4027,7 @@ FROM ev
 def kn_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, v, w) — one row per within-doc adjacent token
     pair. The let-bound pair extraction shared by the per-source LM
-    here and extras45's per-doc perplexity gate (SQL twin:
+    here and perplexity_outlier_gate's per-doc gate (SQL twin:
     ``_KN_PAIR_SQL``)."""
     d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", TX.tokens("text").alias("t")
@@ -4309,7 +4308,7 @@ def component_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-split documents / components / tokens, plus the re-run leak
     count over the full duplicate-pair set — structurally ZERO
     (both endpoints of every pair share a component, hence a split),
-    the closing half of the audit→fix pair with extras44's
+    the closing half of the audit→fix pair with
     ``split_leakage_audit`` (which measures the doc-keyed split's
     actual leakage on the same pair set).
 
@@ -4338,7 +4337,7 @@ def component_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a second LSH verify pass. localCheckpoint the sparse pair half
     # so the caller-owned edges cache can be released NOW (comp is
     # already checkpointed): without the unpersist the entry leaked
-    # for the whole session (cc_superstep_convergence, extras34,
+    # for the whole session (cc_superstep_convergence
     # releases the same frame — round-8 advisor finding).
     all_pairs = (
         edges.filter(F.col("src") < F.col("dst"))
@@ -5512,7 +5511,7 @@ _TR_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 def _tr_iter(prev: str, cur: str) -> str:
     """One damped PageRank superstep over the co-occurrence graph
     (single reference to ``prev`` — the CTE-inlining discipline from
-    extras53's HITS oracle)."""
+    hits_hub_authority's oracle)."""
     return f"""{cur} AS (
   SELECT n.tok,
     ROUND((1 - {_TR_DAMP}) / (SELECT COUNT(*) FROM nodes)
@@ -5584,7 +5583,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-{n} uses the (rank DESC, token) total order, ROUND 6 output.
 
     Scale: the bigram pass is the posexplode+lead codegen pattern
-    (llm_ops._doc_feats — no higher-order-lambda re-evaluation);
+    (_doc_feats — no higher-order-lambda re-evaluation);
     edges/out-weights build once (persisted); each superstep is one
     rank⋈edges join + dst-keyed hash-agg. Rank frames are VOCAB-sized
     — joined, not broadcast (a real corpus vocabulary outgrows the
@@ -5744,7 +5743,7 @@ def heaps_law_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shingling pass (posexplode+lead codegen shape) to the
     type-grain MIN agg — the same shuffle every dedup query pays (at
-    100 TB the type key is the xxhash64 digest, llm_ops.py:252). The
+    100 TB the type key is the xxhash64 digest, as in lsh_candidate_pairs). The
     ingestion rank is the range-bucketed exact row_number
     (registry.bucketed_row_number — per-bucket sorts + bounded
     offsets, no single-partition window), and the saturation curve is
@@ -6043,7 +6042,7 @@ def vsm_tfidf_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenization pass to (doc, term) grain — the SAME
     hash-agg BM25 pays — plus a doc-grain norm agg; the query side is
     |terms| rows broadcast. TakeOrdered top-{k}. (At 100 TB the term
-    key is the xxhash64 digest, llm_ops.py:252.)
+    key is the xxhash64 digest, as in lsh_candidate_pairs.)
     """
     d = read_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(TX.tokens("text")).alias("t"))
@@ -6101,8 +6100,8 @@ def vsm_tfidf_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # Distributed top-k (query_likelihood_dirichlet spelling,
-    # extras47.py): orderBy().limit() is TakeOrderedAndProject, so the
+    # Distributed top-k (query_likelihood_dirichlet
+    # spelling): orderBy().limit() is TakeOrderedAndProject, so the
     # ranking window only ever sees the bounded k rows — no
     # single-partition sort of the full matched-doc set.
     ranked = scored.orderBy(F.desc("vsm_score"), "doc_id").limit(_VSM_TOPN)

@@ -2348,8 +2348,8 @@ def lateral_topn_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Advisor-prescribed salted join execution
 # ---------------------------------------------------------------------------
 
-# Demo-scaled rows-per-task target (the production advisor uses 100k,
-# extras29): at test SFs the o_custkey max frequency is tens of rows,
+# Demo-scaled rows-per-task target (the production advisor,
+# join_skew_advisor, uses 100k): at test SFs the o_custkey max frequency is tens of rows,
 # so a 100k target would prescribe fan-out 1 and exercise nothing; 8
 # rows/task makes the prescription a real >1 fan-out at sf0.01+ while
 # keeping the formula identical.
@@ -2379,7 +2379,7 @@ GROUP BY c.c_custkey, c.c_name, adv.salt_buckets
 )
 def join_skew_salted_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Advisor → execution round trip for skew salting: derive the
-    salt fan-out the way ``join_skew_advisor`` (extras29) prescribes
+    salt fan-out the way ``join_skew_advisor`` prescribes
     it — ceil(max key frequency / rows-per-task target), in exact
     integer arithmetic — then EXECUTE the salted sort-merge join with
     that fan-out and return the per-customer aggregate, which must
@@ -2388,7 +2388,7 @@ def join_skew_salted_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     records both that the prescription was followed and that it
     preserved the result.
 
-    Unlike ``salted_skew_join`` (extras.py — fixed fan-out 8), the
+    Unlike ``salted_skew_join`` (fixed fan-out 8), the
     fan-out here is DATA-DERIVED inside the same Catalyst DAG: the
     one-row advisor aggregate broadcasts onto both sides; the fact
     side salts with pmod(xxhash64(row key), salt_buckets); the

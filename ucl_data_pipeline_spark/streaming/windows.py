@@ -11,7 +11,7 @@ genuine streaming operators the engine exposes:
 
 Each transformation is written against an unbounded DataFrame and works
 identically on a bounded one — tests assert the AvailableNow streaming
-result equals the registered batch queries (plans.events_windows),
+result equals the registered batch queries (plans.temporal),
 which the driver oracle-checks against DuckDB. At scale these run
 against a file/Kafka source with checkpointing; state stores are keyed
 by (window/session, key) so state size is bounded by the watermark
@@ -134,7 +134,7 @@ def ohlc_stream(
     value (earliest row by the total order (ts, event_id) via min_by on
     the ordering struct), high, low, close, count and exact-decimal sum
     — the streaming twin of the batch ohlc_resample_hourly query
-    (plans/extras5.py), which picks open/close via ROW_NUMBER over the
+    (plans/temporal.py), which picks open/close via ROW_NUMBER over the
     same total order; min_by/max_by on the (ts, event_id) struct select
     the identical rows, so stream ≡ batch holds row-for-row.
 
@@ -188,7 +188,7 @@ def interval_join_stream(
 ) -> DataFrame:
     """Stream-stream interval join: each click joined to the views it
     followed within ``max_lag`` for the same user — the streaming twin
-    of the batch query plans.events_windows.view_click_interval_join
+    of the batch query plans.temporal.view_click_interval_join
     (identical join condition and output columns).
 
     Both inputs carry watermarks and the join condition bounds the
@@ -317,7 +317,7 @@ def session_length_stream(
 ) -> DataFrame:
     """Per-user sessions via ``session_window`` — the streaming twin of
     the batch ``session_length_histogram``'s gaps-and-islands
-    sessionization stage (plans/extras11.py).
+    sessionization stage (plans/temporal.py).
 
     Semantics alignment: the batch query starts a NEW session when the
     gap to the previous event is STRICTLY greater than ``gap_minutes``
@@ -376,7 +376,7 @@ _HIGH_WATER_STATE_SCHEMA = T.StructType([
 
 def late_events_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch ``out_of_order_stats`` lateness
-    audit (plans/extras12.py): per-user event-time high-water mark kept
+    audit (plans/temporal.py): per-user event-time high-water mark kept
     in the state store; every event whose timestamp falls behind its
     user's high water is late by (hw − ts) seconds — exactly the
     statistic that sizes a watermark.
@@ -488,7 +488,7 @@ def rollup_cusum(daily: DataFrame) -> DataFrame:
     """CUSUM over the closed (day, rev) rows emitted by
     ``daily_revenue_stream`` — delegates to the SAME day-grain math
     the driver-oracle-checked batch query uses
-    (plans/extras5.cusum_over_daily), so stream ≡ batch by
+    (plans/temporal.cusum_over_daily), so stream ≡ batch by
     construction once the day grain matches. In production this is the
     foreachBatch / downstream-batch step over the day-grain sink: the
     global mean μ makes the statistic non-incremental by definition,
@@ -502,7 +502,7 @@ def rollup_page_hinkley(daily: DataFrame) -> DataFrame:
     """Page-Hinkley drift statistic over the closed (day, rev) rows
     emitted by ``daily_revenue_stream`` — delegates to the SAME
     day-grain math the driver-oracle-checked batch query uses
-    (plans/extras22.page_hinkley_over_daily), so stream ≡ batch by
+    (plans/temporal.page_hinkley_over_daily), so stream ≡ batch by
     construction. Unlike CUSUM's global mean, PH only needs prefix
     state (running count/sum/min), which is why it is THE classic
     streaming drift detector — the rollup still runs over the
@@ -516,7 +516,7 @@ def rollup_changepoint(daily: DataFrame) -> DataFrame:
     """Best single split over the closed (day, rev) rows emitted by
     ``daily_revenue_stream`` — delegates to the SAME day-grain
     prefix-sum SSE scoring as the batch query
-    (plans/extras20.changepoint_over_daily). Day-grain input, so the
+    (plans/stats.changepoint_over_daily). Day-grain input, so the
     quadratic-free scoring runs on ≈2.4k rows regardless of SF."""
     from ucl_data_pipeline_spark.plans.stats import changepoint_over_daily
 
@@ -545,7 +545,7 @@ def curation_gate_stream(
     docs: DataFrame, bench_gram_digests: DataFrame
 ) -> DataFrame:
     """Streaming twin of the STATELESS prefix of ``curation_pipeline``
-    (plans/extras21.py): per incoming document, the benchmark flag,
+    (plans/text.py): per incoming document, the benchmark flag,
     the contamination gate against a STATIC benchmark-5-gram digest
     set, and the quality gate — emitted as
     gate ∈ {benchmark, contaminated, low_quality, candidate}.
