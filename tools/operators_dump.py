@@ -12,7 +12,8 @@ import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ucl_data_pipeline_spark.plans import REGISTRY
 
@@ -61,7 +62,7 @@ def main() -> None:
     by_module: dict[str, list] = defaultdict(list)
     for name, q in REGISTRY.items():
         src = inspect.getsourcefile(q.fn) or "?"
-        src = os.path.relpath(src, "/root/repo")
+        src = os.path.relpath(src, ROOT)
         line = inspect.getsourcelines(q.fn)[1]
         doc = (q.doc or "").strip().splitlines()
         head = doc[0].rstrip() if doc else ""
@@ -95,7 +96,7 @@ def main() -> None:
                 f"| `{name}` | {line} | {o} | {', '.join(tags)} | {head} |"
             )
         out.append("")
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "OPERATORS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote OPERATORS.md ({len(REGISTRY)} queries)")
 

@@ -36,7 +36,7 @@ from ucl_data_pipeline_spark.sources.io import fan_out, read_table, stats_barrie
 
 
 # ---------------------------------------------------------------------------
-# Dedup / sort / limit / top-k (A1, O1-O3)
+# Distinct-by-key, first wins (A1)
 # ---------------------------------------------------------------------------
 
 _DEDUP_FIRST_ORACLE = """

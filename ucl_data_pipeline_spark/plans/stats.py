@@ -70,7 +70,10 @@ FROM m
 
 
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document quality signals and their [0,1] ``quality_score``."""
+    """Per-document quality signals and their [0,1] ``quality_score``:
+    the frame ``text_quality_score`` registers. It lives here, below
+    similarity and text, because stats and similarity queries join it
+    and ``text`` already imports ``similarity``."""
     d = read_table(spark, sf_dir, "documents")
     toks = TX.tokens("text")
     n_tokens = F.size(toks)

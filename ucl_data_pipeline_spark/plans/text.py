@@ -13,7 +13,6 @@ BIGINT/DOUBLE/VARCHAR oracle casts.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.functions import text as TX
@@ -691,8 +690,8 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = cnt.agg(F.sum("n").alias("total"))
     w = (
-        W.orderBy(F.col("n").desc(), "tok")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        Window.orderBy(F.col("n").desc(), "tok")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         cnt.join(F.broadcast(tot))
